@@ -16,9 +16,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * folds. Here: one loop computes all H running minima (sig_i = min over
   * h of (h·(2i+1) + 97i+13) mod 2³²), then folds each band key
   * (acc·131 + slot) mod 2³² seeded b·1315423911 mod 2³² — the identical
-  * integer arithmetic, so values match exactly. Empty input (never
-  * produced by the caller, which filters sz > 0) yields all-null band
-  * keys, matching the null-propagating HOF fold.
+  * integer arithmetic, so values match exactly (KernelParitySpec pins it
+  * for non-null arrays of hashes in [0, 2³²)). Null elements are skipped,
+  * as `array_min` skips them; empty or all-null input (never produced by
+  * the caller, which filters sz > 0) yields all-null band keys, matching
+  * the null-propagating HOF fold.
   */
 case class MinhashBandKeys(child: Expression, numHashes: Int, bands: Int)
     extends UnaryExpression {
@@ -50,21 +52,25 @@ object MinhashBandKeys {
   def keys(sh: ArrayData, numHashes: Int, bands: Int): GenericArrayData = {
     val rows = numHashes / bands
     val n = sh.numElements()
-    if (n == 0) // empty set: sig mins are null -> every band key is null
-      return new GenericArrayData(Array.fill[Any](bands)(null))
     val sig = new Array[Long](numHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)
+    var seen = false
     var e = 0
     while (e < n) {
-      val h = sh.getLong(e)
-      var i = 0
-      while (i < numHashes) {
-        val v = (h * (2L * i + 1) + 97L * i + 13) & M
-        if (v < sig(i)) sig(i) = v
-        i += 1
+      if (!sh.isNullAt(e)) {
+        val h = sh.getLong(e)
+        var i = 0
+        while (i < numHashes) {
+          val v = (h * (2L * i + 1) + 97L * i + 13) & M
+          if (v < sig(i)) sig(i) = v
+          i += 1
+        }
+        seen = true
       }
       e += 1
     }
+    if (!seen) // no element: sig mins are null -> every band key is null
+      return new GenericArrayData(Array.fill[Any](bands)(null))
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {

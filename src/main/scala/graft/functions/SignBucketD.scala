@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * scaled to [-0.5, 0.5) — the identical closed form of
   * [[graft.ann.Ann.planeComponent]], and the accumulation is the same
   * per-index left fold as the declarative `zip_with`+`aggregate`, so
-  * bucket values match bit-for-bit (AnnParitySpec pins it). The HOF twin
-  * allocated `planes` zipped index arrays per ROW and re-derived each LCG
-  * component through interpreted lambdas. A null element nulls the HOF
+  * bucket values match bit-for-bit (KernelParitySpec pins it for
+  * non-null arrays). The HOF twin allocated `planes` zipped index arrays
+  * per ROW and re-derived each LCG component through interpreted lambdas. A null element nulls the HOF
   * fold, whose `when(d > 0, …).otherwise(0)` then contributes 0 — the
   * kernel mirrors that (any-null → bucket 0, as does empty input).
   */

@@ -51,15 +51,15 @@ object Flagship {
     *
     * `conv_id` is deliberately NOT re-encoded to a long, although that
     * would shave another 16 bytes and make the sort key prefix-comparable:
-    * the interleaved `ABBench` A/B (4 paired rounds, 26M turns, local[8],
+    * an interleaved in-JVM A/B (4 paired rounds, 26M turns, local[8],
     * tmpfs shuffle) measured conv-encoding at −25% throughput — the decode
     * must re-materialize 26M strings (cast + lpad + concat allocations)
     * that the unencoded plan simply carries by pointer, and on a
     * single-box tmpfs shuffle the 16-byte/row saving is a memcpy rounding
-    * error. dictOnly beat conv+dict AND unencoded in every paired round
-    * (steady medians 1019k vs 777k vs 995k turns/s). On a real cluster
-    * with network shuffle + compression the byte saving argues the other
-    * way — re-measure with ABBench there before flipping `encodeConv`.
+    * error. Dictionary-only beat conv+dict AND unencoded in every paired
+    * round (steady medians 1019k vs 777k vs 995k turns/s). On a real
+    * cluster with network shuffle + compression the byte saving may argue
+    * the other way.
     *
     * Output is value-identical to the unencoded plan (TemporalSpec
     * round-trip). Assumes the Transcripts contract: role/tool drawn from
@@ -67,73 +67,49 @@ object Flagship {
     * at decode under ANSI).
     */
   def pipeline(t: DataFrame, snaps: DataFrame): DataFrame =
-    pipelineImpl(t, snaps, encodeConv = false, encodeDict = true)
+    pipelineImpl(t, snaps, encodeDict = true)
 
-  /** Parametrized composition — the encoding levers are separable so the
-    * A/B harness can attribute cost/benefit per lever.
-    */
-  private[run] def pipelineImpl(
-      t: DataFrame, snaps: DataFrame,
-      encodeConv: Boolean, encodeDict: Boolean): DataFrame = {
+  /** The composition, with or without the role/tool dictionary encoding. */
+  private def pipelineImpl(
+      t: DataFrame, snaps: DataFrame, encodeDict: Boolean): DataFrame = {
     val rolesArr = array(Transcripts.roles.map(lit): _*)
     val toolsArr = array(Transcripts.tools.map(lit): _*)
     val toolRole = Transcripts.roles.indexOf("tool") + 1
-    val convKey = if (encodeConv) "__conv" else "conv_id"
     val roleCol = if (encodeDict) "__role" else "role"
     val toolCol = if (encodeDict) "__tool" else "tool"
-
-    def encConv(df: DataFrame): DataFrame =
-      if (encodeConv)
-        df.withColumn("__conv", substring(col("conv_id"), 2, 19).cast("long"))
-          .drop("conv_id")
-      else df
     val narrow0 = t.withColumn("text_len", length(col("text")).cast("double"))
       .drop("text")
-    val narrow1 =
+    val narrow =
       if (encodeDict)
         narrow0
           .withColumn("__role", array_position(rolesArr, col("role")).cast("byte"))
           .withColumn("__tool", array_position(toolsArr, col("tool")).cast("byte"))
           .drop("role", "tool")
       else narrow0
-    val narrow = encConv(narrow1)
-    val snapsN = encConv(snaps)
 
     // keepOrder + leftTie=turn_idx: every window below orders by the as-of
     // join's own sort keys, so the whole pipeline runs on ONE sort
     val joined = AsOf.asofJoin(
-      narrow, snapsN,
-      key = convKey, leftTs = "ts", rightTs = "snapshot_ts",
+      narrow, snaps,
+      key = "conv_id", leftTs = "ts", rightTs = "snapshot_ts",
       tiebreak = "snap_turn_idx", payload = Seq("f_vec"),
       leftTie = Some("turn_idx"), keepOrder = true)
     val ord = AsOf.orderCols
-    val sessioned = Sessionize.byGap(joined, convKey, "ts", ord, 1800L)
-    val filled = Backfill.lastNonNull(sessioned, convKey, ord, Seq(toolCol))
+    val sessioned = Sessionize.byGap(joined, "conv_id", "ts", ord, 1800L)
+    val filled = Backfill.lastNonNull(sessioned, "conv_id", ord, Seq(toolCol))
     val rollPred =
       if (encodeDict) col("__role") === lit(toolRole) else col("role") === "tool"
     val packed = Descriptors.pack(
-      filled, convKey, ord,
+      filled, "conv_id", ord,
       col("text_len"), lags = Seq(1, 2),
       rollingRows = 10, rollingPred = rollPred)
-
-    val withConv =
-      if (encodeConv)
-        // NOT format_string: FormatString routes through java.util.Formatter
-        // per row (format parsing + allocations); lpad/concat is a plain
-        // byte copy. (%010d pads to AT LEAST 10 while lpad truncates — the
-        // conditional keeps >10^10 ids exact.)
-        packed.withColumn("conv_id", {
-          val s = col("__conv").cast("string")
-          concat(lit("c"), when(length(s) < 10, lpad(s, 10, "0")).otherwise(s))
-        }).drop("__conv")
-      else packed
     val decoded =
       if (encodeDict)
         // the isNotNull guards are load-bearing: Spark 4.1.2's element_at
         // treats a NULL index as -1 (returns the LAST element, not null)
         // once the column has been through the shuffle — caught by
         // TemporalSpec's round-trip test (null tool decoded as "browse")
-        withConv
+        packed
           .withColumn("role", when(col("__role").isNotNull,
             element_at(rolesArr, col("__role").cast("int"))))
           .withColumn("tool", when(col("__tool").isNotNull,
@@ -141,7 +117,7 @@ object Flagship {
           .withColumn("tool_filled", when(col("__tool_filled").isNotNull,
             element_at(toolsArr, col("__tool_filled").cast("int"))))
           .drop("__role", "__tool", "__tool_filled")
-      else withConv
+      else packed
     val extra = // pipelineCompute's CPU-evidence column, when present
       if (decoded.columns.contains("text_sig")) Seq(col("text_sig")) else Nil
     decoded
@@ -153,11 +129,10 @@ object Flagship {
   }
 
   /** The same composition WITHOUT any encoding (string keys ride the
-    * shuffle). The value-parity reference for the round-trip spec and the
-    * A/B side of `ABBench`.
+    * shuffle). The value-parity reference for the round-trip spec.
     */
   def pipelineUnencoded(t: DataFrame, snaps: DataFrame): DataFrame =
-    pipelineImpl(t, snaps, encodeConv = false, encodeDict = false)
+    pipelineImpl(t, snaps, encodeDict = false)
 
   /** COMPUTE-HEAVY variant for the 8→32 scaling adjudication (round-5
     * verdict task #6b): identical pipeline shape and shuffle bytes plus
@@ -173,7 +148,7 @@ object Flagship {
     val sig = graft.text.TextHash.simhashParts(col("text"), 8)
     val heavy = t.withColumn("text_sig",
       aggregate(sig, lit(0L), (a, x) => pmod(a * 131L + x, lit(1L << 32))))
-    pipelineImpl(heavy, snaps, encodeConv = false, encodeDict = true)
+    pipelineImpl(heavy, snaps, encodeDict = true)
   }
 
   /** Run the full job including the Iceberg-lite write; returns (rows,

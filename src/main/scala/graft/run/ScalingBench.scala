@@ -11,23 +11,16 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
 
-  /** Bench session: like GraftSession.local plus single-box-only knobs —
+  /** Bench session: like GraftSession.local plus a single-box-only knob —
     * shuffle compression off (pure CPU overhead when shuffle files live on
-    * tmpfs; on a real cluster the network makes compression a win and it
-    * stays on) and local dirs on tmpfs when available (removes the shared
-    * virtio disk from the measurement; a real 4N-executor cluster brings 4N
-    * disks, which is the scaling the rule targets).
+    * tmpfs, where GraftSession.builder puts them; on a real cluster the
+    * network makes compression a win and it stays on).
     */
   private def session(cpus: Int): SparkSession = {
-    val b = graft.core.GraftSession.builder(s"local[$cpus]", 4 * cpus)
+    val s = graft.core.GraftSession.builder(s"local[$cpus]", 4 * cpus)
       .config("spark.shuffle.compress", "false")
       .config("spark.shuffle.spill.compress", "false")
-    val tmpfs = new java.io.File("/dev/shm")
-    val withDirs =
-      if (tmpfs.isDirectory && tmpfs.canWrite)
-        b.config("spark.local.dir", "/dev/shm/spark-local")
-      else b
-    val s = withDirs.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

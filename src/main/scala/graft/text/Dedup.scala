@@ -442,22 +442,11 @@ object Dedup {
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int = 3,
       threshold: Double = 0.7
-  ): DataFrame =
-    dedupDocsFromPrepped(df.select(col(idCol)),
-      prepDocs(df, idCol, textCol, blockKey, shingleN), idCol, threshold)
-
-  /** [[dedupDocs]] over an existing prep frame — lets composite operators
-    * ([[dedupIncremental]]) reuse one scan for every pass.
-    */
-  private[text] def dedupDocsFromPrepped(
-      ids: DataFrame,
-      prepped: DataFrame,
-      idCol: String,
-      threshold: Double,
-      prefix: Option[DataFrame] = None
-  ): DataFrame =
-    ids.join(dupIdsFromPrepped(prepped, threshold, prefix)
+  ): DataFrame = {
+    val prepped = prepDocs(df, idCol, textCol, blockKey, shingleN)
+    df.select(col(idCol)).join(dupIdsFromPrepped(prepped, threshold, None)
       .select(col("id").as(idCol)), Seq(idCol), "left_anti")
+  }
 
   /** The ids a batch-internal dedup REMOVES (cluster members that are not
     * their cluster's min-id keeper) — factored out so composite operators
@@ -712,9 +701,6 @@ object Dedup {
     * optimalNumOfBits(n, fpp) rule `BloomFilter.create(n, fpp)` applies,
     * so the serialized bytes are identical to the stat path's.
     */
-  private[text] def bloomAggColAccess(key: org.apache.spark.sql.Column,
-      n: Long, fpp: Double): org.apache.spark.sql.Column = bloomAggCol(key, n, fpp)
-
   private def bloomAggCol(key: org.apache.spark.sql.Column, n: Long,
       fpp: Double): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftBridge
@@ -1014,7 +1000,7 @@ object Dedup {
     * self passes (the round-4 shape recomputed it once per PPJoin call,
     * the measured residual of q62/q84).
     */
-  private[text] def shingleFreq(sides: Seq[DataFrame]): DataFrame =
+  private def shingleFreq(sides: Seq[DataFrame]): DataFrame =
     sides.map(longForm).reduce(_ unionByName _)
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
 
@@ -1039,7 +1025,7 @@ object Dedup {
     * cached frames. `a`/payload pairs: (prefix frame, prep frame); self
     * mode when `b` is None.
     */
-  private[text] def ppjoinFromPrefixed(
+  private def ppjoinFromPrefixed(
       aPrefix: DataFrame,
       a: DataFrame,
       b: Option[(DataFrame, DataFrame)],

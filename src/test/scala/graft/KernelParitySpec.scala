@@ -1,0 +1,70 @@
+package graft
+
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+/** Property-based parity of native kernels against their declarative
+  * twins over generated arrays the bench never makes: empty arrays, null
+  * elements, and kernel parameters outside the bench's. Draws come from a
+  * fixed seed, so a failure reproduces; each kernel is checked in one
+  * Spark job over all draws.
+  */
+class KernelParitySpec extends GraftSuite {
+  import spark.implicits._
+
+  private def draws[T](g: Gen[T], n: Int): Seq[T] =
+    Iterator.iterate(Seed(20261017L))(_.next).take(n)
+      .map(s => g.pureApply(Gen.Parameters.default, s)).toSeq
+
+  private def arrays[T](elem: Gen[T], maxLen: Int): Gen[Seq[Option[T]]] =
+    Gen.choose(0, maxLen).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(1 -> Gen.const(None), 6 -> elem.map(Option(_)))))
+
+  test("MinhashBandKeys == bandKeys(minhashSig(sh)) over generated arrays") {
+    import graft.functions.MinhashBandKeys
+    import graft.text.TextHash
+    // shingle hashes live in [0, 2^32): the twin's pmod stays ANSI-safe
+    val hash = Gen.frequency(
+      6 -> Gen.choose(0L, TextHash.M - 1),
+      1 -> Gen.oneOf(0L, 1L, TextHash.M - 1))
+    val rows = draws(arrays(hash, 24), 300) ++
+      Seq(Seq.empty, Seq(None), Seq(None, None), Seq(Some(7L), None))
+    val df = rows.map(Tuple1(_)).toDF("sh")
+    // (numHashes, bands): the bench runs only (8, 4)
+    val params = Seq((1, 1), (3, 3), (6, 2), (10, 5), (16, 1), (24, 8))
+    val got = df.select(params.flatMap { case (h, b) => Seq(
+      MinhashBandKeys(col("sh"), h, b),
+      TextHash.bandKeys(TextHash.minhashSig(col("sh"), h), b, h / b))
+    }: _*).collect()
+    for ((r, i) <- got.zipWithIndex; ((h, b), p) <- params.zipWithIndex) {
+      val (nat, dec) = (r.getSeq[Any](2 * p), r.getSeq[Any](2 * p + 1))
+      assert(nat === dec, s"numHashes=$h bands=$b sh=${rows(i)}")
+    }
+    // null elements are skipped, not read as hash 0
+    val skip = Seq(Seq(Some(5L), None)).toDF("sh").select(
+      MinhashBandKeys(col("sh"), 4, 2), MinhashBandKeys(array(lit(5L)), 4, 2))
+      .head()
+    assert(skip.getSeq[Long](0) === skip.getSeq[Long](1))
+  }
+
+  test("SignBucketD == zip_with/aggregate sign fold over generated vectors") {
+    import graft.ann.Ann
+    val x = Gen.frequency(
+      8 -> Gen.choose(-1e3, 1e3),
+      1 -> Gen.oneOf(0.0, -0.0, 1e-300, -1e-300, 1e300))
+    val rows = draws(arrays(x, 40), 300) ++
+      Seq(Seq.empty, Seq(None), Seq(Some(1.0), None))
+    val df = rows.map(Tuple1(_)).toDF("v")
+    // the bench runs only 4 and 6 planes
+    val planes = Seq(1, 2, 13, 31, 62)
+    val got = df.select(planes.flatMap(p => Seq(
+      graft.functions.SignBucketD(col("v"), p),
+      Ann.signBucketDeclarative(col("v"), p))): _*).collect()
+    for ((r, i) <- got.zipWithIndex; (p, j) <- planes.zipWithIndex)
+      assert(r.getLong(2 * j) === r.getLong(2 * j + 1),
+        s"planes=$p v=${rows(i)}")
+    assert(got.exists(_.getLong(2 * planes.indexOf(62)) > (1L << 40)),
+      "no draw set a high bit: the 62-plane case was not exercised")
+  }
+}
