@@ -36,10 +36,10 @@ object IcebergLite {
   private def metaDir(root: String): Path = Paths.get(root, "meta")
   private def dataDir(root: String): String = s"$root/data"
 
-  private def atomicWrite(target: Path, content: String): Unit = {
+  private def atomicWrite(target: Path, bytes: Array[Byte]): Unit = {
     Files.createDirectories(target.getParent)
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, bytes)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -97,8 +97,10 @@ object IcebergLite {
     val version = currentVersion(root) + 1
     val snap = Snapshot(version,
       merged, prev.map(_.lineage).getOrElse(Nil) ++ lineage)
-    atomicWrite(metaDir(root).resolve(s"manifest-v$version.json"), snapshotJson(snap))
-    atomicWrite(metaDir(root).resolve("VERSION"), version.toString)
+    atomicWrite(metaDir(root).resolve(s"manifest-v$version.json"),
+      snapshotJson(snap).getBytes(StandardCharsets.UTF_8))
+    atomicWrite(metaDir(root).resolve("VERSION"),
+      version.toString.getBytes(StandardCharsets.UTF_8))
     snap
   }
 
@@ -108,14 +110,8 @@ object IcebergLite {
     * until overwritten, so consumers built for daily ingest read it in one
     * driver-side file read instead of re-scanning the table.
     */
-  def putBlob(root: String, key: String, bytes: Array[Byte]): Unit = {
-    val target = metaDir(root).resolve(s"blob-$key.bin")
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def putBlob(root: String, key: String, bytes: Array[Byte]): Unit =
+    atomicWrite(metaDir(root).resolve(s"blob-$key.bin"), bytes)
 
   def getBlob(root: String, key: String): Option[Array[Byte]] = {
     val f = metaDir(root).resolve(s"blob-$key.bin")
@@ -140,20 +136,7 @@ object IcebergLite {
       bucketExpr: org.apache.spark.sql.Column,
       nBuckets: Int,
       lineage: String
-  ): Snapshot = {
-    val t0 = System.currentTimeMillis()
-    val withBucket = df.withColumn("bucket", pmod(bucketExpr, lit(nBuckets)))
-    withBucket.write.mode("overwrite").partitionBy("bucket")
-      .parquet(dataDir(root))
-    // per-partition row counts from parquet footers — metadata-only, no
-    // second Spark job over the data
-    val counts = footerCounts(dataDir(root))
-    val dur = System.currentTimeMillis() - t0
-    val parts = (0 until nBuckets).map(b =>
-      PartitionMeta(b, counts.getOrElse(b, 0L), dur / math.max(nBuckets, 1),
-        System.currentTimeMillis()))
-    commit(root, parts, Seq(lineage))
-  }
+  ): Snapshot = writeBucketed(df, root, bucketExpr, nBuckets, lineage, "overwrite")
 
   /** APPEND rows to an existing bucketed table and commit the grown
     * partition totals — the daily-ingest write path: day N's admitted
@@ -167,11 +150,23 @@ object IcebergLite {
       bucketExpr: org.apache.spark.sql.Column,
       nBuckets: Int,
       lineage: String
+  ): Snapshot = writeBucketed(df, root, bucketExpr, nBuckets, lineage, "append")
+
+  /** The one table-write body of [[writeTable]] and [[appendTable]]. */
+  private def writeBucketed(
+      df: DataFrame,
+      root: String,
+      bucketExpr: org.apache.spark.sql.Column,
+      nBuckets: Int,
+      lineage: String,
+      mode: String
   ): Snapshot = {
     val t0 = System.currentTimeMillis()
     val withBucket = df.withColumn("bucket", pmod(bucketExpr, lit(nBuckets)))
-    withBucket.write.mode("append").partitionBy("bucket")
+    withBucket.write.mode(mode).partitionBy("bucket")
       .parquet(dataDir(root))
+    // per-partition row counts from parquet footers — metadata-only, no
+    // second Spark job over the data
     val counts = footerCounts(dataDir(root))
     val dur = System.currentTimeMillis() - t0
     val parts = (0 until nBuckets).map(b =>

@@ -405,9 +405,25 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** The per-document dedup SIGNATURE (id, blk, sh = sorted distinct
+    * shingle hashes, __md5, sz), un-materialized: one definition for the
+    * cached [[prepDocs]] and the persisted index, so the two cannot drift.
+    */
+  private[graft] def signatures(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      blockKey: org.apache.spark.sql.Column,
+      shingleN: Int
+  ): DataFrame =
+    df.select(
+      col(idCol).as("id"), blockKey.as("blk"),
+      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
+      md5(col(textCol)).as("__md5"))
+      .withColumn("sz", size(col("sh")))
+
   /** ONE shared per-document prep frame — the single expensive scan every
-    * dedup operator needs: (id, blk, sh = sorted distinct shingle hashes,
-    * sz, __md5). Computed once and cached; [[dedupDocs]],
+    * dedup operator needs: the cached [[signatures]]. [[dedupDocs]],
     * [[contaminationPairs]], [[ngramJaccardPairs]] and (critically)
     * [[dedupIncremental]] all thread the SAME frame through their exact
     * (digest) and near (PPJoin) passes instead of re-shingling per pass.
@@ -418,12 +434,7 @@ object Dedup {
       textCol: String,
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int
-  ): DataFrame = materialize(
-    df.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh"))))
+  ): DataFrame = materialize(signatures(df, idCol, textCol, blockKey, shingleN))
 
   /** End-to-end document dedup: exact duplicates (same text digest) and
     * near-duplicates (exact n-gram Jaccard ≥ threshold via the PPJoin path)
@@ -498,59 +509,86 @@ object Dedup {
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int = 3,
       threshold: Double = 0.7
-  ): DataFrame =
-    dedupIncrementalPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN),
-      prepDocs(corpus, idCol, textCol, blockKey, shingleN),
-      idCol, threshold)
+  ): DataFrame = {
+    val bp = prepDocs(batch, idCol, textCol, blockKey, shingleN)
+    val cp = prepDocs(corpus, idCol, textCol, blockKey, shingleN)
+    admit(batch, bp, cp, idCol, threshold,
+      materialize(shingleFreq(Seq(bp, cp))), sketches = None)
+  }
 
-  private def dedupIncrementalPrepped(
+  /** THE incremental-admission body of [[dedupIncremental]],
+    * [[dedupIncrementalBloom]] and [[dedupIncrementalBloomIndexed]].
+    * `sketches` = (digest bloom, shingle bloom) over the corpus side.
+    */
+  private def admit(
       batch: DataFrame,
       bp: DataFrame,
       cp: DataFrame,
       idCol: String,
-      threshold: Double
+      threshold: Double,
+      freq: DataFrame,
+      sketches: Option[(Array[Byte], Array[Byte])]
   ): DataFrame = {
     // ONE rarity order + ONE ranked prefix frame per side, shared by BOTH
     // PPJoin passes (batch×corpus cross, batch self): the prefix theorem
     // holds for any fixed total order, so the union-wide df table serves
     // the self pass too. Round 4 rebuilt freq + prefix inside each
     // ppjoinFromPrepped call — the measured q62/q84 residual. freq is
-    // MATERIALIZED (round 6): two prefix frames consume it, and lazy it
-    // was aggregated once inside EACH prefix materialization; the cached
-    // (shingle, df) rows are narrow, and the cache also gives the planner
-    // real size stats for the prefix join (broadcast when vocabulary-
-    // sized). Note this caches the AGGREGATE — the round-5 regression was
-    // from caching the exploded long-form table, which is corpus-sized.
-    val freq = materialize(shingleFreq(Seq(bp, cp)))
+    // MATERIALIZED by the callers (round 6): two prefix frames consume it,
+    // and lazy it was aggregated once inside EACH prefix materialization;
+    // the cached (shingle, df) rows are narrow, and the cache also gives
+    // the planner real size stats for the prefix join (broadcast when
+    // vocabulary-sized). Note this caches the AGGREGATE — the round-5
+    // regression was from caching the exploded long-form table, which is
+    // corpus-sized.
     val bpPrefix = materialize(prefixOf(bp, freq, threshold))
     val cpPrefix = materialize(prefixOf(cp, freq, threshold))
     // exact collisions with the corpus: digest semi-join (never the text;
-    // no distinct on the corpus side — semi joins ignore right-side dups)
-    val exactHit = bp.select(col("id"), col("__md5"))
+    // no distinct on the corpus side — semi joins ignore right-side dups).
+    // The digest bloom is a pure `might_contain` FILTER ahead of it — rows
+    // the sketch rejects are guaranteed novel; the maybe-rows are exactly
+    // verified. (No materialized flag frame — the round-5 shape cached a
+    // per-id flag column and paid an extra cache fill + semi join for what
+    // one predicate expresses.)
+    val exactHit = sketches
+      .fold(bp) { case (digestBloom, _) =>
+        bp.where(mightContain(digestBloom, xxhash64(col("__md5")))) }
+      .select(col("id"), col("__md5"))
       .join(cp.select(col("__md5")), Seq("__md5"), "left_semi")
       .select(col("id"))
-    // near collisions with the corpus: cross-table prefix-filtered jaccard
-    val nearHit = ppjoinFromPrefixed(cpPrefix, cp, Some((bpPrefix, bp)), threshold)
+    // near collisions with the corpus: cross-table prefix-filtered jaccard.
+    // The shingle bloom prunes the cross pass at PREFIX-ROW granularity — a
+    // batch prefix row whose own shingle is not in the corpus sketch can
+    // never produce a candidate (candidates require an equal corpus
+    // shingle, and EVERY corpus shingle is in the sketch: no false
+    // negatives), so the filter is exact, strictly sharper than the
+    // round-5 per-id flag (it drops non-corpus shingles of flagged docs
+    // too), and a zero-join zero-shuffle projection predicate.
+    val crossBp = sketches.fold(bpPrefix) { case (_, shingleBloom) =>
+      bpPrefix.where(mightContain(shingleBloom, col("shingle"))) }
+    val nearHit = ppjoinFromPrefixed(cpPrefix, cp, Some((crossBp, bp)), threshold)
       .select(col("id_b").as("id"))
     // ONE anti join against the union of every exclusion set (batch-
     // internal cluster dups, corpus exact hits, corpus near hits) — was
     // three sequential anti joins, each its own shuffle/job; dup ids in
-    // the union are harmless to an anti join, so no distinct needed
+    // the union are harmless to an anti join, so no distinct needed. The
+    // batch-internal pass runs on the UNPRUNED batch prefix.
     val exclude = dupIdsFromPrepped(bp, threshold, Some(bpPrefix))
       .unionByName(exactHit).unionByName(nearHit)
     batch.select(col(idCol))
       .join(exclude.select(col("id").as(idCol)), Seq(idCol), "left_anti")
   }
 
-  /** Persist the corpus DEDUP INDEX — the (id, blk, sh, sz, __md5)
-    * signature frame — as an Iceberg-lite table bucketed on the block key.
+  /** Persist the corpus DEDUP INDEX — the [[signatures]] frame — as an
+    * Iceberg-lite table bucketed on the block key.
     * At 100 TB this is what makes daily ingest sustainable: the corpus
     * prep scan (shingling + digesting every document) happens once per
     * document EVER, not once per day; each ingest reads signatures —
     * a few hundred bytes/doc — never the corpus text. Admitted batches
     * append their own prep rows to the index (same schema), so the index
     * grows with the corpus and stays its single source of dedup truth.
+    * With `bloomFpp` set, the ingest Bloom sketches are persisted as
+    * snapshot blobs for [[dedupIncrementalBloomIndexed]].
     */
   def writeIndex(
       corpus: DataFrame,
@@ -561,28 +599,9 @@ object Dedup {
       root: String,
       nBuckets: Int = 32,
       bloomFpp: Option[Double] = None
-  ): Unit = {
-    val prep = corpus.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
-    graft.lake.IcebergLite.writeTable(prep, root,
-      pmod(graft.functions.PolyHash(col("blk").cast("string")), lit(nBuckets.toLong)),
-      nBuckets, lineage = s"dedup-index(shingleN=$shingleN)")
-    // Persist the ingest Bloom sketches as snapshot blobs: built ONCE here
-    // (off the just-written signature table — columnar read, no re-shingle,
-    // no corpus text), consumed by every subsequent
-    // [[dedupIncrementalBloomIndexed]] ingest with zero corpus scans.
-    bloomFpp.foreach { fpp =>
-      val idx = readIndex(corpus.sparkSession, root)
-      val (dg, sh) = bloomPairOf(idx, fpp)
-      graft.lake.IcebergLite.putBlob(root, "bloom-digest", dg)
-      graft.lake.IcebergLite.putBlob(root, "bloom-shingle", sh)
-      graft.lake.IcebergLite.appendMetrics(root,
-        s"""{"job":"dedup-index-blooms","fpp":$fpp}""")
-    }
-  }
+  ): Unit =
+    commitIndex(signatures(corpus, idCol, textCol, blockKey, shingleN),
+      shingleN, root, nBuckets, bloomFpp, append = false)
 
   /** Append a day's ADMITTED documents to a persisted dedup index and
     * refresh its Bloom blobs — the loop step of multi-day ingest: the new
@@ -590,7 +609,9 @@ object Dedup {
     * into their buckets, and the sketches are rebuilt from the SIGNATURE
     * TABLE (columnar, no corpus text, no re-shingle) so the next day's
     * [[dedupIncrementalBloomIndexed]] admits against the grown corpus.
-    * `nBuckets` must match the original [[writeIndex]] call.
+    * `nBuckets` must match the original [[writeIndex]] call. An index that
+    * carries sketches must be appended WITH `bloomFpp`: without it the
+    * sketches would miss the new rows, so the call throws before writing.
     */
   def appendIndex(
       admitted: DataFrame,
@@ -601,46 +622,46 @@ object Dedup {
       root: String,
       nBuckets: Int = 32,
       bloomFpp: Option[Double] = None
+  ): Unit =
+    commitIndex(signatures(admitted, idCol, textCol, blockKey, shingleN),
+      shingleN, root, nBuckets, bloomFpp, append = true)
+
+  /** The index-commit body of [[writeIndex]] and [[appendIndex]]. The
+    * sketches are built off the just-written signature table (columnar
+    * read, no re-shingle, no corpus text).
+    */
+  private def commitIndex(
+      sig: DataFrame,
+      shingleN: Int,
+      root: String,
+      nBuckets: Int,
+      bloomFpp: Option[Double],
+      append: Boolean
   ): Unit = {
-    val prep = admitted.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
-    graft.lake.IcebergLite.appendTable(prep, root,
+    import graft.lake.IcebergLite
+    if (append && bloomFpp.isEmpty && IcebergLite.getBlob(root, "bloom-digest").isDefined)
+      throw new IllegalStateException(
+        s"index at $root carries Bloom sketches; appendIndex without bloomFpp " +
+          "would leave them stale — pass bloomFpp to refresh them")
+    val (write, tag, job) =
+      if (append) (IcebergLite.appendTable _, "dedup-index-append", "dedup-index-bloom-refresh")
+      else (IcebergLite.writeTable _, "dedup-index", "dedup-index-blooms")
+    val snap = write(sig, root,
       pmod(graft.functions.PolyHash(col("blk").cast("string")), lit(nBuckets.toLong)),
-      nBuckets, lineage = s"dedup-index-append(shingleN=$shingleN)")
+      nBuckets, s"$tag(shingleN=$shingleN)")
     bloomFpp.foreach { fpp =>
-      val idx = readIndex(admitted.sparkSession, root)
-      val (dg, sh) = bloomPairOf(idx, fpp)
-      graft.lake.IcebergLite.putBlob(root, "bloom-digest", dg)
-      graft.lake.IcebergLite.putBlob(root, "bloom-shingle", sh)
-      graft.lake.IcebergLite.appendMetrics(root,
-        s"""{"job":"dedup-index-bloom-refresh","fpp":$fpp}""")
+      val (dg, sh) = bloomPairOf(readIndex(sig.sparkSession, root), fpp)
+      IcebergLite.putBlob(root, "bloom-digest", dg)
+      IcebergLite.putBlob(root, "bloom-shingle", sh)
+      // the stamp goes LAST: a refresh killed before it leaves the previous
+      // stamp against the newer snapshot, which ingest rejects as stale
+      IcebergLite.putBlob(root, "bloom-snapshot", snap.version.toString.getBytes("UTF-8"))
+      IcebergLite.appendMetrics(root, s"""{"job":"$job","fpp":$fpp}""")
     }
   }
 
   def readIndex(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
     graft.lake.IcebergLite.readTable(spark, root).drop("bucket")
-
-  /** [[dedupIncremental]] against a PERSISTED index ([[writeIndex]]):
-    * the corpus side needs no text access and no re-prep — signatures
-    * stream off the index table; only the new batch is shingled.
-    */
-  def dedupIncrementalIndexed(
-      batch: DataFrame,
-      index: DataFrame,
-      idCol: String,
-      textCol: String,
-      blockKey: org.apache.spark.sql.Column,
-      shingleN: Int = 3,
-      threshold: Double = 0.7
-  ): DataFrame =
-    dedupIncrementalPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN),
-      materialize(index.select(col("id"), col("blk"), col("sh"),
-        col("__md5"), col("sz"))),
-      idCol, threshold)
 
   /** Bloom-prefiltered ingest against a PERSISTED index whose sketches
     * were written by [[writeIndex]]`(bloomFpp = Some(...))`: daily ingest
@@ -648,7 +669,10 @@ object Dedup {
     * (one driver file read each), the corpus side streams signatures off
     * the index table, and only the batch is shingled. Admissions are
     * IDENTICAL to [[dedupIncremental]] (bloom negatives guaranteed novel,
-    * positives verified by the exact joins).
+    * positives verified by the exact joins). Throws when the sketches are
+    * missing or stale (stamped with another snapshot version than the
+    * index's current one): a stale sketch lacks the newer rows' keys and
+    * would admit their duplicates.
     */
   def dedupIncrementalBloomIndexed(
       batch: DataFrame,
@@ -659,52 +683,44 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.7
   ): DataFrame = {
-    val spark = batch.sparkSession
-    def blob(k: String) = graft.lake.IcebergLite.getBlob(root, k).getOrElse(
-      throw new IllegalStateException(
-        s"index at $root has no '$k' sketch — writeIndex with bloomFpp set"))
-    val cp = materialize(readIndex(spark, root)
-      .select(col("id"), col("blk"), col("sh"), col("__md5"), col("sz")))
-    dedupIncrementalBloomPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN), cp,
-      blob("bloom-digest"), blob("bloom-shingle"), idCol, threshold)
+    import graft.lake.IcebergLite
+    // the stamp is written after both sketches, so a current stamp implies
+    // both blobs exist and were built from the current snapshot
+    val stamp = IcebergLite.getBlob(root, "bloom-snapshot").map(new String(_, "UTF-8"))
+    val current = IcebergLite.currentVersion(root).toString
+    if (!stamp.contains(current))
+      throw new IllegalStateException(s"index at $root has no current bloom " +
+        s"sketches (stale or missing: built from snapshot ${stamp.getOrElse("none")}, " +
+        s"index is at $current) — writeIndex/appendIndex with bloomFpp set")
+    val sketches = (IcebergLite.getBlob(root, "bloom-digest").get,
+      IcebergLite.getBlob(root, "bloom-shingle").get)
+    val cp = materialize(readIndex(batch.sparkSession, root))
+    val bp = prepDocs(batch, idCol, textCol, blockKey, shingleN)
+    admit(batch, bp, cp, idCol, threshold,
+      materialize(shingleFreq(Seq(bp, cp))), Some(sketches))
   }
 
-  /** Serialized Bloom filter over a long-key column — built with Spark's
-    * native sketch aggregation (one pass, partial-merged, KB-MB result).
-    * At production scale the bytes persist alongside the dedup index
-    * ([[graft.lake.IcebergLite]] puts them in a snapshot property) so daily
-    * ingests never rescan the corpus to rebuild them.
-    */
-  private[graft] def bloomOf(keys: DataFrame, keyCol: String, fpp: Double): Array[Byte] = {
-    // size by (approximate) DISTINCT keys: count() counts occurrences, and
-    // a shingle frame repeats each shingle once per document — sizing from
-    // occurrences inflates the sketch 10-100x and past ~10^13 occurrences
-    // exceeds the bit-array limit outright. approx_count_distinct at
-    // rsd=0.01 (vs the ~5% default) keeps a 1.1 margin > 10 sigma of the
-    // estimator — an undersized filter would EXCEED the requested fpp and,
-    // in incremental dedup, silently drop novel documents.
-    val n = math.max(
-      (keys.agg(approx_count_distinct(col(keyCol), 0.01)).head().getLong(0) *
-        1.1).toLong, 64L)
-    val bf = keys.stat.bloomFilter(keyCol, n, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Native codegen Bloom aggregation (`bloom_filter_agg`): the same
-    * BloomFilterImpl bytes `stat.bloomFilter` builds, but as a Catalyst
-    * partial-merged aggregate — whole-stage codegen, no RDD row
+  /** Native codegen Bloom aggregation (`bloom_filter_agg`): the
+    * BloomFilterImpl serialization `stat.bloomFilter` writes, but built as
+    * a Catalyst partial-merged aggregate — whole-stage codegen, no RDD row
     * conversion, and (the point) several filters build in ONE pass when
     * the key columns share a frame. numBits follows the same
     * optimalNumOfBits(n, fpp) rule `BloomFilter.create(n, fpp)` applies,
-    * so the serialized bytes are identical to the stat path's.
+    * but `BloomFilterAggregate` silently clamps n and numBits to the
+    * session's runtime-bloom caps; the sketch matches `stat.bloomFilter(n,
+    * fpp)` only below them, so a request past either cap fails here
+    * instead of building a smaller filter than asked for.
     */
-  private def bloomAggCol(key: org.apache.spark.sql.Column, n: Long,
+  private def bloomAggCol(spark: org.apache.spark.sql.SparkSession,
+      key: org.apache.spark.sql.Column, n: Long,
       fpp: Double): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftBridge
     val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp)
+    val conf = (k: String) => s"spark.sql.optimizer.runtime.bloomFilter.$k"
+    require(n <= spark.conf.get(conf("maxNumItems")).toLong &&
+      bits <= spark.conf.get(conf("maxNumBits")).toLong,
+      s"Bloom sketch of $n keys / $bits bits exceeds ${conf("maxNumItems")} or " +
+        s"${conf("maxNumBits")}; bloom_filter_agg would clamp it silently")
     GraftBridge.column(
       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
         GraftBridge.expression(key),
@@ -720,7 +736,7 @@ object Dedup {
     * key once per shingle (the exploded grain; explode_outer keeps
     * zero-shingle docs) sets exactly the bits the row-grain build set —
     * byte-identical sketches, half the corpus scans (guide §1.2: fewer
-    * passes first). Sizing margins match [[bloomOf]].
+    * passes first).
     */
   private[graft] def bloomPairOf(prep: DataFrame, fpp: Double): (Array[Byte], Array[Byte]) = {
     val keys = prep.select(xxhash64(col("__md5")).as("dk"),
@@ -755,8 +771,8 @@ object Dedup {
     val keys = prep.select(xxhash64(col("__md5")).as("dk"),
       explode_outer(col("sh")).as("k"))
     val built = keys.agg(
-      bloomAggCol(col("dk"), math.max(nDg, 64L), fpp),
-      bloomAggCol(col("k"), math.max(nSh, 64L), fpp)).head()
+      bloomAggCol(prep.sparkSession, col("dk"), math.max(nDg, 64L), fpp),
+      bloomAggCol(prep.sparkSession, col("k"), math.max(nSh, 64L), fpp)).head()
     (built.getAs[Array[Byte]](0), built.getAs[Array[Byte]](1))
   }
 
@@ -811,59 +827,8 @@ object Dedup {
     // (round-5 paid four corpus-shaped passes here, round-6 first cut it
     // to two; this is the last one beyond the build itself)
     val freq = materialize(shingleFreq(Seq(bp, cp)))
-    val (digestBloom, shingleBloom) = bloomPairSizedOf(cp,
-      cp.count(), freq.count(), fpp)
-    dedupIncrementalBloomPrepped(batch, bp, cp, digestBloom, shingleBloom,
-      idCol, threshold, sharedFreq = Some(freq))
-  }
-
-  /** [[dedupIncrementalBloom]] body over prepped sides + prebuilt sketches
-    * — shared with [[dedupIncrementalBloomIndexed]], where the sketches
-    * arrive from the index's snapshot blobs instead of two corpus scans.
-    */
-  private def dedupIncrementalBloomPrepped(
-      batch: DataFrame,
-      bp: DataFrame,
-      cp: DataFrame,
-      digestBloom: Array[Byte],
-      shingleBloom: Array[Byte],
-      idCol: String,
-      threshold: Double,
-      sharedFreq: Option[DataFrame] = None
-  ): DataFrame = {
-    // ONE rarity order + prefix frame per side, as in dedupIncremental
-    // (freq materialized there for the same two-consumer reason; callers
-    // that already built it for sketch sizing pass it in)
-    val freq = sharedFreq.getOrElse(materialize(shingleFreq(Seq(bp, cp))))
-    val bpPrefix = materialize(prefixOf(bp, freq, threshold))
-    val cpPrefix = materialize(prefixOf(cp, freq, threshold))
-    // digest bloom: a pure `might_contain` FILTER ahead of the exact
-    // semi-join — rows the sketch rejects are guaranteed novel; the
-    // maybe-rows are exactly verified. (No materialized flag frame — the
-    // round-5 shape cached a per-id flag column and paid an extra
-    // cache fill + semi join for what one predicate expresses.)
-    val exactHit = bp
-      .where(mightContain(digestBloom, xxhash64(col("__md5"))))
-      .select(col("id"), col("__md5"))
-      .join(cp.select(col("__md5")), Seq("__md5"), "left_semi")
-      .select(col("id"))
-    // shingle bloom: prune the cross pass at PREFIX-ROW granularity — a
-    // batch prefix row whose own shingle is not in the corpus sketch can
-    // never produce a candidate (candidates require an equal corpus
-    // shingle, and EVERY corpus shingle is in the sketch: no false
-    // negatives), so the filter is exact, strictly sharper than the
-    // round-5 per-id flag (it drops non-corpus shingles of flagged docs
-    // too), and a zero-join zero-shuffle projection predicate.
-    val prunedBp = bpPrefix.where(mightContain(shingleBloom, col("shingle")))
-    val nearHit = ppjoinFromPrefixed(cpPrefix, cp,
-        Some((prunedBp, bp)), threshold)
-      .select(col("id_b").as("id"))
-    // as in dedupIncrementalPrepped: ONE anti join over the unioned
-    // exclusion sets; no right-side distincts (anti joins ignore dups)
-    val exclude = dupIdsFromPrepped(bp, threshold, Some(bpPrefix))
-      .unionByName(exactHit).unionByName(nearHit)
-    batch.select(col(idCol))
-      .join(exclude.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    val sketches = bloomPairSizedOf(cp, cp.count(), freq.count(), fpp)
+    admit(batch, bp, cp, idCol, threshold, freq, Some(sketches))
   }
 
   /** SimHash near-dup pairs at production width: `words`×32-bit signatures
@@ -1020,7 +985,7 @@ object Dedup {
   }
 
   /** Candidate-join + verify stages over PRE-BUILT prefix frames — the
-    * entry point that lets [[dedupIncrementalPrepped]] build each side's
+    * entry point that lets [[admit]] build each side's
     * prefix once and run both its cross and self passes from the same
     * cached frames. `a`/payload pairs: (prefix frame, prep frame); self
     * mode when `b` is None.

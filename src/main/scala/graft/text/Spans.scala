@@ -93,7 +93,7 @@ object Spans {
   /** (id, pos, wh) rows: the rolling window-hash explode shared by the
     * self- and cross-table span detectors. pos is the 1-based start token.
     */
-  private def winHashFrame(
+  private[graft] def winHashFrame(
       df: DataFrame,
       idCol: String,
       textCol: String,

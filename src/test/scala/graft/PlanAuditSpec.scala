@@ -13,6 +13,19 @@ class PlanAuditSpec extends GraftSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Bloom-indexed ingest of every 5th document against a persisted index
+    * (with sketches) of the rest — the IngestLoop / curate_ingest shape.
+    */
+  private def bloomIndexedIngest(root: String): org.apache.spark.sql.DataFrame = {
+    import graft.text.Dedup
+    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
+    scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    Dedup.writeIndex(docs.where(pmod(col("doc_id"), lit(5L)) =!= 0),
+      "doc_id", "text", col("lang"), 3, root, nBuckets = 8, bloomFpp = Some(0.03))
+    Dedup.dedupIncrementalBloomIndexed(docs.where(pmod(col("doc_id"), lit(5L)) === 0),
+      root, "doc_id", "text", col("lang"), 3, 0.7)
+  }
+
   test("filter + projection are pushed into the parquet scan") {
     val df = SparkEntry.queries("q01_pricing_summary")(spark, sfSmall)
     val p = df.queryExecution.sparkPlan.toString
@@ -289,10 +302,12 @@ class PlanAuditSpec extends GraftSuite {
         docs.where(pmod(col("doc_id"), lit(7L)) === 0),
         docs.where(pmod(col("doc_id"), lit(7L)) =!= 0),
         "doc_id", "text", col("lang"), threshold = 0.7)
-      val p = plan(out)
-      assert(p.contains("might_contain"),
-        s"bloom prefilter missing from the plan:\n$p")
-      assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
+      for (o <- Seq(out, bloomIndexedIngest("/tmp/audit_bloom_index"))) {
+        val p = plan(o)
+        assert(p.contains("might_contain"),
+          s"bloom prefilter missing from the plan:\n$p")
+        assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
+      }
     }
   }
 
@@ -309,19 +324,21 @@ class PlanAuditSpec extends GraftSuite {
         docs.where(pmod(col("doc_id"), lit(5L)) === 0),
         docs.where(pmod(col("doc_id"), lit(5L)) =!= 0),
         "doc_id", "text", col("lang"), threshold = 0.7)
-      val live = out.queryExecution.executedPlan
-      val gens = live.collect {
-        case g: org.apache.spark.sql.execution.GenerateExec => g }.size
-      assert(gens === 0,
-        s"shingle explodes must be served from the cached prefix frames:\n$live")
-      val freqAggs = live.collect {
-        case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
-          if a.resultExpressions.exists(_.name == "df") => a }.size
-      assert(freqAggs === 0,
-        s"the rarity order must come from the ONE cached freq table:\n$live")
-      assert(live.toString.contains("InMemoryTableScan"),
-        "prefix frames must be served from cache")
-      assert(out.count() > 0)
+      for (o <- Seq(out, bloomIndexedIngest("/tmp/audit_rarity_index"))) {
+        val live = o.queryExecution.executedPlan
+        val gens = live.collect {
+          case g: org.apache.spark.sql.execution.GenerateExec => g }.size
+        assert(gens === 0,
+          s"shingle explodes must be served from the cached prefix frames:\n$live")
+        val freqAggs = live.collect {
+          case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+            if a.resultExpressions.exists(_.name == "df") => a }.size
+        assert(freqAggs === 0,
+          s"the rarity order must come from the ONE cached freq table:\n$live")
+        assert(live.toString.contains("InMemoryTableScan"),
+          "prefix frames must be served from cache")
+        assert(o.count() > 0)
+      }
     }
   }
 

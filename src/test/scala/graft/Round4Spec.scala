@@ -302,31 +302,6 @@ class Round4Spec extends GraftSuite {
     graft.text.Dedup.releaseCache()
   }
 
-  test("persisted dedup index: indexed ingest == recomputed ingest, corpus text never re-read") {
-    import graft.text.Dedup
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
-    val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
-    val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-    val root = "/tmp/dedup_index_spec"
-    scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    Dedup.writeIndex(corpus, "doc_id", "text", col("lang"), 3, root, nBuckets = 8)
-    val index = Dedup.readIndex(spark, root)
-    // the index carries signatures only — never the document text
-    assert(!index.columns.contains("text"),
-      "index must not store corpus text")
-    val indexed = Dedup.dedupIncrementalIndexed(batch, index,
-      "doc_id", "text", col("lang"), 3, 0.7).as[Long].collect().toSet
-    Dedup.releaseCache()
-    val recomputed = Dedup.dedupIncremental(batch, corpus,
-      "doc_id", "text", col("lang"), 3, 0.7).as[Long].collect().toSet
-    Dedup.releaseCache()
-    assert(indexed == recomputed,
-      s"indexed admissions must equal recomputed: ${indexed.size} vs ${recomputed.size}")
-    // the lake table committed a snapshot with lineage
-    assert(graft.lake.IcebergLite.readSnapshot(root).exists(
-      _.lineage.exists(_.contains("dedup-index"))))
-  }
-
   test("tokenDrift: identical slices score exactly zero KL; planted skew is positive") {
     // two strata with the SAME token distribution: p_s == p_pool for every
     // token, every KL term is ln(1)=0, quantized sum is EXACTLY 0
@@ -410,8 +385,7 @@ class Round4Spec extends GraftSuite {
     graft.text.Dedup.withCache {
       val cp = graft.text.Dedup.prepDocs(corpus, "doc_id", "text", col("lang"), 3)
       val bp = graft.text.Dedup.prepDocs(batch, "doc_id", "text", col("lang"), 3)
-      val digestBloom = graft.text.Dedup.bloomOf(
-        cp.select(xxhash64(col("__md5")).as("k")), "k", 0.03)
+      val digestBloom = graft.text.Dedup.bloomPairOf(cp, 0.03)._1
       val maybes = bp.where(graft.text.Dedup.mightContain(
         digestBloom, xxhash64(col("__md5")))).count()
       val total = bp.count()

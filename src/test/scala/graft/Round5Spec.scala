@@ -20,9 +20,14 @@ class Round5Spec extends GraftSuite {
       nBuckets = 8, bloomFpp = Some(0.03))
     assert(graft.lake.IcebergLite.getBlob(root, "bloom-digest").exists(_.nonEmpty))
     assert(graft.lake.IcebergLite.getBlob(root, "bloom-shingle").exists(_.nonEmpty))
-    // ingest consumes them: zero bloom builds, zero corpus text access
-    // (the index has no text column — pinned by Round4Spec), admitted set
-    // identical to the from-scratch path
+    // the index carries signatures only — never the document text — and
+    // the lake table committed a snapshot with lineage
+    assert(!Dedup.readIndex(spark, root).columns.contains("text"),
+      "index must not store corpus text")
+    assert(graft.lake.IcebergLite.readSnapshot(root).exists(
+      _.lineage.exists(_.contains("dedup-index"))))
+    // ingest consumes the sketches: zero bloom builds, zero corpus text
+    // access, admitted set identical to the from-scratch path
     val viaIndex = Dedup.withCache {
       Dedup.dedupIncrementalBloomIndexed(batch, root,
         "doc_id", "text", col("lang"), 3, 0.7).as[Long].collect().toSet

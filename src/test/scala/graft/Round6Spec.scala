@@ -88,8 +88,7 @@ class Round6Spec extends GraftSuite {
     for (k <- Seq(8, 13)) {
       val nat = Spans.duplicateSpans(docs, "doc_id", "text", k)
         .collect().map(_.toSeq).toSet
-      // duplicateSpans over the declarative frame: reproduce its pipeline
-      val natFrame = TestAccess.winHashFrame(docs, "doc_id", "text", k)
+      val natFrame = Spans.winHashFrame(docs, "doc_id", "text", k)
         .collect().map(_.toSeq).toSet
       val decFrame = Spans.winHashFrameDeclarative(docs, "doc_id", "text", k)
         .collect().map(_.toSeq).toSet
@@ -102,7 +101,7 @@ class Round6Spec extends GraftSuite {
     import graft.text.Dedup
     val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(400)
     Dedup.withCache {
-      val prep = TestAccess.prepDocs(docs, "doc_id", "text", col("lang"), 3)
+      val prep = Dedup.signatures(docs, "doc_id", "text", col("lang"), 3)
       val (dg, sh) = Dedup.bloomPairOf(prep, 0.03)
       // the correctness contract: NO false negatives — every corpus
       // digest and every corpus shingle must probe positive (admission
@@ -296,30 +295,4 @@ class Round6IngestSpec extends GraftSuite {
       admittedSoFar :+= admDocs
     }
   }
-}
-
-/** Accessors for `private[text]` internals the parity pins compare. */
-object TestAccess {
-  def winHashFrame(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, k: Int): org.apache.spark.sql.DataFrame = {
-    import graft.text.TextHash
-    val th = transform(TextHash.lowerTokens(col(textCol)),
-      t => TextHash.polyHash(t))
-    val p = df.select(col(idCol).as("id"), th.as("th"))
-      .withColumn("nw", size(col("th")) - (k - 1))
-    p.where(col("nw") > 0)
-      .select(col("id"),
-        posexplode(graft.functions.WindowHashes(col("th"), k))
-          .as(Seq("pos0", "wh")))
-      .select(col("id"), (col("pos0") + 1).as("pos"), col("wh"))
-  }
-
-  def prepDocs(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, blockKey: org.apache.spark.sql.Column,
-      shingleN: Int): org.apache.spark.sql.DataFrame =
-    df.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      graft.text.TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
 }
