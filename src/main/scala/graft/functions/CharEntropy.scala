@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Character-level Shannon entropy (bits/codepoint) in ONE generated pass.
@@ -21,32 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * codepoint order (UTF-8 byte order == codepoint order, which is what
   * `array_sort` over single-char strings produced), term =
   * −(p·ln p) with p = run/n, left-to-right summation, final ÷ by the
-  * shared ln2 literal. `TextHashSpec`-style parity is pinned in
-  * Round4Spec against the declarative fold over the real corpus.
+  * shared ln2 literal. Round4Spec pins the parity against the declarative
+  * fold over the real corpus.
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"CharEntropy needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    CharEntropy.entropy(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharEntropy.entropy($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-}
-
 object CharEntropy {
   private val Ln2 = 0.6931471805599453
 
-  def entropy(s: String): Double = {
+  def entropy(u: UTF8String): Double = {
+    val s = u.toString
     if (s.isEmpty) return 0.0
     // decode codepoints once (substr/ascii semantics: per CODEPOINT)
     var n = 0
@@ -80,5 +60,6 @@ object CharEntropy {
     sum / Ln2
   }
 
-  def apply(c: Column): Column = GraftBridge.column(CharEntropy(GraftBridge.expression(c)))
+  def apply(c: Column): Column =
+    GraftBridge.staticCall(this, "entropy", DoubleType, Seq(c), Seq(StringType))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 
 /** Signed feature-hashing bag-of-words over a token array: dimension j
   * accumulates ±1 per token whose cross-engine polynomial hash lands in
@@ -22,7 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   *
   * Native kernel: ONE int-array accumulator pass over the tokens —
   * O(tokens + dim) per row. The declarative HOF twin
-  * ([[graft.text.TextHash.hashedBowDeclarative]], pinned equal by spec)
+  * ([[graft.text.TextHash.hashedBowDeclarative]], pinned equal by
+  * Round5Spec)
   * rebuilds and scans a dim-length array per token inside `aggregate` —
   * O(tokens·dim) work AND allocation per row, which at production dims
   * (256-1024) made the zero-dependency featurizer ~dim/2× slower than
@@ -31,30 +31,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * Values are exact small integers in double form — strict cross-engine
   * comparable with no rounding; empty token array → all-zero vector.
   */
-case class HashedBow(child: Expression, dim: Int) extends UnaryExpression {
-  // <= 256, NOT 65536: sign bit 8 must sit above the bucket bits (scaladoc)
-  require(dim >= 1 && dim <= 256, s"dim must be in [1,256], got $dim")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"HashedBow needs array<string> tokens, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    HashedBow.bow(v.asInstanceOf[ArrayData], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashedBow.bow($c, $dim);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedBow =
-    copy(child = newChild)
-}
-
 object HashedBow {
 
   /** All `dim` buckets in one pass. [[PolyHash.hash]] is non-negative
@@ -65,7 +41,7 @@ object HashedBow {
     val n = toks.numElements()
     var t = 0
     while (t < n) {
-      val h = PolyHash.hash(toks.getUTF8String(t).toString)
+      val h = PolyHash.hash(toks.getUTF8String(t))
       val j = (h % dim).toInt
       acc(j) += (if (((h >>> 8) & 1L) == 1L) 1.0 else -1.0)
       t += 1
@@ -73,6 +49,10 @@ object HashedBow {
     new GenericArrayData(acc)
   }
 
-  def apply(c: Column, dim: Int): Column =
-    GraftBridge.column(HashedBow(GraftBridge.expression(c), dim))
+  def apply(c: Column, dim: Int): Column = {
+    // <= 256, NOT 65536: sign bit 8 must sit above the bucket bits (scaladoc)
+    require(dim >= 1 && dim <= 256, s"dim must be in [1,256], got $dim")
+    GraftBridge.staticCall(this, "bow", ArrayType(DoubleType, containsNull = false),
+      Seq(c, lit(dim)), Seq(ArrayType(StringType), IntegerType))
+  }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** MinHash signature + LSH band keys in ONE generated pass over the
   * shingle-hash array — the candidate-generation prep of
@@ -22,30 +21,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the caller, which filters sz > 0) yields all-null band keys, matching
   * the null-propagating HOF fold.
   */
-case class MinhashBandKeys(child: Expression, numHashes: Int, bands: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-    s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"MinhashBandKeys needs an array<long> input, got $dt")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    MinhashBandKeys.keys(v.asInstanceOf[ArrayData], numHashes, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashBandKeys.keys($c, $numHashes, $bands);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashBandKeys =
-    copy(child = newChild)
-}
-
 object MinhashBandKeys {
   private val M = (1L << 32) - 1 // mod 2^32 == mask since operands stay >= 0
 
@@ -83,7 +58,11 @@ object MinhashBandKeys {
     new GenericArrayData(out)
   }
 
-  def apply(c: Column, numHashes: Int, bands: Int): Column =
-    GraftBridge.column(
-      MinhashBandKeys(GraftBridge.expression(c), numHashes, bands))
+  def apply(c: Column, numHashes: Int, bands: Int): Column = {
+    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
+      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
+    GraftBridge.staticCall(this, "keys", ArrayType(LongType, containsNull = true),
+      Seq(c, lit(numHashes), lit(bands)),
+      Seq(ArrayType(LongType), IntegerType, IntegerType))
+  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Aho–Corasick multi-pattern automaton (Aho & Corasick 1975): matches ALL
@@ -91,38 +89,17 @@ final class AcAutomaton(val patterns: Array[String]) extends Serializable {
   }
 }
 
-/** `countDistinct(patterns present in text)` as a codegen expression —
-  * the blocklist's phrase gate at ANY list size: one automaton pass per
-  * row vs one `contains` scan per pattern per row (the pre-round-5 shape,
-  * O(len·patterns) per row — fine at 10² phrases, not at 10⁴+).
+/** `countDistinct(patterns present in text)` as a native kernel — the
+  * blocklist's phrase gate at ANY list size: one automaton pass per row vs
+  * one `contains` scan per pattern per row (the pre-round-5 shape,
+  * O(len·patterns) per row — fine at 10² phrases, not at 10⁴+). The
+  * automaton rides as one reference object. Round5Spec's phrase-gate test
+  * pins it against the declarative contains-per-phrase count.
   */
-case class MultiContainsCount(child: Expression, ac: AcAutomaton)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"MultiContainsCount needs string, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    ac.countDistinct(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val acRef = ctx.addReferenceObj("ac", ac, classOf[AcAutomaton].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $acRef.countDistinct($c.toString());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MultiContainsCount =
-    copy(child = newChild)
-}
-
 object MultiContainsCount {
+  def count(text: UTF8String, ac: AcAutomaton): Int = ac.countDistinct(text.toString)
+
   def apply(c: Column, patterns: Seq[String]): Column =
-    GraftBridge.column(MultiContainsCount(
-      GraftBridge.expression(c), new AcAutomaton(patterns.toArray)))
+    GraftBridge.staticCall(this, "count", IntegerType, Seq(c), Seq(StringType),
+      refs = Seq(new AcAutomaton(patterns.toArray)))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType}
 
 /** Top-k nearest centroids (by cosine) of a double vector — the IVF coarse
   * quantizer's assignment/probe kernel at SCALE-SAFE plan size.
@@ -21,44 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * left-fold dot and norms, cos = dot/(vnorm·cnorm), precomputed centroid
   * norms) so small-k and large-k paths return identical assignments —
   * `AnnParitySpec` pins it.
-  *
-  * @param tieLargerIdx cosine ties prefer the LARGER list id when true —
-  *   matching the literal probe path's `reverse(array_sort(...))`
-  *   (descending (cos, li)); assignment uses false, matching
-  *   `greatest(struct(cos, -li))` (ties → smaller li).
   */
-case class NearestCentroids(
-    child: Expression,
-    centroids: Array[Array[Double]],
-    norms: Array[Double],
-    k: Int,
-    tieLargerIdx: Boolean
-) extends UnaryExpression {
-  require(centroids.nonEmpty && centroids.length == norms.length && k >= 1)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"NearestCentroids needs array<double>, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    NearestCentroids.topK(v.asInstanceOf[ArrayData], centroids, norms, k, tieLargerIdx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val nRef = ctx.addReferenceObj("cnorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NearestCentroids.topK($c, $cRef, $nRef, $k, $tieLargerIdx);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
-    copy(child = newChild)
-}
-
 object NearestCentroids {
 
   /** SQL double ordering (NaN greatest, NaN = NaN, -0.0 = 0.0) with the
@@ -75,8 +37,8 @@ object NearestCentroids {
     else a > b
   }
 
-  def topK(v: ArrayData, cents: Array[Array[Double]], norms: Array[Double],
-      k: Int, tieLarger: Boolean): ArrayData = {
+  def topK(v: ArrayData, k: Int, tieLarger: Boolean,
+      cents: Array[Array[Double]], norms: Array[Double]): ArrayData = {
     val dim = v.numElements()
     val x = new Array[Double](dim)
     var s2 = 0.0
@@ -119,11 +81,18 @@ object NearestCentroids {
     new GenericArrayData(out)
   }
 
+  /** @param tieLargerIdx cosine ties prefer the LARGER list id when true —
+    *   matching the literal probe path's `reverse(array_sort(...))`
+    *   (descending (cos, li)); assignment uses false, matching
+    *   `greatest(struct(cos, -li))` (ties → smaller li).
+    */
   def apply(v: Column, centroids: Array[Array[Double]], k: Int,
       tieLargerIdx: Boolean): Column = {
     // centroid norms with the literal path's exact fold order (ascending sum)
     val norms = centroids.map(ctr => math.sqrt(ctr.map(x => x * x).sum))
-    GraftBridge.column(NearestCentroids(
-      GraftBridge.expression(v), centroids, norms, k, tieLargerIdx))
+    require(centroids.nonEmpty && centroids.length == norms.length && k >= 1)
+    GraftBridge.staticCall(this, "topK", ArrayType(IntegerType, containsNull = false),
+      Seq(v, lit(k), lit(tieLargerIdx)), Seq(ArrayType(DoubleType), IntegerType, BooleanType),
+      refs = Seq(centroids, norms))
   }
 }

@@ -1,16 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a native codegen expression — the
-  * canonical-composition step of text cleaning (é as one codepoint, not
-  * e + combining acute), via the JDK's `java.text.Normalizer` (ICU-grade,
-  * in the standard library). Spark ships no normalization function, and a
-  * UDF here would sit in the hottest path of corpus cleaning.
+/** Unicode NFC normalization as a native kernel — the canonical-composition
+  * step of text cleaning (é as one codepoint, not e + combining acute),
+  * via the JDK's `java.text.Normalizer` (ICU-grade, in the standard
+  * library). Spark ships no normalization function, and a UDF here would
+  * sit in the hottest path of corpus cleaning.
   *
   * The fast path skips work entirely: `Normalizer.isNormalized` is O(n)
   * over a quick-check table and almost always true for real corpora
@@ -20,27 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Cross-engine note: DuckDB's `nfc_normalize` (utf8proc) implements the
   * same Unicode algorithm; outputs agree for all stable codepoints —
   * divergence would need characters newer than one engine's Unicode
-  * table, which the oracle corpus doesn't contain.
+  * table, which the oracle corpus doesn't contain. SpanBpeSpec's
+  * `normalize` test pins composition and the ASCII pass-through.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"NfcNormalize needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    NfcNormalize.nfc(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.nfc($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
   def nfc(u: UTF8String): UTF8String = {
     val s = u.toString
@@ -50,5 +30,5 @@ object NfcNormalize {
   }
 
   def apply(c: Column): Column =
-    GraftBridge.column(NfcNormalize(GraftBridge.expression(c)))
+    GraftBridge.staticCall(this, "nfc", StringType, Seq(c), Seq(StringType))
 }

@@ -1,40 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the cross-engine polynomial string hash:
-  * left fold of `h*31 + codepoint (mod 2^32)`, empty/null-safe.
+/** Native kernel for the cross-engine polynomial string hash: left fold of
+  * `h*31 + codepoint (mod 2^32)`, empty/null-safe.
   *
   * Bit-identical to the declarative form in `graft.text.TextHash.polyHash`
   * (aggregate over `ascii(substr(i,1))` — i.e., per-CODEPOINT, exactly what
   * the code below iterates) and to the DuckDB oracle's `list_reduce`, but
   * runs as a single generated loop per row instead of a per-character
   * higher-order-function chain — this is the hot inner loop of shingling,
-  * minhash, simhash and fingerprinting.
+  * minhash, simhash and fingerprinting. TextSpec pins the values.
   */
-case class PolyHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"PolyHash needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    PolyHash.hash(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PolyHash.hash($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
-}
-
 object PolyHash {
   private val M = (1L << 32) - 1 // mod 2^32 == mask since operands stay >= 0
 
@@ -52,5 +31,8 @@ object PolyHash {
     h
   }
 
-  def apply(c: Column): Column = GraftBridge.column(PolyHash(GraftBridge.expression(c)))
+  def hash(u: UTF8String): Long = hash(u.toString)
+
+  def apply(c: Column): Column =
+    GraftBridge.staticCall(this, "hash", LongType, Seq(c), Seq(StringType))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Product-quantization kernels at SCALE-SAFE plan size (the
   * [[NearestCentroids]] doctrine applied to PQ): the full codebook
@@ -102,52 +99,24 @@ object PqKernels {
   }
 }
 
-/** array<double> vector → array<int> PQ codes (one per subspace). */
-case class PqCodes(child: Expression, book: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  require(book.nonEmpty && book.forall(_.nonEmpty))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"PqCodes needs array<double>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    PqKernels.codes(v.asInstanceOf[ArrayData], book)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("pqbook", book, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PqKernels.codes($c, $bRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqCodes =
-    copy(child = newChild)
-}
-
-/** array<double> query vector → flat array<double> ADC LUT (m·nCodes). */
-case class PqLut(child: Expression, book: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  require(book.nonEmpty && book.forall(_.nonEmpty))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"PqLut needs array<double>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    PqKernels.lut(v.asInstanceOf[ArrayData], book)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("pqbook", book, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PqKernels.lut($c, $bRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqLut =
-    copy(child = newChild)
-}
-
+/** array<double> vector → array<int> PQ codes (one per subspace), via
+  * [[PqKernels.codes]] with the codebook as one reference object.
+  */
 object PqCodes {
-  def apply(v: Column, book: Array[Array[Array[Double]]]): Column =
-    GraftBridge.column(PqCodes(GraftBridge.expression(v), book))
+  def apply(v: Column, book: Array[Array[Array[Double]]]): Column = {
+    require(book.nonEmpty && book.forall(_.nonEmpty))
+    GraftBridge.staticCall(PqKernels, "codes", ArrayType(IntegerType, containsNull = false),
+      Seq(v), Seq(ArrayType(DoubleType)), refs = Seq(book))
+  }
 }
 
+/** array<double> query vector → flat array<double> ADC LUT (m·nCodes), via
+  * [[PqKernels.lut]] with the codebook as one reference object.
+  */
 object PqLut {
-  def apply(v: Column, book: Array[Array[Array[Double]]]): Column =
-    GraftBridge.column(PqLut(GraftBridge.expression(v), book))
+  def apply(v: Column, book: Array[Array[Array[Double]]]): Column = {
+    require(book.nonEmpty && book.forall(_.nonEmpty))
+    GraftBridge.staticCall(PqKernels, "lut", ArrayType(DoubleType, containsNull = false),
+      Seq(v), Seq(ArrayType(DoubleType)), refs = Seq(book))
+  }
 }

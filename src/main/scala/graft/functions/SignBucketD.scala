@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 /** Random-hyperplane sign bucket of a double vector in ONE generated pass
   * — the LSH bucketing projection of [[graft.ann.Ann.signBucket]]: bit p
@@ -21,28 +20,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * fold, whose `when(d > 0, …).otherwise(0)` then contributes 0 — the
   * kernel mirrors that (any-null → bucket 0, as does empty input).
   */
-case class SignBucketD(child: Expression, planes: Int) extends UnaryExpression {
-  require(planes >= 1 && planes <= 62, s"planes must be in [1,62], got $planes")
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"SignBucketD needs an array<double> input, got $dt")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    SignBucketD.bucket(v.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignBucketD.bucket($c, $planes);")
-
-  override protected def withNewChildInternal(newChild: Expression): SignBucketD =
-    copy(child = newChild)
-}
-
 object SignBucketD {
   private val M31 = (1L << 31) - 1 // mod 2^31 == mask since operands stay >= 0
   private val Scale = (1L << 31).toDouble
@@ -71,6 +48,9 @@ object SignBucketD {
     key
   }
 
-  def apply(c: Column, planes: Int): Column =
-    GraftBridge.column(SignBucketD(GraftBridge.expression(c), planes))
+  def apply(c: Column, planes: Int): Column = {
+    require(planes >= 1 && planes <= 62, s"planes must be in [1,62], got $planes")
+    GraftBridge.staticCall(this, "bucket", LongType, Seq(c, lit(planes)),
+      Seq(ArrayType(DoubleType), IntegerType))
+  }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 
 /** Wide SimHash over a token array, as `words` 32-bit signature parts.
   *
@@ -24,36 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Single generated loop per row (tokens × words × 32 votes) — the
   * declarative HOF form costs one array traversal PER BIT and was the
   * dominant cost of the 16-bit signature already. Bit-identical to the
-  * declarative fold (`TextHashSpec` pins it) and to the oracle SQL.
+  * declarative fold (SimHashSpec pins it) and to the oracle SQL.
   *
   * Scale: 64 bits (words=2) is the production width. The round-3 16-bit
   * signature had only 2^16 distinct values, so past ~10^7 docs every
   * banding bucket became a capped mega-bucket and recall collapsed; at 64
   * bits the signature space outgrows any realistic corpus.
   */
-case class SimHashParts(child: Expression, words: Int) extends UnaryExpression {
-  require(words >= 1 && words <= 8, s"words must be in [1,8], got $words")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"SimHashParts needs array<string> tokens, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    SimHashParts.parts(v.asInstanceOf[ArrayData], words)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHashParts.parts($c, $words);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashParts =
-    copy(child = newChild)
-}
-
 object SimHashParts {
 
   /** Second/third/... independent 32-bit hash derived from a 32-bit hash:
@@ -83,7 +59,7 @@ object SimHashParts {
     val n = toks.numElements()
     var t = 0
     while (t < n) {
-      var h = PolyHash.hash(toks.getUTF8String(t).toString)
+      var h = PolyHash.hash(toks.getUTF8String(t))
       var w = 0
       while (w < words) {
         val base = w * 32
@@ -112,6 +88,9 @@ object SimHashParts {
     new GenericArrayData(out)
   }
 
-  def apply(c: Column, words: Int): Column =
-    GraftBridge.column(SimHashParts(GraftBridge.expression(c), words))
+  def apply(c: Column, words: Int): Column = {
+    require(words >= 1 && words <= 8, s"words must be in [1,8], got $words")
+    GraftBridge.staticCall(this, "parts", ArrayType(LongType, containsNull = false),
+      Seq(c, lit(words)), Seq(ArrayType(StringType), IntegerType))
+  }
 }

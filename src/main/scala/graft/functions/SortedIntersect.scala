@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** |A ∩ B| for two SORTED long arrays, via a zero-allocation merge scan —
   * the verification kernel of the jaccard/minhash dedup joins.
@@ -13,23 +11,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * pair verification that is one allocation-heavy set per PAIR. With both
   * sides sorted once per document (amortized over all its pairs), the
   * intersection count is a single O(|A|+|B|) pointer walk.
+  * KernelParitySpec pins it against `size(array_intersect(a, b))`.
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SortedIntersectCount.count($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
 object SortedIntersectCount {
   /** merge count over sorted (ascending, distinct) long arrays. */
   def count(a: ArrayData, b: ArrayData): Int = {
@@ -45,6 +28,6 @@ object SortedIntersectCount {
   }
 
   def apply(a: Column, b: Column): Column =
-    GraftBridge.column(SortedIntersectCount(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+    GraftBridge.staticCall(this, "count", IntegerType, Seq(a, b),
+      Seq(ArrayType(LongType), ArrayType(LongType)))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Sorted distinct character-n-gram polynomial hashes in ONE generated
@@ -22,33 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * then deduping produces the same distinct-hash set as deduping
   * substrings first (hash collisions between distinct substrings merge
   * identically either way), and the DuckDB oracle's
-  * `OracleSqlGen.shingleHashes` computes the same values — TextSpec pins
-  * the parity. Null text → null; shorter than n → empty.
+  * `OracleSqlGen.shingleHashes` computes the same values — Round4Spec
+  * pins the parity. Null text → null; shorter than n → empty.
   */
-case class SortedShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"SortedShingleHashes needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    SortedShingleHashes.hashes(v.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SortedShingleHashes.hashes($c.toString(), $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): SortedShingleHashes =
-    copy(child = newChild)
-}
-
 object SortedShingleHashes {
   private val M = (1L << 32) - 1 // mod 2^32 == mask since operands stay >= 0
 
-  def hashes(s: String, n: Int): GenericArrayData = {
+  def hashes(u: UTF8String, n: Int): GenericArrayData = {
+    val s = u.toString
     // decode codepoints once (substr/polyHash semantics are per-codepoint)
     var len = 0
     var i = 0
@@ -82,6 +62,9 @@ object SortedShingleHashes {
     new GenericArrayData(java.util.Arrays.copyOf(hs, out))
   }
 
-  def apply(c: Column, n: Int): Column =
-    GraftBridge.column(SortedShingleHashes(GraftBridge.expression(c), n))
+  def apply(c: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    GraftBridge.staticCall(this, "hashes", ArrayType(LongType, containsNull = false),
+      Seq(c, lit(n)), Seq(StringType, IntegerType))
+  }
 }

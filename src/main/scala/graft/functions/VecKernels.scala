@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Left-fold dot product of two double arrays in ONE generated loop — the
   * inner kernel of every cosine in the ANN/dedup suite.
@@ -12,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Exactly the declarative `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)`:
   * the loop accumulates `acc = acc + a(i) * b(i)` in index order, which is
   * the identical IEEE-754 operation sequence — bit-for-bit equal output
-  * (AnnSpec pins the parity). Null/semantics parity with the HOF form:
+  * (Round6Spec pins the parity). Null/semantics parity with the HOF form:
   * mismatched lengths or any null element make `zip_with`'s product null,
   * which nulls the whole fold — so this kernel returns null for those too.
   *
@@ -22,41 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * embedding near-dup / semantic dedup / brute top-k that is the dominant
   * per-pair cost at production dims.
   */
-case class DotProductD(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"DotProductD needs two array<double> inputs, got ${left.dataType}, ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotProductD.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val res = nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""java.lang.Double r = graft.functions.DotProductD.dot($a, $b);
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-         |""".stripMargin
-    })
-    res
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductD =
-    copy(left = newLeft, right = newRight)
-}
-
 object DotProductD {
-  /** Boxed so codegen/eval can signal the null cases (length mismatch or a
+  /** Boxed so the call can signal the null cases (length mismatch or a
     * null element — the zip_with parity rules).
     */
   def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
@@ -73,5 +38,6 @@ object DotProductD {
   }
 
   def apply(a: Column, b: Column): Column =
-    GraftBridge.column(DotProductD(GraftBridge.expression(a), GraftBridge.expression(b)))
+    GraftBridge.staticCall(this, "dot", DoubleType, Seq(a, b),
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), returnsNull = true)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Rolling k-window polynomial hashes over a token-hash array in ONE
   * generated pass — the kernel behind [[graft.text.Spans]]' duplicate-span
@@ -19,36 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * nothing observable but costs a mod-inverse trick not worth the
   * spelling risk); what the kernel removes is the per-window allocation
   * and lambda dispatch. Value-identical to the declarative twin
-  * (TextSpec pins it). Fewer than k tokens → empty array; a null token
+  * (Round6Spec pins it). Fewer than k tokens → empty array; a null token
   * hash → null result (HOF parity).
   */
-case class WindowHashes(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 2, s"window size k must be >= 2, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"WindowHashes needs an array<long> input, got $dt")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    WindowHashes.roll(v.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""org.apache.spark.sql.catalyst.util.GenericArrayData r =
-         |  graft.functions.WindowHashes.roll($c, $k);
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
 object WindowHashes {
   private val M = (1L << 32) - 1 // mod 2^32 == mask since operands stay >= 0
 
@@ -75,6 +47,9 @@ object WindowHashes {
     new GenericArrayData(out)
   }
 
-  def apply(c: Column, k: Int): Column =
-    GraftBridge.column(WindowHashes(GraftBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column = {
+    require(k >= 2, s"window size k must be >= 2, got $k")
+    GraftBridge.staticCall(this, "roll", ArrayType(LongType, containsNull = false),
+      Seq(c, lit(k)), Seq(ArrayType(LongType), IntegerType), returnsNull = true)
+  }
 }

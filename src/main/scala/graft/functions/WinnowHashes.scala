@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MOSS winnowing fingerprints in ONE generated pass — the native kernel
@@ -18,36 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * all interpreted per row. Here: decode codepoints once, roll hashes with
   * no allocation, take window minima with a monotonic deque (O(grams)
   * total, not O(grams·w)), sort + dedupe in place. Value-identical to the
-  * declarative twin (TextSpec pins it); fewer than `w` k-grams → one
+  * declarative twin (Round6Spec pins it); fewer than `w` k-grams → one
   * fingerprint (the global minimum, the paper's boundary rule); shorter
   * than k → empty array.
   */
-case class WinnowHashes(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  require(k >= 2, s"k-gram size must be >= 2, got $k")
-  require(w >= 1, s"window must be >= 1, got $w")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"WinnowHashes needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    WinnowHashes.winnow(v.asInstanceOf[UTF8String].toString, k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowHashes.winnow($c.toString(), $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowHashes =
-    copy(child = newChild)
-}
-
 object WinnowHashes {
   private val M = (1L << 32) - 1 // mod 2^32 == mask since operands stay >= 0
 
-  def winnow(s: String, k: Int, w: Int): GenericArrayData = {
+  def winnow(u: UTF8String, k: Int, w: Int): GenericArrayData = {
+    val s = u.toString
     // decode codepoints once (substr/polyHash semantics are per-codepoint)
     var len = 0
     var i = 0
@@ -102,6 +80,10 @@ object WinnowHashes {
     new GenericArrayData(java.util.Arrays.copyOf(sel, out))
   }
 
-  def apply(c: Column, k: Int, w: Int): Column =
-    GraftBridge.column(WinnowHashes(GraftBridge.expression(c), k, w))
+  def apply(c: Column, k: Int, w: Int): Column = {
+    require(k >= 2, s"k-gram size must be >= 2, got $k")
+    require(w >= 1, s"window must be >= 1, got $w")
+    GraftBridge.staticCall(this, "winnow", ArrayType(LongType, containsNull = false),
+      Seq(c, lit(k), lit(w)), Seq(StringType, IntegerType, IntegerType))
+  }
 }

@@ -169,7 +169,7 @@ object Ego {
     *  - ordering: ASCENDING argsort by the chosen score, exactly like the
     *    reference (ego.py:106-115) — best-last.
     *
-    * Φ comes from the native codegen [[graft.functions.Erf]] expression, so
+    * Φ comes from the native [[graft.functions.Erf]] kernel, so
     * the whole acquisition stays inside whole-stage codegen.
     */
   def egoSearch(

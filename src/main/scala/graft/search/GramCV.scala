@@ -1,6 +1,6 @@
 package graft.search
 
-import breeze.linalg.{DenseMatrix, DenseVector, inv}
+import breeze.linalg.{DenseMatrix, DenseVector, MatrixSingularException, inv}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,9 @@ final case class FoldGrams(
     * test = fold), mean over folds. Mirrors calculate_cv_score
     * (scores.py:157-277) with shuffle=False determinism. `ridge` > 0 turns
     * the fit into ridge regression on the same Grams — the "different base
-    * estimator" axis that multi-model UGS/SUM compose over.
+    * estimator" axis that multi-model UGS/SUM compose over. A singular
+    * train Gram (collinear subset) scores `Scoring.worst`; any other error
+    * propagates.
     */
   def cvR2(subset: Seq[Int], ridge: Double = 0.0): Double = {
     val scores = folds.map { test =>
@@ -39,7 +41,7 @@ final case class FoldGrams(
       try {
         val beta = GramCV.solve(train, subset, ridge)
         GramCV.r2(test, subset, beta)
-      } catch { case _: Throwable => Scoring.worst }
+      } catch { case _: MatrixSingularException => Scoring.worst }
     }
     val s = scores.sum / scores.length
     if (s.isNaN) Scoring.worst else s
@@ -48,7 +50,7 @@ final case class FoldGrams(
   /** In-sample R² on all data (refit path, scores.py:271-275). */
   def fitR2(subset: Seq[Int]): Double =
     try GramCV.r2(total, subset, GramCV.solve(total, subset))
-    catch { case _: Throwable => Scoring.worst }
+    catch { case _: MatrixSingularException => Scoring.worst }
 
   def coefficients(subset: Seq[Int]): DenseVector[Double] =
     GramCV.solve(total, subset)

@@ -115,6 +115,31 @@ object Dedup {
     case _ => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
   }
 
+  /** The min-root union-find both driver finishes of [[resolveClusters]]
+    * close their graph with: `find` compresses paths, and `union` hangs
+    * the [[minLess]]-larger root under the smaller, so every component's
+    * root is its minimum id — the label min-propagation converges to.
+    */
+  private final class MinRootUnionFind {
+    private val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+
+    def union(a: Any, b: Any): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (minLess(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+
+    /** Every id hung under another root — `find` of each is not itself. */
+    def nonRoots: Seq[Any] = parent.keys.toSeq
+  }
+
   def resolveClusters(
       pairs: DataFrame,
       idA: String = "id_a",
@@ -156,21 +181,12 @@ object Dedup {
     if (driverFinishEdges > 0) {
       val sample = raw.limit(2 * driverFinishEdges + 1).collect()
       if (sample.length <= 2 * driverFinishEdges) {
-        val less = minLess _
-        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
+        val uf = new MinRootUnionFind
         val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
         sample.foreach { e =>
           val (a, b) = (e.get(0), e.get(1))
           nodes += a; nodes += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+          uf.union(a, b)
         }
         if (sys.env.contains("GRAFT_DEBUG_CC"))
           System.err.println(
@@ -180,7 +196,7 @@ object Dedup {
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id", dt),
           org.apache.spark.sql.types.StructField("cluster_id", dt)))
-        val rows = nodes.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
+        val rows = nodes.toSeq.map(n => org.apache.spark.sql.Row(n, uf.find(n)))
         lastCcRounds = 0
         lastCcDriverFinished = true
         return spark.createDataFrame(
@@ -222,24 +238,9 @@ object Dedup {
       val active = cross.unionByName(chains).distinct()
         .limit(driverFinishEdges + 1).collect()
       if (active.length > driverFinishEdges) { finishAttempts -= 1; return false }
-      val less = minLess _
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      active.foreach { e =>
-        val (rx, ry) = (find(e.get(0)), find(e.get(1)))
-        if (rx != ry) {
-          if (less(rx, ry)) parent(ry) = rx else parent(rx) = ry
-        }
-      }
-      val corr = parent.keys.toSeq.map(l => (l, find(l)))
-        .filter { case (l, r) => l != r }
-        .map { case (l, r) => org.apache.spark.sql.Row(l, r) }
+      val uf = new MinRootUnionFind
+      active.foreach(e => uf.union(e.get(0), e.get(1)))
+      val corr = uf.nonRoots.map(l => org.apache.spark.sql.Row(l, uf.find(l)))
       if (sys.env.contains("GRAFT_DEBUG_CC"))
         System.err.println(
           s"[cc] driver finish: active=${active.length} corrections=${corr.size}")
@@ -1059,8 +1060,9 @@ object Dedup {
     * as the input row. Shuffles carry lines and id-pairs, never quadratic
     * combinations.
     *
-    * Returns (id, n_lines, n_kept, clean_text); a fully-boilerplate doc
-    * keeps an empty string.
+    * Returns (id, n_lines, n_kept, clean_text), one row per input doc; a
+    * fully-boilerplate doc keeps an empty string, and a null-text doc comes
+    * out as (id, null, 0, "").
     */
   def lineDedup(
       df: DataFrame,
@@ -1075,17 +1077,22 @@ object Dedup {
     // corpus scan is the cost that counts — VERDICT r5 task #7). n_lines
     // rides the exploded rows as one long; split() never returns an empty
     // array (empty text → [""]), so every doc keeps >= 1 exploded row and
-    // the n_lines frame below covers all ids.
+    // the n_lines frame below covers all ids. Null text explodes as one ""
+    // line with a null n_lines, and both counts below count n_lines, not
+    // rows, so that line neither votes for "" as boilerplate nor counts as
+    // kept: a null-text doc comes out (id, null, 0, ""). (An outer explode
+    // would make `line` nullable and add an isnotnull filter to the plan.)
     val lines = materialize(
       df.select(col(idCol).as("id"), split(col(textCol), "\n").as("__ls"))
         .select(col("id"), size(col("__ls")).cast("long").as("n_lines"),
-          posexplode(col("__ls")).as(Seq("pos", "line"))))
-    val freq = lines.select(col("id"), col("line")).distinct()
-      .groupBy(col("line")).agg(count(lit(1)).as("__df"))
+          posexplode(coalesce(col("__ls"), array(lit(""))))
+            .as(Seq("pos", "line"))))
+    val freq = lines.select(col("id"), col("line"), col("n_lines")).distinct()
+      .groupBy(col("line")).agg(count(col("n_lines")).as("__df"))
     val boiler = freq.where(col("__df") >= minDocFreq).select(col("line"))
     val kept = lines.join(boiler, Seq("line"), "left_anti")
     val reassembled = kept.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_kept"),
+      .agg(count(col("n_lines")).as("n_kept"),
         concat_ws("\n",
           transform(array_sort(collect_list(struct(col("pos"), col("line")))),
             s => s.getField("line"))).as("clean_text"))

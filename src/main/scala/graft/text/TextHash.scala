@@ -16,7 +16,7 @@ object TextHash {
 
   /** Polynomial rolling hash of a string: left fold of h*31 + codepoint
     * (mod 2^32), identical fold order in the SQL oracle's `list_reduce`.
-    * Implemented as a native Catalyst expression with codegen
+    * Implemented as a native kernel
     * ([[graft.functions.PolyHash]]) — one generated loop per row instead of
     * a per-character higher-order-function chain. Empty/null hash to 0.
     */

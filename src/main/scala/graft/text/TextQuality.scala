@@ -132,7 +132,7 @@ object TextQuality {
     "[\\x00-\\x08\\x0B-\\x1F\\x7F]|\\x{200B}|\\x{200C}|\\x{200D}|\\x{FEFF}"
 
   /** Text normalization — the first gate of every cleaning pipeline
-    * (ftfy-lite): Unicode NFC composition (native codegen expression,
+    * (ftfy-lite): Unicode NFC composition (native kernel,
     * [[graft.functions.NfcNormalize]] — the JDK normalizer with an
     * isNormalized fast path), control/zero-width stripping, whitespace-run
     * collapse, trim. Pure per-row projection — normalizes at scan speed;

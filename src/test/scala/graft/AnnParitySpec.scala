@@ -17,24 +17,28 @@ class AnnParitySpec extends GraftSuite {
     .collect().map(_.getSeq[Double](1).toArray)
 
   test("assignment parity: native kernel == literal expressions at nList=128") {
-    val lit128 = Ann.assignCentroidLiteral(vecs, centroids128)
-      .select(col("cid"), col("__list"))
-    val nat128 = vecs.withColumn("__list",
-      element_at(graft.functions.NearestCentroids(
-        col("cv"), centroids128, 1, tieLargerIdx = false), 1))
-      .select(col("cid"), col("__list").as("__nlist"))
-    val diff = lit128.join(nat128, Seq("cid"))
-      .where(col("__list") =!= col("__nlist")).count()
-    assert(diff == 0, s"$diff of ${vecs.count()} assignments diverge")
+    inBothModes {
+      val lit128 = Ann.assignCentroidLiteral(vecs, centroids128)
+        .select(col("cid"), col("__list"))
+      val nat128 = vecs.withColumn("__list",
+        element_at(graft.functions.NearestCentroids(
+          col("cv"), centroids128, 1, tieLargerIdx = false), 1))
+        .select(col("cid"), col("__list").as("__nlist"))
+      val diff = lit128.join(nat128, Seq("cid"))
+        .where(col("__list") =!= col("__nlist")).count()
+      assert(diff == 0, s"$diff of ${vecs.count()} assignments diverge")
+    }
   }
 
   test("probe parity: native top-nProbe == literal reverse(array_sort) at nList=128") {
-    val q = vecs.where(col("cid") < 50).select(col("cid"), col("cv").as("qv"))
-    val both = q.select(col("cid"),
-      Ann.probeListsLiteral(col("qv"), centroids128, 4).as("lit"),
-      graft.functions.NearestCentroids(col("qv"), centroids128, 4,
-        tieLargerIdx = true).as("nat"))
-    assert(both.where(col("lit") =!= col("nat")).count() == 0)
+    inBothModes {
+      val q = vecs.where(col("cid") < 50).select(col("cid"), col("cv").as("qv"))
+      val both = q.select(col("cid"),
+        Ann.probeListsLiteral(col("qv"), centroids128, 4).as("lit"),
+        graft.functions.NearestCentroids(col("qv"), centroids128, 4,
+          tieLargerIdx = true).as("nat"))
+      assert(both.where(col("lit") =!= col("nat")).count() == 0)
+    }
   }
 
   test("native assignment plan: pure projection — no join, no exchange, constant size") {
@@ -49,22 +53,24 @@ class AnnParitySpec extends GraftSuite {
   }
 
   test("PQ parity: kernel codes/LUT == literal expressions above the codeword ceiling") {
-    // m=4 × nCodes=32 = 128 codewords > literalMaxCodewords → kernel path;
-    // force the literal path on the same model and demand bit-identity
-    val corpus = vecs.select(col("cid"), col("cv").as("vec"))
-    val pq = Ann.pqTrain(corpus, m = 4, nCodes = 32, iterations = 0)
-    assert(pq.m * pq.nCodes > Ann.literalMaxCodewords)
-    val litCodes = Ann.pqEncodeLiteral(vecs, pq)
-      .select(col("cid"), col("__codes").as("lit"))
-    val natCodes = vecs
-      .withColumn("nat", graft.functions.PqCodes(col("cv"), pq.books))
-      .select(col("cid"), col("nat"))
-    assert(litCodes.join(natCodes, Seq("cid"))
-      .where(col("lit") =!= col("nat")).count() == 0, "encode paths diverge")
-    val luts = vecs.where(col("cid") < 50).select(col("cid"),
-      Ann.pqLutLiteral(col("cv"), pq).as("lit"),
-      graft.functions.PqLut(col("cv"), pq.books).as("nat"))
-    assert(luts.where(col("lit") =!= col("nat")).count() == 0, "LUT paths diverge")
+    inBothModes {
+      // m=4 × nCodes=32 = 128 codewords > literalMaxCodewords → kernel path;
+      // force the literal path on the same model and demand bit-identity
+      val corpus = vecs.select(col("cid"), col("cv").as("vec"))
+      val pq = Ann.pqTrain(corpus, m = 4, nCodes = 32, iterations = 0)
+      assert(pq.m * pq.nCodes > Ann.literalMaxCodewords)
+      val litCodes = Ann.pqEncodeLiteral(vecs, pq)
+        .select(col("cid"), col("__codes").as("lit"))
+      val natCodes = vecs
+        .withColumn("nat", graft.functions.PqCodes(col("cv"), pq.books))
+        .select(col("cid"), col("nat"))
+      assert(litCodes.join(natCodes, Seq("cid"))
+        .where(col("lit") =!= col("nat")).count() == 0, "encode paths diverge")
+      val luts = vecs.where(col("cid") < 50).select(col("cid"),
+        Ann.pqLutLiteral(col("cv"), pq).as("lit"),
+        graft.functions.PqLut(col("cv"), pq.books).as("nat"))
+      assert(luts.where(col("lit") =!= col("nat")).count() == 0, "LUT paths diverge")
+    }
   }
 
   test("PQ encode plan: pure projection, codebook not inlined as literals") {

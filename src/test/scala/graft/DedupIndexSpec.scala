@@ -44,13 +44,13 @@ class DedupIndexSpec extends GraftSuite {
 
   test("a sketch past the session's bloom_filter_agg caps fails instead of clamping") {
     val items = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val before = spark.conf.get(items)
     val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(50)
-    spark.conf.set(items, "10")
-    val e = try intercept[IllegalArgumentException] {
-      Dedup.writeIndex(docs, "doc_id", "text", col("lang"), 3,
-        freshRoot("/tmp/dedup_index_cap_spec"), nBuckets = 4, bloomFpp = Some(0.03))
-    } finally spark.conf.set(items, before)
+    val e = withConf(items -> "10") {
+      intercept[IllegalArgumentException] {
+        Dedup.writeIndex(docs, "doc_id", "text", col("lang"), 3,
+          freshRoot("/tmp/dedup_index_cap_spec"), nBuckets = 4, bloomFpp = Some(0.03))
+      }
+    }
     assert(e.getMessage.contains(items) &&
       e.getMessage.contains("spark.sql.optimizer.runtime.bloomFilter.maxNumBits"), e.getMessage)
   }

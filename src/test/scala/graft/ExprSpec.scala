@@ -89,6 +89,22 @@ class ExprSpec extends GraftSuite {
     assert(ranked.head.subset == Seq(0, 1))
   }
 
+  test("GramCV: a singular subset scores worst; any other error propagates") {
+    // z0 and z1 are two identical never-firing columns: every Gram over
+    // them is exactly singular. (Identical NON-zero columns are only
+    // numerically singular — LU rounding leaves a tiny pivot, and breeze
+    // solves instead of throwing.)
+    val df = (1 to 60).map(i => (i.toLong, i.toDouble, 0.0, 0.0, 2.0 * i + (i % 7)))
+      .toDF("id", "x0", "z0", "z1", "y")
+    val grams = GramCV.fit(df, Seq("x0", "z0", "z1"), "y", 3, Seq(col("id")))
+    assert(grams.cvR2(Seq(1, 2)) == Scoring.worst)
+    assert(grams.fitR2(Seq(1, 2)) == Scoring.worst)
+    assert(grams.cvR2(Seq(0)) > 0.9)
+    // a feature index past the Gram is a caller bug, not a bad subset
+    intercept[IndexOutOfBoundsException](grams.cvR2(Seq(7)))
+    intercept[IndexOutOfBoundsException](grams.fitR2(Seq(7)))
+  }
+
   test("selection suite: corr filter, backforward, GA find the signal") {
     val rnd = new Random(11)
     val rows = (1 to 300).map { i =>
@@ -145,27 +161,29 @@ class ExprSpec extends GraftSuite {
   }
 
   test("egoSearch: single-objective EGO/KG/MaxP acquisitions (ego.py:37-117)") {
-    import breeze.linalg.DenseVector
-    val model = Ego.Model(Array(
-      DenseVector(1.0, 0.0), DenseVector(1.2, 0.1),
-      DenseVector(0.8, -0.1), DenseVector(1.0, 0.2)), Seq("x"))
-    val space = Seq(0.0, 1.0, 2.0).toDF("x")
-    val r = Ego.egoSearch(space, model, yMax = 1.5, rankway = "ego").collect()
-    // ASCENDING argsort by ei_ego (reference order, ego.py:106-110)
-    assert(r.map(_.getAs[Double]("x")).toSeq == Seq(0.0, 1.0, 2.0))
-    // expected values computed independently with exact math.erf
-    val top = r.last
-    assert(approx(top.getAs[Double]("pred_mean"), 2.05, 1e-9))
-    assert(approx(top.getAs[Double]("pred_std"), 0.3640054944640263, 1e-9))
-    assert(approx(top.getAs[Double]("ei_ego"), 0.560403975026175, 1e-5))
-    assert(approx(top.getAs[Double]("ei_kg"), 0.14521718204012973, 1e-5))
-    assert(approx(top.getAs[Double]("max_p"), 0.06932464389460541, 1e-5))
-    assert(approx(r(1).getAs[Double]("ei_ego"), 0.002141554512412297, 1e-5))
-    // the codegen erf kernel against exact reference values
-    import graft.functions.MathX
-    assert(math.abs(MathX.erf(0.5) - 0.5204998778130465) < 2e-7)
-    assert(math.abs(MathX.normCdf(1.0) - 0.8413447460685429) < 2e-7)
-    assert(math.abs(MathX.normCdf(-1.0) - 0.15865525393145705) < 2e-7)
+    inBothModes {
+      import breeze.linalg.DenseVector
+      val model = Ego.Model(Array(
+        DenseVector(1.0, 0.0), DenseVector(1.2, 0.1),
+        DenseVector(0.8, -0.1), DenseVector(1.0, 0.2)), Seq("x"))
+      val space = Seq(0.0, 1.0, 2.0).toDF("x")
+      val r = Ego.egoSearch(space, model, yMax = 1.5, rankway = "ego").collect()
+      // ASCENDING argsort by ei_ego (reference order, ego.py:106-110)
+      assert(r.map(_.getAs[Double]("x")).toSeq == Seq(0.0, 1.0, 2.0))
+      // expected values computed independently with exact math.erf
+      val top = r.last
+      assert(approx(top.getAs[Double]("pred_mean"), 2.05, 1e-9))
+      assert(approx(top.getAs[Double]("pred_std"), 0.3640054944640263, 1e-9))
+      assert(approx(top.getAs[Double]("ei_ego"), 0.560403975026175, 1e-5))
+      assert(approx(top.getAs[Double]("ei_kg"), 0.14521718204012973, 1e-5))
+      assert(approx(top.getAs[Double]("max_p"), 0.06932464389460541, 1e-5))
+      assert(approx(r(1).getAs[Double]("ei_ego"), 0.002141554512412297, 1e-5))
+      // the codegen erf kernel against exact reference values
+      import graft.functions.MathX
+      assert(math.abs(MathX.erf(0.5) - 0.5204998778130465) < 2e-7)
+      assert(math.abs(MathX.normCdf(1.0) - 0.8413447460685429) < 2e-7)
+      assert(math.abs(MathX.normCdf(-1.0) - 0.15865525393145705) < 2e-7)
+    }
   }
 
   test("DimPolicy: the five score_dim modes (scores.py:280-301)") {

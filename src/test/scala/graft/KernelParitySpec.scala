@@ -33,19 +33,21 @@ class KernelParitySpec extends GraftSuite {
     val df = rows.map(Tuple1(_)).toDF("sh")
     // (numHashes, bands): the bench runs only (8, 4)
     val params = Seq((1, 1), (3, 3), (6, 2), (10, 5), (16, 1), (24, 8))
-    val got = df.select(params.flatMap { case (h, b) => Seq(
-      MinhashBandKeys(col("sh"), h, b),
-      TextHash.bandKeys(TextHash.minhashSig(col("sh"), h), b, h / b))
-    }: _*).collect()
-    for ((r, i) <- got.zipWithIndex; ((h, b), p) <- params.zipWithIndex) {
-      val (nat, dec) = (r.getSeq[Any](2 * p), r.getSeq[Any](2 * p + 1))
-      assert(nat === dec, s"numHashes=$h bands=$b sh=${rows(i)}")
+    inBothModes {
+      val got = df.select(params.flatMap { case (h, b) => Seq(
+        MinhashBandKeys(col("sh"), h, b),
+        TextHash.bandKeys(TextHash.minhashSig(col("sh"), h), b, h / b))
+      }: _*).collect()
+      for ((r, i) <- got.zipWithIndex; ((h, b), p) <- params.zipWithIndex) {
+        val (nat, dec) = (r.getSeq[Any](2 * p), r.getSeq[Any](2 * p + 1))
+        assert(nat === dec, s"numHashes=$h bands=$b sh=${rows(i)}")
+      }
+      // null elements are skipped, not read as hash 0
+      val skip = Seq(Seq(Some(5L), None)).toDF("sh").select(
+        MinhashBandKeys(col("sh"), 4, 2), MinhashBandKeys(array(lit(5L)), 4, 2))
+        .head()
+      assert(skip.getSeq[Long](0) === skip.getSeq[Long](1))
     }
-    // null elements are skipped, not read as hash 0
-    val skip = Seq(Seq(Some(5L), None)).toDF("sh").select(
-      MinhashBandKeys(col("sh"), 4, 2), MinhashBandKeys(array(lit(5L)), 4, 2))
-      .head()
-    assert(skip.getSeq[Long](0) === skip.getSeq[Long](1))
   }
 
   test("SignBucketD == zip_with/aggregate sign fold over generated vectors") {
@@ -58,13 +60,47 @@ class KernelParitySpec extends GraftSuite {
     val df = rows.map(Tuple1(_)).toDF("v")
     // the bench runs only 4 and 6 planes
     val planes = Seq(1, 2, 13, 31, 62)
-    val got = df.select(planes.flatMap(p => Seq(
-      graft.functions.SignBucketD(col("v"), p),
-      Ann.signBucketDeclarative(col("v"), p))): _*).collect()
-    for ((r, i) <- got.zipWithIndex; (p, j) <- planes.zipWithIndex)
-      assert(r.getLong(2 * j) === r.getLong(2 * j + 1),
-        s"planes=$p v=${rows(i)}")
-    assert(got.exists(_.getLong(2 * planes.indexOf(62)) > (1L << 40)),
-      "no draw set a high bit: the 62-plane case was not exercised")
+    inBothModes {
+      val got = df.select(planes.flatMap(p => Seq(
+        graft.functions.SignBucketD(col("v"), p),
+        Ann.signBucketDeclarative(col("v"), p))): _*).collect()
+      for ((r, i) <- got.zipWithIndex; (p, j) <- planes.zipWithIndex)
+        assert(r.getLong(2 * j) === r.getLong(2 * j + 1),
+          s"planes=$p v=${rows(i)}")
+      assert(got.exists(_.getLong(2 * planes.indexOf(62)) > (1L << 40)),
+        "no draw set a high bit: the 62-plane case was not exercised")
+    }
+  }
+
+  test("SortedIntersectCount == size(array_intersect) over sorted distinct arrays") {
+    import graft.functions.SortedIntersectCount
+    // a narrow value range so generated pairs share elements
+    val set = Gen.listOf(Gen.choose(-30L, 30L)).map(_.distinct.sorted)
+    val rows = draws(Gen.zip(set, set), 300) ++ Seq(
+      (Nil, Nil), (Nil, List(1L)), (List(1L), Nil), (List(4L), List(4L)),
+      (List(Long.MinValue, 0L, Long.MaxValue), List(Long.MinValue, Long.MaxValue)))
+    val df = rows.toDF("a", "b")
+    inBothModes {
+      val got = df.select(SortedIntersectCount(col("a"), col("b")),
+        size(array_intersect(col("a"), col("b")))).collect()
+      for ((r, i) <- got.zipWithIndex)
+        assert(r.getInt(0) === r.getInt(1), s"(a, b) = ${rows(i)}")
+      assert(got.exists(_.getInt(0) >= 3), "no draw shared three elements")
+      // a null side is a null count, never a call
+      val n = Seq((Seq(1L), null.asInstanceOf[Seq[Long]])).toDF("a", "b")
+        .select(SortedIntersectCount(col("a"), col("b"))).head()
+      assert(n.isNullAt(0))
+      // hand value: {1, 3, 9} ∩ {3, 9, 11} = {3, 9}
+      assert(spark.range(1).select(SortedIntersectCount(
+        array(lit(1L), lit(3L), lit(9L)), array(lit(3L), lit(9L), lit(11L))))
+        .head().getInt(0) == 2)
+    }
+  }
+
+  test("a kernel over a column Spark cannot cast to its input type fails at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(Seq(1L, 2L)).toDF("a").select(graft.functions.PolyHash(col("a")))
+    }
+    assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
   }
 }

@@ -174,10 +174,8 @@ class PlanAuditSpec extends GraftSuite {
     val b = (0 until 200).map(i => (s"c${i % 50}", i * 2.0)).toDF("conv_id", "y")
     graft.sources.Bucketed.write(a, "audit_bkt_a", buckets = 8, Seq("conv_id"))
     graft.sources.Bucketed.write(b, "audit_bkt_b", buckets = 8, Seq("conv_id"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      // disable broadcast so the co-location property itself is what's tested
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // disable broadcast so the co-location property itself is what's tested
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = graft.sources.Bucketed.read(spark, "audit_bkt_a")
         .join(graft.sources.Bucketed.read(spark, "audit_bkt_b"), "conv_id")
       j.collect() // finalize the adaptive plan
@@ -186,7 +184,6 @@ class PlanAuditSpec extends GraftSuite {
       assert(!p.contains("Exchange"),
         s"bucketed join must not shuffle either side:\n$p")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS audit_bkt_a")
       spark.sql("DROP TABLE IF EXISTS audit_bkt_b")
     }

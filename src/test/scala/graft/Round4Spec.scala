@@ -138,32 +138,53 @@ class Round4Spec extends GraftSuite {
     assert(none.where(col("n_kept") =!= col("n_lines")).count() == 0)
   }
 
+  test("lineDedup: a null-text doc is kept as (id, null, 0, \"\")") {
+    import graft.text.Dedup
+    val docs = Seq[(Long, String)]((1L, "a\nb"), (2L, null), (3L, "")).toDF("id", "text")
+    val out = Dedup.lineDedup(docs, "id", "text", minDocFreq = 5L).collect()
+      .map(r => r.getLong(0) -> ((if (r.isNullAt(1)) None else Some(r.getLong(1)),
+        r.getLong(2), r.getString(3)))).toMap
+    assert(out.size == 3)
+    assert(out(1L) == ((Some(2L), 2L, "a\nb")))
+    assert(out(2L) == ((None, 0L, "")), "null text must not drop the doc")
+    assert(out(3L) == ((Some(1L), 1L, "")))
+    // null-text docs do not vote: "" is in one real doc, below the bar of 2
+    val two = Dedup.lineDedup(docs.unionByName(Seq[(Long, String)]((4L, null))
+        .toDF("id", "text")), "id", "text", minDocFreq = 2L)
+      .where(col("id") >= 3L).collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(two == Map(3L -> 1L, 4L -> 0L))
+  }
+
   test("sortedShingleHashes native == array_sort(declarative) over the real corpus + edges") {
-    import graft.text.TextHash
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
-      .select(col("text"))
-      .unionByName(Seq("", "ab", "abc", "aaaaaa", "héllo wörld", "日本語テキスト")
-        .toDF("text"))
-    Seq(2, 3, 5).foreach { n =>
-      val diff = docs.select(
-        TextHash.sortedShingleHashes(col("text"), n).as("nat"),
-        array_sort(TextHash.shingleHashes(col("text"), n)).as("decl"))
-        .where(col("nat") =!= col("decl")).count()
-      assert(diff == 0, s"n=$n: native shingle kernel must match the declarative form")
+    inBothModes {
+      import graft.text.TextHash
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
+        .select(col("text"))
+        .unionByName(Seq("", "ab", "abc", "aaaaaa", "héllo wörld", "日本語テキスト")
+          .toDF("text"))
+      Seq(2, 3, 5).foreach { n =>
+        val diff = docs.select(
+          TextHash.sortedShingleHashes(col("text"), n).as("nat"),
+          array_sort(TextHash.shingleHashes(col("text"), n)).as("decl"))
+          .where(col("nat") =!= col("decl")).count()
+        assert(diff == 0, s"n=$n: native shingle kernel must match the declarative form")
+      }
     }
   }
 
   test("charEntropy native == declarative fold over the real corpus + unicode") {
-    import graft.text.TextQuality
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
-      .select(col("text"))
-      .unionByName(Seq("héllo wörld", "日本語テキスト", "ab\nc", "ab" * 500)
-        .toDF("text"))
-    val diff = docs.select(
-      TextQuality.charEntropy(col("text")).as("nat"),
-      TextQuality.charEntropyDeclarative(col("text")).as("decl"))
-      .where(col("nat") =!= col("decl")).count()
-    assert(diff == 0, "native entropy must be bit-identical to the fold")
+    inBothModes {
+      import graft.text.TextQuality
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
+        .select(col("text"))
+        .unionByName(Seq("héllo wörld", "日本語テキスト", "ab\nc", "ab" * 500)
+          .toDF("text"))
+      val diff = docs.select(
+        TextQuality.charEntropy(col("text")).as("nat"),
+        TextQuality.charEntropyDeclarative(col("text")).as("decl"))
+        .where(col("nat") =!= col("decl")).count()
+      assert(diff == 0, "native entropy must be bit-identical to the fold")
+    }
   }
 
   test("charEntropy: hand values, order-invariance, degenerate cases") {

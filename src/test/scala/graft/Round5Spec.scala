@@ -53,26 +53,28 @@ class Round5Spec extends GraftSuite {
   }
 
   test("hashedBow native kernel == declarative fold over the real corpus + edges") {
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(300)
-      .select(col("doc_id"), col("text"))
-      .unionByName(Seq(
-        (-1L, ""), (-2L, "   "), (-3L, "one"),
-        (-4L, "a b c a b a"), (-5L, "\ttabs\nand newlines  mixed\t"))
-        .toDF("doc_id", "text"))
-    for (dim <- Seq(2, 16, 256)) {
-      val bad = docs.select(
-        graft.text.TextHash.hashedBow(col("text"), dim).as("nat"),
-        graft.text.TextHash.hashedBowDeclarative(col("text"), dim).as("dec"))
-        .where(not(col("nat") === col("dec")))
-        .count()
-      assert(bad === 0, s"native/declarative hashedBow diverge at dim=$dim")
+    inBothModes {
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(300)
+        .select(col("doc_id"), col("text"))
+        .unionByName(Seq(
+          (-1L, ""), (-2L, "   "), (-3L, "one"),
+          (-4L, "a b c a b a"), (-5L, "\ttabs\nand newlines  mixed\t"))
+          .toDF("doc_id", "text"))
+      for (dim <- Seq(2, 16, 256)) {
+        val bad = docs.select(
+          graft.text.TextHash.hashedBow(col("text"), dim).as("nat"),
+          graft.text.TextHash.hashedBowDeclarative(col("text"), dim).as("dec"))
+          .where(not(col("nat") === col("dec")))
+          .count()
+        assert(bad === 0, s"native/declarative hashedBow diverge at dim=$dim")
+      }
+      // null text: both forms null-propagate
+      val n = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
+        .select(graft.text.TextHash.hashedBow(col("text"), 8).as("nat"),
+          graft.text.TextHash.hashedBowDeclarative(col("text"), 8).as("dec"))
+        .head()
+      assert(n.isNullAt(0) && n.isNullAt(1))
     }
-    // null text: both forms null-propagate
-    val n = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
-      .select(graft.text.TextHash.hashedBow(col("text"), 8).as("nat"),
-        graft.text.TextHash.hashedBowDeclarative(col("text"), 8).as("dec"))
-      .head()
-    assert(n.isNullAt(0) && n.isNullAt(1))
   }
 
   test("blocklist: broadcast-join path == literal path on a seeded corpus") {
@@ -221,35 +223,37 @@ class Round5Spec extends GraftSuite {
   }
 
   test("blocklist phrase gate: automaton == declarative contains on corpus + adversarial phrases") {
-    // phrases sharing prefixes/suffixes and nested phrases — the shapes a
-    // broken fail chain miscounts
-    val phrases = Seq("sort merge", "sort merge join", "merge join",
-      "join order", "order by x", "a b", "b a")
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(300)
-      .select(col("doc_id"), col("text"))
-      .unionByName(Seq(
-        (-1L, "a sort merge join order by x here"),
-        (-2L, "sort  merge   join"), (-3L, "a b a b a"),
-        (-4L, "SORT MERGE"), (-5L, "")).toDF("doc_id", "text"))
-    val canon = phrases.map(_.trim.toLowerCase.split("\\s+").mkString(" "))
-    val out = docs.select(col("doc_id"),
-      graft.functions.MultiContainsCount(
-        concat(lit(" "),
-          regexp_replace(lower(trim(col("text"))), "\\s+", " "), lit(" ")),
-        canon.sorted.map(p => s" $p ")).as("ac"),
-      graft.text.Blocklist.phraseHitsDeclarative(col("text"), canon).as("dec"))
-    assert(out.where(col("ac") =!= col("dec")).count() === 0,
-      "automaton and contains-per-phrase must count identically")
-    val m = out.where(col("doc_id") < 0).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // -1: "sort merge", "sort merge join", "merge join", "join order",
-    //     "order by x", "a b" (from "a sort"? no — whole-token: " a b "
-    //     needs tokens a,b adjacent — not present) → 5
-    assert(m(-1L) === 5, s"got ${m(-1L)}")
-    assert(m(-2L) === 3) // whitespace canonicalization folds runs
-    assert(m(-3L) === 2) // "a b" and "b a"
-    assert(m(-4L) === 1) // case folds
-    assert(m(-5L) === 0)
+    inBothModes {
+      // phrases sharing prefixes/suffixes and nested phrases — the shapes a
+      // broken fail chain miscounts
+      val phrases = Seq("sort merge", "sort merge join", "merge join",
+        "join order", "order by x", "a b", "b a")
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(300)
+        .select(col("doc_id"), col("text"))
+        .unionByName(Seq(
+          (-1L, "a sort merge join order by x here"),
+          (-2L, "sort  merge   join"), (-3L, "a b a b a"),
+          (-4L, "SORT MERGE"), (-5L, "")).toDF("doc_id", "text"))
+      val canon = phrases.map(_.trim.toLowerCase.split("\\s+").mkString(" "))
+      val out = docs.select(col("doc_id"),
+        graft.functions.MultiContainsCount(
+          concat(lit(" "),
+            regexp_replace(lower(trim(col("text"))), "\\s+", " "), lit(" ")),
+          canon.sorted.map(p => s" $p ")).as("ac"),
+        graft.text.Blocklist.phraseHitsDeclarative(col("text"), canon).as("dec"))
+      assert(out.where(col("ac") =!= col("dec")).count() === 0,
+        "automaton and contains-per-phrase must count identically")
+      val m = out.where(col("doc_id") < 0).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      // -1: "sort merge", "sort merge join", "merge join", "join order",
+      //     "order by x", "a b" (from "a sort"? no — whole-token: " a b "
+      //     needs tokens a,b adjacent — not present) → 5
+      assert(m(-1L) === 5, s"got ${m(-1L)}")
+      assert(m(-2L) === 3) // whitespace canonicalization folds runs
+      assert(m(-3L) === 2) // "a b" and "b a"
+      assert(m(-4L) === 1) // case folds
+      assert(m(-5L) === 0)
+    }
   }
 
   test("winnow: null text selects nothing (empty array), matching the shorter-than-k rule") {

@@ -11,34 +11,36 @@ class Round6Spec extends GraftSuite {
   import spark.implicits._
 
   test("DotProductD kernel == zip_with/aggregate fold (values + null rules)") {
-    import graft.ann.Ann
-    val e = spark.read.parquet(s"$sfSmall/embeddings.parquet")
-      .select(col("vec_id"), Ann.toDouble(col("embedding")).as("v"))
-    // self pairs at an offset exercise real vectors on both sides
-    val pairs = e.as("a").join(e.as("b"),
-      col("a.vec_id") === col("b.vec_id") + 7)
-      .select(col("a.v").as("va"), col("b.v").as("vb"))
-    val bad = pairs.select(
-      Ann.dot(col("va"), col("vb")).as("nat"),
-      Ann.dotDeclarative(col("va"), col("vb")).as("dec"))
-      .where(!(col("nat") === col("dec")) ||
-        col("nat").isNull =!= col("dec").isNull)
-      .count()
-    assert(bad === 0, "native dot diverges from the HOF fold")
-    // edges: empty == 0.0; mismatched lengths and null elements are null
-    // on BOTH paths (zip_with pads/nulls, the kernel mirrors it)
-    val edges = Seq(
-      (Seq.empty[Double], Seq.empty[Double]),
-      (Seq(1.0, 2.0), Seq(3.0, 4.0)),
-      (Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
-    val got = edges.select(Ann.dot(col("a"), col("b")).as("nat"),
-      Ann.dotDeclarative(col("a"), col("b")).as("dec")).collect()
-    got.foreach { r =>
-      assert(r.isNullAt(0) === r.isNullAt(1))
-      if (!r.isNullAt(0)) assert(r.getDouble(0) === r.getDouble(1))
+    inBothModes {
+      import graft.ann.Ann
+      val e = spark.read.parquet(s"$sfSmall/embeddings.parquet")
+        .select(col("vec_id"), Ann.toDouble(col("embedding")).as("v"))
+      // self pairs at an offset exercise real vectors on both sides
+      val pairs = e.as("a").join(e.as("b"),
+        col("a.vec_id") === col("b.vec_id") + 7)
+        .select(col("a.v").as("va"), col("b.v").as("vb"))
+      val bad = pairs.select(
+        Ann.dot(col("va"), col("vb")).as("nat"),
+        Ann.dotDeclarative(col("va"), col("vb")).as("dec"))
+        .where(!(col("nat") === col("dec")) ||
+          col("nat").isNull =!= col("dec").isNull)
+        .count()
+      assert(bad === 0, "native dot diverges from the HOF fold")
+      // edges: empty == 0.0; mismatched lengths and null elements are null
+      // on BOTH paths (zip_with pads/nulls, the kernel mirrors it)
+      val edges = Seq(
+        (Seq.empty[Double], Seq.empty[Double]),
+        (Seq(1.0, 2.0), Seq(3.0, 4.0)),
+        (Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
+      val got = edges.select(Ann.dot(col("a"), col("b")).as("nat"),
+        Ann.dotDeclarative(col("a"), col("b")).as("dec")).collect()
+      got.foreach { r =>
+        assert(r.isNullAt(0) === r.isNullAt(1))
+        if (!r.isNullAt(0)) assert(r.getDouble(0) === r.getDouble(1))
+      }
+      assert(got(0).getDouble(0) === 0.0 && got(1).getDouble(0) === 11.0 &&
+        got(2).isNullAt(0))
     }
-    assert(got(0).getDouble(0) === 0.0 && got(1).getDouble(0) === 11.0 &&
-      got(2).isNullAt(0))
   }
 
   test("cosine with precomputed norms == per-pair cosine (embeddingPairs path)") {
@@ -56,44 +58,48 @@ class Round6Spec extends GraftSuite {
   }
 
   test("WinnowHashes kernel == declarative winnow over corpus + edges") {
-    import graft.text.TextHash
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
-      .select(col("doc_id"), col("text"))
-      .unionByName(Seq((-1L, ""), (-2L, "short"), (-3L, "exactly8"),
-        (-4L, "aaaaaaaaaaaaaaaa"), (-5L, "ab"),
-        (-6L, "mixed é世界 unicode text with runs runs runs"))
-        .toDF("doc_id", "text"))
-    val bad = docs.select(
-      TextHash.winnow(col("text"), 8, 4).as("nat"),
-      TextHash.winnowDeclarative(col("text"), 8, 4).as("dec"))
-      .where(!(col("nat") === col("dec"))).count()
-    assert(bad === 0, "winnow kernel diverges from declarative twin")
-    // w = 1 (every gram selected) and w > gram count (single global min)
-    val bad2 = docs.select(
-      TextHash.winnow(col("text"), 2, 1).as("n1"),
-      TextHash.winnowDeclarative(col("text"), 2, 1).as("d1"),
-      TextHash.winnow(col("text"), 3, 1000).as("n2"),
-      TextHash.winnowDeclarative(col("text"), 3, 1000).as("d2"))
-      .where(!(col("n1") === col("d1")) || !(col("n2") === col("d2"))).count()
-    assert(bad2 === 0, "winnow boundary rules diverge")
+    inBothModes {
+      import graft.text.TextHash
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
+        .select(col("doc_id"), col("text"))
+        .unionByName(Seq((-1L, ""), (-2L, "short"), (-3L, "exactly8"),
+          (-4L, "aaaaaaaaaaaaaaaa"), (-5L, "ab"),
+          (-6L, "mixed é世界 unicode text with runs runs runs"))
+          .toDF("doc_id", "text"))
+      val bad = docs.select(
+        TextHash.winnow(col("text"), 8, 4).as("nat"),
+        TextHash.winnowDeclarative(col("text"), 8, 4).as("dec"))
+        .where(!(col("nat") === col("dec"))).count()
+      assert(bad === 0, "winnow kernel diverges from declarative twin")
+      // w = 1 (every gram selected) and w > gram count (single global min)
+      val bad2 = docs.select(
+        TextHash.winnow(col("text"), 2, 1).as("n1"),
+        TextHash.winnowDeclarative(col("text"), 2, 1).as("d1"),
+        TextHash.winnow(col("text"), 3, 1000).as("n2"),
+        TextHash.winnowDeclarative(col("text"), 3, 1000).as("d2"))
+        .where(!(col("n1") === col("d1")) || !(col("n2") === col("d2"))).count()
+      assert(bad2 === 0, "winnow boundary rules diverge")
+    }
   }
 
   test("WindowHashes kernel == declarative window-hash frame (k=8 and k=13)") {
-    import graft.text.Spans
-    val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
-      .select(col("doc_id"), col("text"))
-      .unionByName(Seq((-1L, ""), (-2L, "one two"),
-        (-3L, "exactly eight tokens here to hit the boundary"))
-        .toDF("doc_id", "text"))
-    for (k <- Seq(8, 13)) {
-      val nat = Spans.duplicateSpans(docs, "doc_id", "text", k)
-        .collect().map(_.toSeq).toSet
-      val natFrame = Spans.winHashFrame(docs, "doc_id", "text", k)
-        .collect().map(_.toSeq).toSet
-      val decFrame = Spans.winHashFrameDeclarative(docs, "doc_id", "text", k)
-        .collect().map(_.toSeq).toSet
-      assert(natFrame === decFrame, s"window-hash rows diverge at k=$k")
-      assert(nat.nonEmpty || k == 13) // sanity: k=8 finds the corpus dups
+    inBothModes {
+      import graft.text.Spans
+      val docs = spark.read.parquet(s"$sfSmall/documents.parquet")
+        .select(col("doc_id"), col("text"))
+        .unionByName(Seq((-1L, ""), (-2L, "one two"),
+          (-3L, "exactly eight tokens here to hit the boundary"))
+          .toDF("doc_id", "text"))
+      for (k <- Seq(8, 13)) {
+        val nat = Spans.duplicateSpans(docs, "doc_id", "text", k)
+          .collect().map(_.toSeq).toSet
+        val natFrame = Spans.winHashFrame(docs, "doc_id", "text", k)
+          .collect().map(_.toSeq).toSet
+        val decFrame = Spans.winHashFrameDeclarative(docs, "doc_id", "text", k)
+          .collect().map(_.toSeq).toSet
+        assert(natFrame === decFrame, s"window-hash rows diverge at k=$k")
+        assert(nat.nonEmpty || k == 13) // sanity: k=8 finds the corpus dups
+      }
     }
   }
 

@@ -30,19 +30,21 @@ class SimHashSpec extends GraftSuite {
   }
 
   test("native SimHashParts == declarative HOF fold, all words") {
-    val df = corpus.select(
-      TextHash.simhashParts(col("text"), 3).as("native"),
-      TextHash.simhashPartsDeclarative(col("text"), 3).as("decl"))
-    assert(df.where(col("native") =!= col("decl")).count() == 0)
-    // empty + single-token edge cases
-    val edge = Seq("", "   ", "solo").toDF("text").select(
-      TextHash.simhashParts(col("text"), 2).as("native"),
-      TextHash.simhashPartsDeclarative(col("text"), 2).as("decl"))
-    assert(edge.where(col("native") =!= col("decl")).count() == 0)
-    // parts are 32-bit non-negative (the sign-safety contract)
-    val bad = corpus.select(explode(TextHash.simhashParts(col("text"), 2)).as("p"))
-      .where(col("p") < 0L || col("p") >= (1L << 32)).count()
-    assert(bad == 0)
+    inBothModes {
+      val df = corpus.select(
+        TextHash.simhashParts(col("text"), 3).as("native"),
+        TextHash.simhashPartsDeclarative(col("text"), 3).as("decl"))
+      assert(df.where(col("native") =!= col("decl")).count() == 0)
+      // empty + single-token edge cases
+      val edge = Seq("", "   ", "solo").toDF("text").select(
+        TextHash.simhashParts(col("text"), 2).as("native"),
+        TextHash.simhashPartsDeclarative(col("text"), 2).as("decl"))
+      assert(edge.where(col("native") =!= col("decl")).count() == 0)
+      // parts are 32-bit non-negative (the sign-safety contract)
+      val bad = corpus.select(explode(TextHash.simhashParts(col("text"), 2)).as("p"))
+        .where(col("p") < 0L || col("p") >= (1L << 32)).count()
+      assert(bad == 0)
+    }
   }
 
   test("mix32 declarative == scala, and breaks low-bit correlation") {

@@ -247,26 +247,28 @@ class SpanBpeSpec extends GraftSuite {
   }
 
   test("normalize: NFC composition, control/zero-width strip, collapse, trim, null") {
-    import graft.text.TextQuality
-    val rows = Seq(
-      (1L, "café"),                      // decomposed -> composed
-      (2L, "a​bc"),                 // ZWSP + BEL stripped
-      (3L, "  a \t\n b   c "),                 // collapse + trim
-      (4L, "already clean ascii"),             // fast path: identity
-      (5L, null.asInstanceOf[String])
-    ).toDF("id", "text")
-    val out = rows.select(col("id"), TextQuality.normalize(col("text")).as("n"))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) null else r.getString(1))).toMap
-    assert(out(1L) === "café" && out(1L).length === 4)
-    assert(out(2L) === "abc")
-    assert(out(3L) === "a b c")
-    assert(out(4L) === "already clean ascii")
-    assert(out(5L) === null)
-    // the native expression alone: composed output, ASCII passthrough
-    val nfc = rows.where(col("id") <= 2).select(
-      graft.functions.NfcNormalize(col("text"))).collect().map(_.getString(0))
-    assert(nfc.toSet === Set("café", "a​bc"))
+    inBothModes {
+      import graft.text.TextQuality
+      val rows = Seq(
+        (1L, "café"),                      // decomposed -> composed
+        (2L, "a​bc"),                 // ZWSP + BEL stripped
+        (3L, "  a \t\n b   c "),                 // collapse + trim
+        (4L, "already clean ascii"),             // fast path: identity
+        (5L, null.asInstanceOf[String])
+      ).toDF("id", "text")
+      val out = rows.select(col("id"), TextQuality.normalize(col("text")).as("n"))
+        .collect().map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) null else r.getString(1))).toMap
+      assert(out(1L) === "café" && out(1L).length === 4)
+      assert(out(2L) === "abc")
+      assert(out(3L) === "a b c")
+      assert(out(4L) === "already clean ascii")
+      assert(out(5L) === null)
+      // the native expression alone: composed output, ASCII passthrough
+      val nfc = rows.where(col("id") <= 2).select(
+        graft.functions.NfcNormalize(col("text"))).collect().map(_.getString(0))
+      assert(nfc.toSet === Set("café", "a​bc"))
+    }
   }
 
   test("stripSpans: hand truth table — overlap, no-span, full-strip, empty") {

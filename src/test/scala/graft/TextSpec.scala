@@ -18,15 +18,22 @@ class TextSpec extends GraftSuite {
   ).toDF("doc_id", "text", "lang")
 
   test("polyHash matches a scala reimplementation") {
-    def ph(s: String): Long =
-      s.foldLeft(0L)((h, c) => (h * 31 + c.toLong) % (1L << 32))
-    val got = docs.select(TextHash.polyHash(col("text")).as("h"))
-      .as[Long].collect()
-    val exp = docs.select("text").as[String].collect().map(ph)
-    assert(got.sameElements(exp))
-    // empty string -> 0
-    assert(Seq("").toDF("t").select(TextHash.polyHash(col("t")))
-      .head().getLong(0) == 0L)
+    inBothModes {
+      def ph(s: String): Long =
+        s.foldLeft(0L)((h, c) => (h * 31 + c.toLong) % (1L << 32))
+      val got = docs.select(TextHash.polyHash(col("text")).as("h"))
+        .as[Long].collect()
+      val exp = docs.select("text").as[String].collect().map(ph)
+      assert(got.sameElements(exp))
+      // empty string -> 0
+      assert(Seq("").toDF("t").select(TextHash.polyHash(col("t")))
+        .head().getLong(0) == 0L)
+      // the kernel column equals the driver-side fold, non-BMP included
+      val strs = Seq("abc", "", "héllo 日本 \uD83D\uDE00")
+      val nat = strs.toDF("t").select(graft.functions.PolyHash(col("t")))
+        .as[Long].collect().toSeq
+      assert(nat == strs.map(graft.functions.PolyHash.hash))
+    }
   }
 
   test("exact dedup keeps min id per identical text") {
