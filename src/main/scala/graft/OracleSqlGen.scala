@@ -91,7 +91,7 @@ object OracleSqlGen {
     s"(${dot(a, b, dim)} / (sqrt(${dot(a, a, dim)}) * sqrt(${dot(b, b, dim)})))"
 
   /** squared L2 distance of two dim-dim double lists, left-fold order —
-    * the op sequence of `Ann.l2Literal` / `PqKernels`' inner loop.
+    * the op sequence of `PqKernels`' inner loop.
     */
   def l2(a: String, b: String, dim: Int): String =
     s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +

@@ -15,8 +15,12 @@ import org.apache.spark.sql.expressions.Window
   *    within matching buckets ± multi-probe, exact rerank inside buckets.
   *    At 100 TB the bucket join replaces the full cross product.
   *
-  * All vector math is higher-order array functions (zip_with/aggregate) —
-  * no UDFs, whole-stage codegen.
+  * The IVF and IVF-PQ paths ([[ivfTopK]], [[ivfPqTopK]]) add inverted
+  * lists and product-quantized codes. Vector math runs in the native
+  * kernels of `graft.functions` (one codegen loop per row, the centroid
+  * matrix and codebooks riding as reference objects) — no UDFs. A null
+  * vector, or one with a null element, gets no list, no codes and no
+  * result rows; a vector whose dim differs from the model's throws.
   */
 object Ann {
 
@@ -27,7 +31,7 @@ object Ann {
     * form it replaces allocated a zipped array per evaluation and walked
     * it through interpreted lambdas — the dominant per-pair cost inside
     * every quadratic rerank/near-dup step (guide §4). IEEE-op-identical
-    * (AnnSpec pins the parity against [[dotDeclarative]]).
+    * (Round6Spec pins the parity against [[dotDeclarative]]).
     */
   def dot(a: Column, b: Column): Column = graft.functions.DotProductD(a, b)
 
@@ -95,16 +99,28 @@ object Ann {
     // O(pairs) norm folds (guide §2.3: shuffle/compute the light proxy)
     val q = queries.select(col("qid"), toDouble(col("vec")).as("qv"))
       .withColumn("__qn", norm(col("qv")))
-    val c = corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
-      .withColumn("__cn", norm(col("cv")))
-    val scored = q.crossJoin(c)
-      .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")),
-          roundTo).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+    val c = vectors(corpus).withColumn("__cn", norm(col("cv")))
+    rankTopK(q.crossJoin(c), excludeSelf, cosScore(roundTo), col("cos").desc, k)
+  }
+
+  /** (cid, cv): a (cid, vec) frame with its vectors as array<double>. */
+  private def vectors(corpus: DataFrame): DataFrame =
+    corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
+
+  /** Rounded cosine of a joined (qv, __qn) × (cv, __cn) pair, named `cos`. */
+  private def cosScore(roundTo: Int): Column =
+    round(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")), roundTo).as("cos")
+
+  /** The tail every top-k shares: drop self pairs if asked, keep
+    * (qid, cid, score), and rank each query's candidates by (`order`, cid
+    * asc), keeping `rank <= k`.
+    */
+  private def rankTopK(pairs: DataFrame, excludeSelf: Boolean, score: Column,
+      order: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(order, col("cid").asc)
+    pairs.where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
+      .select(col("qid"), col("cid"), score)
+      .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
   }
 
@@ -139,18 +155,10 @@ object Ann {
         explode(array((col("bkey") +: (0 until probes).map(p =>
           col("bkey").bitwiseXOR(lit(1L << p)))): _*)).as("bkey"))
     // per-row (not per-pair) norms, as in bruteTopK — value-identical
-    val c = corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
+    val c = vectors(corpus)
       .withColumn("__cn", norm(col("cv")))
       .withColumn("bkey", signBucket(col("cv"), planes))
-    val scored = q.join(c, Seq("bkey"))
-      .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")),
-          roundTo).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(q.join(c, Seq("bkey")), excludeSelf, cosScore(roundTo), col("cos").desc, k)
   }
 
   /** IVF (inverted-file) coarse quantizer: `nCentroids` centroids trained by
@@ -170,20 +178,10 @@ object Ann {
       nCentroids: Int,
       iterations: Int = 5
   ): IvfModel = {
-    val c = corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
-    // bound the id BEFORE the LCG multiply: raw cid·1103515245 overflows a
-    // long under ANSI once ids pass ~8e9
-    val seeded = c
-      .withColumn("__draw", pmod(
-        pmod(col("cid"), lit(2147483647L)) * 1103515245L + 12345L, lit(1L << 31)))
-      .orderBy(col("__draw"), col("cid"))
-      .limit(nCentroids)
-      .select(col("cv"))
-    var centroids = seeded.collect().map(_.getSeq[Double](0).toArray)
+    val c = trainable(corpus)
     // fail loudly like pqTrain: silently training fewer lists than asked
     // violates the caller's bucket-sizing math (|corpus|/nList per bucket)
-    require(centroids.length == nCentroids,
-      s"corpus has ${centroids.length} rows < nCentroids=$nCentroids")
+    var centroids = seedRows(c, nCentroids, "nCentroids")
     var it = 0
     while (it < iterations) {
       it += 1
@@ -207,73 +205,49 @@ object Ann {
     IvfModel(centroids)
   }
 
-  /** Past this many centroids, assignment/probing switches from literal
-    * subexpressions to the [[graft.functions.NearestCentroids]] reference-
-    * object kernel: the literal plan is O(nList·dim) expression NODES and
-    * Catalyst analysis/codegen blows up at the list counts a real corpus
-    * needs (4k-64k); the kernel's plan size is constant at any nList.
-    * Both paths are IEEE-op-identical (AnnParitySpec pins it).
+  /** (cid, cv) rows a quantizer may train on: the vector and every element
+    * non-null. A null vector has no list and no codes, so it can neither
+    * seed a centroid or codeword nor pull a Lloyd mean.
     */
-  private[graft] val literalMaxCentroids = 16
+  private def trainable(corpus: DataFrame): DataFrame =
+    vectors(corpus).where(forall(col("cv"), _.isNotNull))
+
+  /** The seeding rule IVF and PQ share: the vectors of the `n` rows with the
+    * smallest pmod(id·LCG) draw (ties by cid) — no RNG state, the same rows
+    * at any parallelism, and exact integer arithmetic the oracle replays.
+    * Fails when fewer than `n` rows exist.
+    */
+  private def seedRows(c: DataFrame, n: Int, what: String): Array[Array[Double]] = {
+    // bound the id BEFORE the LCG multiply: raw cid·1103515245 overflows a
+    // long under ANSI once ids pass ~8e9
+    val rows = c
+      .withColumn("__draw", pmod(
+        pmod(col("cid"), lit(2147483647L)) * 1103515245L + 12345L, lit(1L << 31)))
+      .orderBy(col("__draw"), col("cid"))
+      .limit(n)
+      .select(col("cv"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    require(rows.length == n, s"corpus has ${rows.length} rows < $what=$n")
+    rows
+  }
 
   /** Nearest-centroid assignment — no shuffle, no join, no UDF: a single
-    * projection either over centroid literals (small nList; fully
-    * codegen-inlined) or over the constant-plan-size native kernel.
+    * projection over the [[graft.functions.NearestCentroids]] kernel, whose
+    * centroid matrix rides as one reference object, so the plan is
+    * constant-size at any nList.
     */
   private def assignCentroid(df: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
     require(centroids.length >= 2, "IVF needs at least two centroids")
-    if (centroids.length <= literalMaxCentroids) assignCentroidLiteral(df, centroids)
-    else df.withColumn("__list",
-      element_at(
-        graft.functions.NearestCentroids(col("cv"), centroids, 1, tieLargerIdx = false),
-        1))
+    df.withColumn("__list", element_at(
+      graft.functions.NearestCentroids(col("cv"), centroids, 1, tieLargerIdx = false), 1))
   }
-
-  /** Literal-expression assignment (the small-nList fast path; also the
-    * parity reference for the native kernel).
-    */
-  private[graft] def assignCentroidLiteral(
-      df: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val sims = centroids.map { ctr =>
-      val carr = array(ctr.map(lit(_)): _*)
-      dot(col("cv"), carr) / (norm(col("cv")) * lit(math.sqrt(ctr.map(x => x * x).sum)))
-    }
-    val best = sims.zipWithIndex.map { case (s, i) =>
-      struct(s.as("s"), lit(-i).as("ni"))
-    }
-    df.withColumn("__list", (-greatest(best: _*).getField("ni")).cast("int"))
-  }
-
-  /** Per-query probe lists (nProbe nearest centroids, ties → larger id,
-    * matching `reverse(array_sort(...))` of the literal path) as an
-    * array<int> column.
-    */
-  private[graft] def probeListsLiteral(
-      qv: Column, centroids: Array[Array[Double]], nProbe: Int): Column = {
-    val sims = centroids.zipWithIndex.map { case (ctr, i) =>
-      val carr = array(ctr.map(lit(_)): _*)
-      struct((dot(qv, carr) /
-        (norm(qv) * lit(math.sqrt(ctr.map(x => x * x).sum)))).as("s"),
-        lit(i).as("li"))
-    }
-    transform(slice(reverse(array_sort(array(sims: _*))), 1, nProbe),
-      p => p.getField("li"))
-  }
-
-  private def probeLists(
-      qv: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
-    if (centroids.length <= literalMaxCentroids)
-      probeListsLiteral(qv, centroids, nProbe)
-    else
-      graft.functions.NearestCentroids(qv, centroids, nProbe, tieLargerIdx = true)
 
   /** Public nearest-centroid assignment over a (cid, vec) frame — the
     * bucketing step consumers like [[graft.text.Dedup.semanticDedup]]
     * compose with; returns (cid, cv, __list).
     */
   def assign(corpus: DataFrame, model: IvfModel): DataFrame =
-    assignCentroid(
-      corpus.select(col("cid"), toDouble(col("vec")).as("cv")), model.centroids)
+    assignCentroid(vectors(corpus), model.centroids)
 
   /** IVF top-k: corpus rows are bucketed by nearest centroid (the inverted
     * lists); each query probes only its `nProbe` nearest lists and reranks
@@ -290,23 +264,14 @@ object Ann {
       roundTo: Int = 6,
       excludeSelf: Boolean = true
   ): DataFrame = {
-    val c = assignCentroid(
-      corpus.select(col("cid"), toDouble(col("vec")).as("cv")), model.centroids)
-      .withColumn("__cn", norm(col("cv")))
-    val q0 = queries.select(col("qid"), toDouble(col("vec")).as("qv"))
+    val c = assign(corpus, model).withColumn("__cn", norm(col("cv")))
+    // each query's nProbe nearest lists; cosine ties → larger list id
+    val q = queries.select(col("qid"), toDouble(col("vec")).as("qv"))
       .withColumn("__qn", norm(col("qv")))
-    val q = q0.withColumn("__list",
-      explode(probeLists(col("qv"), model.centroids, nProbe)))
+      .withColumn("__list", explode(graft.functions.NearestCentroids(
+        col("qv"), model.centroids, nProbe, tieLargerIdx = true)))
     // per-row (not per-pair) norms, as in bruteTopK — value-identical
-    val scored = q.join(c, Seq("__list"))
-      .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")),
-          roundTo).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(q.join(c, Seq("__list")), excludeSelf, cosScore(roundTo), col("cos").desc, k)
   }
 
   // ----------------------------------------------------------------------
@@ -326,14 +291,6 @@ object Ann {
     def dsub: Int = books(0)(0).length
   }
 
-  /** Past this many total codewords (m·nCodes) the encode/LUT switch from
-    * literal subexpressions to the [[graft.functions.PqCodes]] /
-    * [[graft.functions.PqLut]] reference-object kernels — same constant-
-    * plan-size doctrine as [[literalMaxCentroids]]. Production PQ is
-    * m=8..64 × nCodes=256: always the kernel path.
-    */
-  private[graft] val literalMaxCodewords = 64
-
   /** Deterministic sampling quantizer for PQ, sharing the IVF seeding rule:
     * the codewords of every subspace come from the `nCodes` corpus rows
     * with the smallest pmod(id·LCG) draw, sliced into m contiguous
@@ -349,15 +306,8 @@ object Ann {
       nCodes: Int,
       iterations: Int = 0
   ): PqModel = {
-    val c = corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
-    val seeded = c
-      .withColumn("__draw", pmod(
-        pmod(col("cid"), lit(2147483647L)) * 1103515245L + 12345L, lit(1L << 31)))
-      .orderBy(col("__draw"), col("cid"))
-      .limit(nCodes)
-      .select(col("cv"))
-    val rows = seeded.collect().map(_.getSeq[Double](0).toArray)
-    require(rows.length == nCodes, s"corpus smaller than nCodes=$nCodes")
+    val c = trainable(corpus)
+    val rows = seedRows(c, nCodes, "nCodes")
     val dim = rows(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
@@ -387,45 +337,13 @@ object Ann {
     PqModel(books)
   }
 
-  /** Ascending-fold L2 distance between a sliced subvector and a literal
-    * codeword — the parity reference for the kernel's loop order.
-    */
-  private def l2Literal(sub: Column, cw: Array[Double]): Column =
-    aggregate(
-      zip_with(sub, array(cw.map(lit(_)): _*), (x, c) => (x - c) * (x - c)),
-      lit(0.0), _ + _)
-
-  /** Literal-expression PQ encode (small codebooks; parity reference). */
-  private[graft] def pqEncodeLiteral(df: DataFrame, model: PqModel): DataFrame = {
-    val codes = (0 until model.m).map { j =>
-      val sub = slice(col("cv"), j * model.dsub + 1, model.dsub)
-      // argmin distance, ties → smaller code index: least by (d asc, i asc)
-      val cands = model.books(j).zipWithIndex.map { case (cw, i) =>
-        struct(l2Literal(sub, cw).as("d"), lit(i).as("i"))
-      }
-      least(cands: _*).getField("i")
-    }
-    df.withColumn("__codes", array(codes: _*))
-  }
-
   /** PQ encode: adds `__codes` (array<int>, one code per subspace) to a
     * frame with a `cv` array<double> column. Pure projection — no shuffle,
-    * no join; kernel path keeps the plan constant-size at any codebook.
+    * no join; the [[graft.functions.PqCodes]] kernel keeps the plan
+    * constant-size at any codebook.
     */
   def pqEncode(df: DataFrame, model: PqModel): DataFrame =
-    if (model.m * model.nCodes <= literalMaxCodewords) pqEncodeLiteral(df, model)
-    else df.withColumn("__codes", graft.functions.PqCodes(col("cv"), model.books))
-
-  /** Literal flat ADC LUT (ascending (j, i) layout — entry j·nCodes+i). */
-  private[graft] def pqLutLiteral(qv: Column, model: PqModel): Column =
-    array((for {
-      j <- 0 until model.m
-      (cw, _) <- model.books(j).zipWithIndex
-    } yield l2Literal(slice(qv, j * model.dsub + 1, model.dsub), cw)): _*)
-
-  private def pqLut(qv: Column, model: PqModel): Column =
-    if (model.m * model.nCodes <= literalMaxCodewords) pqLutLiteral(qv, model)
-    else graft.functions.PqLut(qv, model.books)
+    df.withColumn("__codes", graft.functions.PqCodes(col("cv"), model.books))
 
   /** IVF-PQ top-k: corpus rows are bucketed by coarse centroid and carry
     * only their m PQ codes through the probe join; each query probes its
@@ -447,25 +365,18 @@ object Ann {
       roundTo: Int = 6,
       excludeSelf: Boolean = true
   ): DataFrame = {
-    val c = pqEncode(
-      assignCentroid(
-        corpus.select(col("cid"), toDouble(col("vec")).as("cv")), coarse.centroids),
-      pq)
+    val c = pqEncode(assign(corpus, coarse), pq)
       .select(col("cid"), col("__list"), col("__codes"))
     val q = queries.select(col("qid"), toDouble(col("vec")).as("qv"))
-      .withColumn("__lut", pqLut(col("qv"), pq))
-      .withColumn("__list", explode(probeLists(col("qv"), coarse.centroids, nProbe)))
+      .withColumn("__lut", graft.functions.PqLut(col("qv"), pq.books))
+      .withColumn("__list", explode(graft.functions.NearestCentroids(
+        col("qv"), coarse.centroids, nProbe, tieLargerIdx = true)))
       .select(col("qid"), col("__lut"), col("__list"))
     val adc = (0 until pq.m).map { j =>
       element_at(col("__lut"),
         (lit(j * pq.nCodes) + element_at(col("__codes"), j + 1) + 1).cast("int"))
     }.reduce(_ + _)
-    val scored = q.join(c, Seq("__list"))
-      .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"), round(adc, roundTo).as("adc"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc").asc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(q.join(c, Seq("__list")), excludeSelf, round(adc, roundTo).as("adc"),
+      col("adc").asc, k)
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType}
 
@@ -16,25 +16,23 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerTy
   * the per-row O(nList·dim) flop loop is the algorithmic cost of a flat
   * quantizer and runs as one generated tight loop over primitive arrays.
   *
-  * IEEE op order matches the literal expression path EXACTLY (ascending
-  * left-fold dot and norms, cos = dot/(vnorm·cnorm), precomputed centroid
-  * norms) so small-k and large-k paths return identical assignments —
-  * `AnnParitySpec` pins it.
+  * IEEE op order matches the literal-expression form of the same search
+  * EXACTLY (ascending left-fold dot and norms, cos = dot/(vnorm·cnorm),
+  * precomputed centroid norms), so it returns the assignments and probes
+  * that form returns — `AnnParitySpec` pins it against that twin. A null
+  * vector or a null element yields null (no list), as [[DotProductD]]
+  * does; a vector whose dim differs from the centroids' throws.
   */
 object NearestCentroids {
 
-  /** SQL double ordering (NaN greatest, NaN = NaN, -0.0 = 0.0) with the
-    * index tiebreak — mirrors how the literal struct-compare paths order.
+  /** SQL double ordering (Spark's own `compareDoubles`: NaN greatest,
+    * NaN = NaN, -0.0 = 0.0) with the index tiebreak — the order the
+    * literal struct-compare twins use.
     */
   private def better(a: Double, ai: Int, b: Double, bi: Int,
       tieLarger: Boolean): Boolean = {
-    val aNaN = java.lang.Double.isNaN(a)
-    val bNaN = java.lang.Double.isNaN(b)
-    if (aNaN && bNaN || (!aNaN && !bNaN && a == b))
-      (if (tieLarger) ai > bi else ai < bi)
-    else if (aNaN) true
-    else if (bNaN) false
-    else a > b
+    val c = SQLOrderingUtil.compareDoubles(a, b)
+    if (c != 0) c > 0 else if (tieLarger) ai > bi else ai < bi
   }
 
   def topK(v: ArrayData, k: Int, tieLarger: Boolean,
@@ -44,6 +42,7 @@ object NearestCentroids {
     var s2 = 0.0
     var i = 0
     while (i < dim) {
+      if (v.isNullAt(i)) return null
       val xi = v.getDouble(i); x(i) = xi; s2 += xi * xi; i += 1
     }
     val vnorm = math.sqrt(s2)
@@ -54,10 +53,8 @@ object NearestCentroids {
     var c = 0
     while (c < cents.length) {
       val ctr = cents(c)
-      // ragged input fails LOUDLY: the literal path null-poisons mismatched
-      // dims (assignment undefined), so a silently truncated dot here would
-      // give the same dataset different bucketings depending on which path
-      // nList selects
+      // ragged input fails LOUDLY: a silently truncated dot would bucket
+      // the vector by a prefix of its dims
       if (ctr.length != dim)
         throw new IllegalArgumentException(
           s"vector dim $dim != centroid dim ${ctr.length} (list $c)")
@@ -82,17 +79,17 @@ object NearestCentroids {
   }
 
   /** @param tieLargerIdx cosine ties prefer the LARGER list id when true —
-    *   matching the literal probe path's `reverse(array_sort(...))`
-    *   (descending (cos, li)); assignment uses false, matching
+    *   the probe order, descending (cos, li) like the literal twin's
+    *   `reverse(array_sort(...))`; assignment uses false, like its
     *   `greatest(struct(cos, -li))` (ties → smaller li).
     */
   def apply(v: Column, centroids: Array[Array[Double]], k: Int,
       tieLargerIdx: Boolean): Column = {
-    // centroid norms with the literal path's exact fold order (ascending sum)
+    // centroid norms with the literal twin's exact fold order (ascending sum)
     val norms = centroids.map(ctr => math.sqrt(ctr.map(x => x * x).sum))
     require(centroids.nonEmpty && centroids.length == norms.length && k >= 1)
     GraftBridge.staticCall(this, "topK", ArrayType(IntegerType, containsNull = false),
       Seq(v, lit(k), lit(tieLargerIdx)), Seq(ArrayType(DoubleType), IntegerType, BooleanType),
-      refs = Seq(centroids, norms))
+      refs = Seq(centroids, norms), returnsNull = true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for large-scale training-data pipelines.
@@ -553,7 +553,7 @@ object Dedup {
     // one predicate expresses.)
     val exactHit = sketches
       .fold(bp) { case (digestBloom, _) =>
-        bp.where(mightContain(digestBloom, xxhash64(col("__md5")))) }
+        bp.where(GraftBridge.mightContain(digestBloom, xxhash64(col("__md5")))) }
       .select(col("id"), col("__md5"))
       .join(cp.select(col("__md5")), Seq("__md5"), "left_semi")
       .select(col("id"))
@@ -566,7 +566,7 @@ object Dedup {
     // round-5 per-id flag (it drops non-corpus shingles of flagged docs
     // too), and a zero-join zero-shuffle projection predicate.
     val crossBp = sketches.fold(bpPrefix) { case (_, shingleBloom) =>
-      bpPrefix.where(mightContain(shingleBloom, col("shingle"))) }
+      bpPrefix.where(GraftBridge.mightContain(shingleBloom, col("shingle"))) }
     val nearHit = ppjoinFromPrefixed(cpPrefix, cp, Some((crossBp, bp)), threshold)
       .select(col("id_b").as("id"))
     // ONE anti join against the union of every exclusion set (batch-
@@ -707,7 +707,7 @@ object Dedup {
     * conversion, and (the point) several filters build in ONE pass when
     * the key columns share a frame. numBits follows the same
     * optimalNumOfBits(n, fpp) rule `BloomFilter.create(n, fpp)` applies,
-    * but `BloomFilterAggregate` silently clamps n and numBits to the
+    * but `bloom_filter_agg` silently clamps n and numBits to the
     * session's runtime-bloom caps; the sketch matches `stat.bloomFilter(n,
     * fpp)` only below them, so a request past either cap fails here
     * instead of building a smaller filter than asked for.
@@ -715,18 +715,13 @@ object Dedup {
   private def bloomAggCol(spark: org.apache.spark.sql.SparkSession,
       key: org.apache.spark.sql.Column, n: Long,
       fpp: Double): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftBridge
     val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp)
     val conf = (k: String) => s"spark.sql.optimizer.runtime.bloomFilter.$k"
     require(n <= spark.conf.get(conf("maxNumItems")).toLong &&
       bits <= spark.conf.get(conf("maxNumBits")).toLong,
       s"Bloom sketch of $n keys / $bits bits exceeds ${conf("maxNumItems")} or " +
         s"${conf("maxNumBits")}; bloom_filter_agg would clamp it silently")
-    GraftBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        GraftBridge.expression(key),
-        GraftBridge.expression(lit(n)),
-        GraftBridge.expression(lit(bits))).toAggregateExpression())
+    GraftBridge.bloomFilterAgg(key, n, bits)
   }
 
   /** BOTH ingest sketches (digest bloom, shingle bloom) of a prep/index
@@ -775,19 +770,6 @@ object Dedup {
       bloomAggCol(prep.sparkSession, col("dk"), math.max(nDg, 64L), fpp),
       bloomAggCol(prep.sparkSession, col("k"), math.max(nSh, 64L), fpp)).head()
     (built.getAs[Array[Byte]](0), built.getAs[Array[Byte]](1))
-  }
-
-  /** `might_contain(bloom, key)` over a serialized sketch — Spark's native
-    * runtime-filter expression with the bloom riding as one binary literal
-    * (deserialized once per task, not per row).
-    */
-  private[graft] def mightContain(bloomBytes: Array[Byte],
-      key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        GraftBridge.expression(lit(bloomBytes)),
-        GraftBridge.expression(key)))
   }
 
   /** [[dedupIncremental]] with Bloom prefilters on the corpus-facing passes

@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.DataType
 
 /** Bridge into `private[sql]` conversion utilities so graft's native
@@ -44,4 +46,20 @@ object GraftBridge {
       args.map(expression) ++ refLits, inputTypes ++ refLits.map(_.dataType),
       returnNullable = returnsNull))
   }
+
+  /** `bloom_filter_agg(key, n, bits)`: Spark's native Bloom aggregate,
+    * serialized as `BloomFilterImpl` bytes — a partial-merged, codegen'd
+    * aggregate, so several filters over one frame build in one pass. It
+    * clamps `n` and `bits` to the session's runtime-bloom caps without a
+    * word; callers check them.
+    */
+  def bloomFilterAgg(key: Column, n: Long, bits: Long): Column =
+    column(new BloomFilterAggregate(expression(key), expression(lit(n)),
+      expression(lit(bits))).toAggregateExpression())
+
+  /** `might_contain(bloom, key)` over a serialized sketch, the bloom riding
+    * as one binary literal (deserialized once per task, not per row).
+    */
+  def mightContain(bloomBytes: Array[Byte], key: Column): Column =
+    column(BloomFilterMightContain(expression(lit(bloomBytes)), expression(key)))
 }

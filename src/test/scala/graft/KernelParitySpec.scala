@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** Property-based parity of native kernels against their declarative
   * twins over generated arrays the bench never makes: empty arrays, null
@@ -12,10 +11,6 @@ import org.scalacheck.rng.Seed
   */
 class KernelParitySpec extends GraftSuite {
   import spark.implicits._
-
-  private def draws[T](g: Gen[T], n: Int): Seq[T] =
-    Iterator.iterate(Seed(20261017L))(_.next).take(n)
-      .map(s => g.pureApply(Gen.Parameters.default, s)).toSeq
 
   private def arrays[T](elem: Gen[T], maxLen: Int): Gen[Seq[Option[T]]] =
     Gen.choose(0, maxLen).flatMap(n => Gen.listOfN(n,

@@ -269,8 +269,8 @@ class Round2Spec extends GraftSuite {
     val approxRecall = (pairs(graft.ann.Ann.ivfTopK(q, c, model, k = 3, nProbe = 2))
       & truth).size.toDouble / truth.size
     assert(approxRecall >= 0.5, s"ivf nProbe=2 recall $approxRecall")
-    // given a model, the query path is partitioning-invariant (centroid
-    // literals + per-row argmax; training means are deterministic only up
+    // given a model, the query path is partitioning-invariant (a per-row
+    // nearest-centroid kernel; training means are deterministic only up
     // to float-sum order, like any distributed mean)
     val again = pairs(graft.ann.Ann.ivfTopK(
       q.repartition(7), c.repartition(5), model, k = 3, nProbe = 8))

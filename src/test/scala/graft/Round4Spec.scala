@@ -407,7 +407,7 @@ class Round4Spec extends GraftSuite {
       val cp = graft.text.Dedup.prepDocs(corpus, "doc_id", "text", col("lang"), 3)
       val bp = graft.text.Dedup.prepDocs(batch, "doc_id", "text", col("lang"), 3)
       val digestBloom = graft.text.Dedup.bloomPairOf(cp, 0.03)._1
-      val maybes = bp.where(graft.text.Dedup.mightContain(
+      val maybes = bp.where(org.apache.spark.sql.GraftBridge.mightContain(
         digestBloom, xxhash64(col("__md5")))).count()
       val total = bp.count()
       assert(maybes < total / 2,

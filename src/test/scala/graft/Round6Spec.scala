@@ -114,9 +114,9 @@ class Round6Spec extends GraftSuite {
       // equality in the incremental operators depends on exactly this;
       // the sketch SIZE only tunes the realized fpp)
       val missDg = prep.where(
-        !Dedup.mightContain(dg, xxhash64(col("__md5")))).count()
+        !org.apache.spark.sql.GraftBridge.mightContain(dg, xxhash64(col("__md5")))).count()
       val missSh = prep.select(explode(col("sh")).as("k"))
-        .where(!Dedup.mightContain(sh, col("k"))).count()
+        .where(!org.apache.spark.sql.GraftBridge.mightContain(sh, col("k"))).count()
       assert(missDg === 0, s"$missDg digests rejected by their own sketch")
       assert(missSh === 0, s"$missSh shingles rejected by their own sketch")
       // and the bytes are the SAME BloomFilterImpl serialization the

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (suites run in one JVM). */
@@ -16,6 +18,11 @@ object TestSpark {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfSmall = "/root/testdata/sf0.001"
+
+  /** `n` draws of `g` from a fixed seed, so a failing draw reproduces. */
+  def draws[T](g: Gen[T], n: Int): Seq[T] =
+    Iterator.iterate(Seed(20261017L))(_.next).take(n)
+      .map(s => g.pureApply(Gen.Parameters.default, s)).toSeq
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * (1.0 + math.abs(b))
