@@ -42,7 +42,15 @@ object Ann {
   /** ‖a‖ via the same left fold: acc + x·x in index order (dot(a, a)). */
   def norm(a: Column): Column = sqrt(graft.functions.DotProductD(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** THE cosine of every rerank and near-dup pass, over precomputed norms
+    * `na`, `nb`. A zero-norm side has no cosine: the result is null
+    * (`try_divide`, never DIVIDE_BY_ZERO), so the pair forms no row — a
+    * threshold filter drops it, and so does [[rankTopK]].
+    */
+  private[graft] def cosine(va: Column, na: Column, vb: Column, nb: Column): Column =
+    try_divide(dot(va, vb), na * nb)
+
+  def cosine(a: Column, b: Column): Column = cosine(a, norm(a), b, norm(b))
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * LCG over the flattened index, shifted to [-0.5, 0.5). Same closed form
@@ -78,8 +86,8 @@ object Ann {
   /** Exact cosine top-k: for each query row, the k nearest corpus rows.
     * Ties broken by corpus id for full determinism; scores rounded before
     * ranking so cross-engine float noise cannot flip the order.
-    */
-  /** `excludeSelf` (default true, all topK variants): drop candidates with
+    *
+    * `excludeSelf` (default true, all topK variants): drop candidates with
     * `cid == qid` — correct when queries ARE corpus rows (self-join dedup,
     * leave-one-out eval). For CROSS-TABLE retrieval where id spaces are
     * unrelated, pass false: otherwise corpus row i silently vanishes from
@@ -100,28 +108,31 @@ object Ann {
     val q = queries.select(col("qid"), toDouble(col("vec")).as("qv"))
       .withColumn("__qn", norm(col("qv")))
     val c = vectors(corpus).withColumn("__cn", norm(col("cv")))
-    rankTopK(q.crossJoin(c), excludeSelf, cosScore(roundTo), col("cos").desc, k)
+    rankTopK(q.crossJoin(c), excludeSelf, cosScore(roundTo), k)
   }
 
   /** (cid, cv): a (cid, vec) frame with its vectors as array<double>. */
   private def vectors(corpus: DataFrame): DataFrame =
     corpus.select(col("cid"), toDouble(col("vec")).as("cv"))
 
-  /** Rounded cosine of a joined (qv, __qn) × (cv, __cn) pair, named `cos`. */
+  /** Rounded cosine of a joined (qv, __qn) × (cv, __cn) pair. */
   private def cosScore(roundTo: Int): Column =
-    round(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")), roundTo).as("cos")
+    round(cosine(col("qv"), col("__qn"), col("cv"), col("__cn")), roundTo)
 
   /** The tail every top-k shares: drop self pairs if asked, keep
-    * (qid, cid, score), and rank each query's candidates by (`order`, cid
-    * asc), keeping `rank <= k`.
+    * (qid, cid, `name` = score), and rank each query's candidates by
+    * (score, cid asc), keeping `rank <= k`. A null score (a null or zero
+    * vector has no cosine) sorts last and forms no row, so it never takes
+    * a rank from a scored candidate.
     */
-  private def rankTopK(pairs: DataFrame, excludeSelf: Boolean, score: Column,
-      order: Column, k: Int): DataFrame = {
+  private def rankTopK(pairs: DataFrame, excludeSelf: Boolean, score: Column, k: Int,
+      name: String = "cos", descending: Boolean = true): DataFrame = {
+    val order = if (descending) col(name).desc_nulls_last else col(name).asc_nulls_last
     val w = Window.partitionBy(col("qid")).orderBy(order, col("cid").asc)
     pairs.where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-      .select(col("qid"), col("cid"), score)
+      .select(col("qid"), col("cid"), score.as(name))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+      .where(col("rank") <= k && col(name).isNotNull)
   }
 
   /** LSH-bucketed approximate top-k: candidates share a sign-bucket with the
@@ -158,7 +169,7 @@ object Ann {
     val c = vectors(corpus)
       .withColumn("__cn", norm(col("cv")))
       .withColumn("bkey", signBucket(col("cv"), planes))
-    rankTopK(q.join(c, Seq("bkey")), excludeSelf, cosScore(roundTo), col("cos").desc, k)
+    rankTopK(q.join(c, Seq("bkey")), excludeSelf, cosScore(roundTo), k)
   }
 
   /** IVF (inverted-file) coarse quantizer: `nCentroids` centroids trained by
@@ -271,7 +282,7 @@ object Ann {
       .withColumn("__list", explode(graft.functions.NearestCentroids(
         col("qv"), model.centroids, nProbe, tieLargerIdx = true)))
     // per-row (not per-pair) norms, as in bruteTopK — value-identical
-    rankTopK(q.join(c, Seq("__list")), excludeSelf, cosScore(roundTo), col("cos").desc, k)
+    rankTopK(q.join(c, Seq("__list")), excludeSelf, cosScore(roundTo), k)
   }
 
   // ----------------------------------------------------------------------
@@ -376,7 +387,7 @@ object Ann {
       element_at(col("__lut"),
         (lit(j * pq.nCodes) + element_at(col("__codes"), j + 1) + 1).cast("int"))
     }.reduce(_ + _)
-    rankTopK(q.join(c, Seq("__list")), excludeSelf, round(adc, roundTo).as("adc"),
-      col("adc").asc, k)
+    rankTopK(q.join(c, Seq("__list")), excludeSelf, round(adc, roundTo), k, "adc",
+      descending = false)
   }
 }

@@ -52,25 +52,6 @@ object Streams {
       delay: String): DataFrame =
     df.withWatermark(ts, delay).dropDuplicatesWithinWatermark(idCols)
 
-  /** Streaming NEAR-dedup: drops documents whose SimHash signature
-    * (order/repetition-robust) collides with one already seen inside the
-    * watermark horizon. Signature equality is the O(1)-state streaming
-    * stand-in for the batch banded-hamming pair join ([[graft.text.Dedup
-    * .simhashPairs]]).
-    *
-    * Width matters: the state key is the full `words`×32-bit signature
-    * (default 64 bits). At the round-3 width of 16 bits only 65,536
-    * signatures existed, so birthday collisions between UNRELATED docs
-    * started around ~300 in-horizon documents and each collision silently
-    * dropped a distinct doc. At 64 bits the false-drop probability for K
-    * in-horizon docs is ≈ K²/2^65 (birthday bound over well-mixed
-    * signatures) — ~5·10^-8 at K=10^6, negligible at any horizon a
-    * watermark would realistically hold. The remaining documented trade is
-    * false NEGATIVES: two near-dups farther apart than the watermark delay
-    * both survive, and near-dups whose signatures differ in ≥1 bit are not
-    * caught by equality (use the batch pair join for hamming-tolerant
-    * dedup).
-    */
   /** Streaming CURATION — the live-ingest twin of
     * [[graft.text.Curation.curate]]: the same four pure content gates (the
     * identical expressions, via the shared `withGates` — batch and stream
@@ -109,6 +90,25 @@ object Streams {
         graft.text.Sampling.assignSplit(col(idCol), g.splits))
   }
 
+  /** Streaming NEAR-dedup: drops documents whose SimHash signature
+    * (order/repetition-robust) collides with one already seen inside the
+    * watermark horizon. Signature equality is the O(1)-state streaming
+    * stand-in for the batch banded-hamming pair join ([[graft.text.Dedup
+    * .simhashPairs]]).
+    *
+    * Width matters: the state key is the full `words`×32-bit signature
+    * (default 64 bits). At the round-3 width of 16 bits only 65,536
+    * signatures existed, so birthday collisions between UNRELATED docs
+    * started around ~300 in-horizon documents and each collision silently
+    * dropped a distinct doc. At 64 bits the false-drop probability for K
+    * in-horizon docs is ≈ K²/2^65 (birthday bound over well-mixed
+    * signatures) — ~5·10^-8 at K=10^6, negligible at any horizon a
+    * watermark would realistically hold. The remaining documented trade is
+    * false NEGATIVES: two near-dups farther apart than the watermark delay
+    * both survive, and near-dups whose signatures differ in ≥1 bit are not
+    * caught by equality (use the batch pair join for hamming-tolerant
+    * dedup).
+    */
   def dedupSimhashStream(df: DataFrame, textCol: String, ts: String,
       delay: String, words: Int = 2): DataFrame = {
     val sigCols = (0 until words).map(w => s"__sig$w")

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for large-scale training-data pipelines.
@@ -68,30 +68,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Resolve near-dup pairs into clusters — the step every production dedup
-    * pipeline needs after pair generation: connected components over the
-    * pair graph, labeling each doc with the SMALLEST id in its component
-    * (the canonical keeper; `keep = id == cluster_id`).
-    *
-    * Algorithm: iterative min-label propagation with pointer jumping. Each
-    * round (a) every node takes the min of its own label and its neighbors'
-    * labels (one equi-join + groupBy), then (b) labels compress one pointer
-    * hop (label := label(label)). Converges in O(log n) rounds on typical
-    * dup graphs (pointer jumping halves chain lengths); each round is a
-    * constant number of hash shuffles on (id, label) pairs — never the
-    * payloads — so the op scales to billion-edge pair sets.
-    */
-  /** @param driverFinishEdges hybrid BSP/driver finish bound: once a round
-    *   relabels few nodes, the remaining ACTIVE subgraph (cross-label edges
-    *   + label chains) is usually tiny even when the full graph has
-    *   billions of edges — the classic long-tail of distributed CC, where
-    *   each extra round is pure job latency. When the active subgraph fits
-    *   within this many label pairs it is collected, closed with a driver
-    *   union-find (min root, matching the distributed semantics), and
-    *   broadcast back — replacing the last O(log chain) rounds with two
-    *   jobs. 50k pairs ≈ ~2 MB broadcast: safe on any driver. 0 disables
-    *   (pure BSP; spec-proven equivalent).
-    */
   /** Observability for the last [[resolveClusters]] run (BSP rounds used;
     * whether the driver finish closed the tail) — read by the CC scale
     * bench and the convergence-bound specs. Best-effort under concurrency
@@ -140,6 +116,30 @@ object Dedup {
     def nonRoots: Seq[Any] = parent.keys.toSeq
   }
 
+  /** Resolve near-dup pairs into clusters — the step every production dedup
+    * pipeline needs after pair generation: connected components over the
+    * pair graph, labeling each doc with the SMALLEST id in its component
+    * (the canonical keeper; `keep = id == cluster_id`).
+    *
+    * Algorithm: iterative min-label propagation with pointer jumping. Each
+    * round (a) every node takes the min of its own label and its neighbors'
+    * labels (one equi-join + groupBy), then (b) labels compress one pointer
+    * hop (label := label(label)). Converges in O(log n) rounds on typical
+    * dup graphs (pointer jumping halves chain lengths); each round is a
+    * constant number of hash shuffles on (id, label) pairs — never the
+    * payloads — so the op scales to billion-edge pair sets.
+    *
+    * @param driverFinishEdges hybrid BSP/driver finish bound: once a round
+    *   relabels few nodes, the remaining ACTIVE subgraph (cross-label edges
+    *   + label chains) is usually tiny even when the full graph has
+    *   billions of edges — the classic long-tail of distributed CC, where
+    *   each extra round is pure job latency. When the active subgraph fits
+    *   within this many label pairs it is collected, closed with a driver
+    *   union-find (min root, matching the distributed semantics), and
+    *   broadcast back — replacing the last O(log chain) rounds with two
+    *   jobs. 50k pairs ≈ ~2 MB broadcast: safe on any driver. 0 disables
+    *   (pure BSP; spec-proven equivalent).
+    */
   def resolveClusters(
       pairs: DataFrame,
       idA: String = "id_a",
@@ -358,7 +358,6 @@ object Dedup {
     // non-divisible combos silently ignore trailing slots. Fail loudly.
     require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rows = numHashes / bands
     val withSig = df.select(
       col(idCol).as("id"),
       TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"))
@@ -372,38 +371,13 @@ object Dedup {
       // would otherwise recompute shingling/minhashing 4x (the operator-level
       // analog of the reference's lru_cache memoization, ugs.py:265)
       .transform(materialize)
-    val buckets = withSig
-      .select(col("id"), col("sh"), explode(col("bkeys")).as("bkey"))
-    // prune degenerate buckets before the quadratic step
-    val capped = buckets
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("bkey"))))
-      .where(col("bsize") <= blockCap)
-      .drop("bsize")
     // candidate generation carries only (bkey, id, size) — the shingle
     // arrays are re-fetched by id for the (much smaller) verified pair set
-    val slim = capped.select(col("bkey"), col("id"), size(col("sh")).as("sz"))
-    val a = slim.select(col("bkey"), col("id").as("id_a"), col("sz").as("sz_a"))
-    val b = slim.select(col("bkey"), col("id").as("id_b"), col("sz").as("sz_b"))
-    // exact size-ratio pruning (J >= t implies min >= t*max) before any
-    // payload is touched; the join stays a pure equi hash join on band key
-    val sizeOk = least(col("sz_a"), col("sz_b")).cast("double") >=
-      lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double")
-    val cand = a.join(b, Seq("bkey"))
-      .where(col("id_a") < col("id_b") && sizeOk)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val pa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"),
-      size(col("sh")).as("sz_a"))
-    val pb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"),
-      size(col("sh")).as("sz_b"))
-    cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-        graft.functions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-          .cast("double").as("inter"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val cand = blockedPairs(
+      withSig.select(col("id"), col("sh"), explode(col("bkeys")).as("bkey")),
+      Seq("bkey"), Some(blockCap), Seq("sz" -> size(col("sh"))))
+    val sized = withSig.withColumn("sz", size(col("sh")))
+    jaccardVerify(cand, sized, sized, threshold)
   }
 
   /** The per-document dedup SIGNATURE (id, blk, sh = sorted distinct
@@ -456,8 +430,7 @@ object Dedup {
       threshold: Double = 0.7
   ): DataFrame = {
     val prepped = prepDocs(df, idCol, textCol, blockKey, shingleN)
-    df.select(col(idCol)).join(dupIdsFromPrepped(prepped, threshold, None)
-      .select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    without(df, idCol, dupIdsFromPrepped(prepped, threshold, None))
   }
 
   /** The ids a batch-internal dedup REMOVES (cluster members that are not
@@ -481,10 +454,18 @@ object Dedup {
       case Some(p) => ppjoinFromPrefixed(p, prepped, None, threshold)
       case None    => ppjoinFromPrepped(prepped, None, threshold)
     }
-    val clusters = resolveClusters(
-      exactEdges.unionByName(nearEdges.select(col("id_a"), col("id_b"))))
-    clusters.where(col("id") =!= col("cluster_id")).select(col("id"))
+    duplicateIds(exactEdges.unionByName(nearEdges.select(col("id_a"), col("id_b"))))
   }
+
+  /** The ids a pair set REMOVES: [[resolveClusters]] members that are not
+    * their cluster's min-id keeper.
+    */
+  private def duplicateIds(pairs: DataFrame): DataFrame =
+    resolveClusters(pairs).where(col("id") =!= col("cluster_id")).select(col("id"))
+
+  /** `df`'s `idCol` values minus `ids` (an `id` column): ONE anti join. */
+  private def without(df: DataFrame, idCol: String, ids: DataFrame): DataFrame =
+    df.select(col(idCol)).join(ids.select(col("id").as(idCol)), Seq(idCol), "left_anti")
 
   /** Incremental dedup — the daily-ingest production shape: admit only the
     * documents of a NEW batch that are neither exact nor near duplicates
@@ -576,8 +557,7 @@ object Dedup {
     // batch-internal pass runs on the UNPRUNED batch prefix.
     val exclude = dupIdsFromPrepped(bp, threshold, Some(bpPrefix))
       .unionByName(exactHit).unionByName(nearHit)
-    batch.select(col(idCol))
-      .join(exclude.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    without(batch, idCol, exclude)
   }
 
   /** Persist the corpus DEDUP INDEX — the [[signatures]] frame — as an
@@ -844,18 +824,11 @@ object Dedup {
     }
     val banded = sig.select(col("id"), col("sig"),
       explode(array(bandExprs: _*)).as("bkey"))
-    val capped = banded
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("bkey"))))
-      .where(col("bsize") <= blockCap).drop("bsize")
-    val a = capped.select(col("bkey"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = capped.select(col("bkey"), col("id").as("id_b"), col("sig").as("sig_b"))
     val hamming = (0 until words).map { w =>
       bit_count(element_at(col("sig_a"), w + 1)
         .bitwiseXOR(element_at(col("sig_b"), w + 1)))
     }.reduce(_ + _).cast("long")
-    a.join(b, Seq("bkey"))
-      .where(col("id_a") < col("id_b"))
+    blockedPairs(banded, Seq("bkey"), Some(blockCap), Seq("sig" -> col("sig")))
       .select(col("id_a"), col("id_b"), hamming.as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
@@ -978,30 +951,58 @@ object Dedup {
       a: DataFrame,
       b: Option[(DataFrame, DataFrame)],
       threshold: Double
+  ): DataFrame =
+    jaccardVerify(
+      blockedPairs(aPrefix, Seq("shingle", "blk"), None, Seq("sz" -> col("sz")), b.map(_._1)),
+      a, b.fold(a)(_._2), threshold)
+
+  /** THE blocked-pair core of every near-dup pair builder — SparkER's
+    * blocking → candidate step: rows of `side` sharing `key` pair up on an
+    * equi hash join, each side carrying `id` and every `payload` column
+    * (name → expression) as `id_a`/`<name>_a` and `id_b`/`<name>_b`.
+    * `cap` first drops every block of `side` holding more rows than that
+    * (degenerate buckets, before the quadratic step). Self mode (`other`
+    * None) keeps id_a < id_b; cross mode pairs `side` with `other`.
+    */
+  private def blockedPairs(
+      side: DataFrame,
+      key: Seq[String],
+      cap: Option[Int],
+      payload: Seq[(String, Column)],
+      other: Option[DataFrame] = None
   ): DataFrame = {
-    val sizeOk = least(col("a.sz"), col("b.sz")).cast("double") >=
-      lit(threshold) * greatest(col("a.sz"), col("b.sz")).cast("double")
-    val cand = (b match {
-      case None =>
-        aPrefix.as("a").join(aPrefix.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.blk") === col("b.blk") &&
-            col("a.id") < col("b.id") && sizeOk)
-      case Some((bPrefix, _)) =>
-        aPrefix.as("a").join(bPrefix.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.blk") === col("b.blk") &&
-            sizeOk)
-    }).select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    val pa = a.select(col("id").as("id_a"), col("sh").as("sh_a"),
-      col("sz").as("sz_a"))
-    val pb = b.map(_._2).getOrElse(a).select(col("id").as("id_b"),
-      col("sh").as("sh_b"), col("sz").as("sz_b"))
-    cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
+    val capped = cap.fold(side) { c =>
+      side.withColumn("bsize", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key.map(col): _*)))
+        .where(col("bsize") <= c).drop("bsize")
+    }
+    def tagged(df: DataFrame, s: String): DataFrame = df.select(key.map(col) ++
+      (col("id").as(s"id_$s") +: payload.map { case (n, e) => e.as(s"${n}_$s") }): _*)
+    val pairs = tagged(capped, "a").join(tagged(other.getOrElse(capped), "b"), key)
+    if (other.isEmpty) pairs.where(col("id_a") < col("id_b")) else pairs
+  }
+
+  /** The verify step of the Jaccard builders over [[blockedPairs]] output
+    * carrying `sz_a`/`sz_b`: the exact size-ratio prune (J ≥ t ⟹
+    * min ≥ t·max) before any payload is touched, then the distinct
+    * surviving id-pairs re-fetch their sorted shingle sets by id from
+    * `a`/`b` (id, sh, sz) and pay ONE sorted-merge intersection each.
+    * Returns (id_a, id_b, jaccard ≥ t).
+    */
+  private def jaccardVerify(cand: DataFrame, a: DataFrame, b: DataFrame,
+      t: Double): DataFrame = {
+    val sizeOk = least(col("sz_a"), col("sz_b")).cast("double") >=
+      lit(t) * greatest(col("sz_a"), col("sz_b")).cast("double")
+    def sets(df: DataFrame, s: String): DataFrame =
+      df.select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"), col("sz").as(s"sz_$s"))
+    cand.where(sizeOk).select(col("id_a"), col("id_b")).distinct()
+      .join(sets(a, "a"), Seq("id_a")).join(sets(b, "b"), Seq("id_b"))
       .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
         graft.functions.SortedIntersectCount(col("sh_a"), col("sh_b"))
           .cast("double").as("inter"))
       .select(col("id_a"), col("id_b"),
         (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+      .where(col("jaccard") >= t)
   }
 
   /** Cross-table exact n-gram Jaccard — the CONTAMINATION CHECK of a
@@ -1116,20 +1117,12 @@ object Dedup {
     // identical expression tree, so output is bit-identical (guide §4)
     val assigned = materialize(
       Ann.assign(corpus, model).withColumn("__n", Ann.norm(col("cv"))))
-    val a = assigned.select(col("__list"), col("cid").as("id_a"),
-      col("cv").as("v_a"), col("__n").as("n_a"))
-    val b = assigned.select(col("__list"), col("cid").as("id_b"),
-      col("cv").as("v_b"), col("__n").as("n_b"))
-    val pairs = a.join(b, Seq("__list"))
-      .where(col("id_a") < col("id_b"))
+    val pairs = blockedPairs(assigned.withColumnRenamed("cid", "id"), Seq("__list"),
+      None, Seq("v" -> col("cv"), "n" -> col("__n")))
       .select(col("id_a"), col("id_b"),
-        round(Ann.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")),
-          6).as("cos"))
+        round(Ann.cosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")), 6).as("cos"))
       .where(col("cos") >= threshold)
-    val clusters = resolveClusters(pairs)
-    df.select(col(idCol))
-      .join(clusters.where(col("id") =!= col("cluster_id"))
-        .select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    without(df, idCol, duplicateIds(pairs))
   }
 
   /** Embedding cosine near-dup pairs within LSH sign-buckets (see Ann). */
@@ -1147,19 +1140,10 @@ object Dedup {
     val bucketed = df.select(col(idCol).as("id"), v.as("v"))
       .withColumn("__n", graft.ann.Ann.norm(col("v")))
       .withColumn("bkey", graft.ann.Ann.signBucket(col("v"), planes))
-    val capped = bucketed
-      .withColumn("bsize", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("bkey"))))
-      .where(col("bsize") <= blockCap).drop("bsize")
-    val a = capped.select(col("bkey"), col("id").as("id_a"),
-      col("v").as("v_a"), col("__n").as("n_a"))
-    val b = capped.select(col("bkey"), col("id").as("id_b"),
-      col("v").as("v_b"), col("__n").as("n_b"))
-    a.join(b, Seq("bkey"))
-      .where(col("id_a") < col("id_b"))
+    blockedPairs(bucketed, Seq("bkey"), Some(blockCap),
+      Seq("v" -> col("v"), "n" -> col("__n")))
       .select(col("id_a"), col("id_b"),
-        (graft.ann.Ann.dot(col("v_a"), col("v_b")) /
-          (col("n_a") * col("n_b"))).as("cosine"))
+        graft.ann.Ann.cosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")).as("cosine"))
       .where(col("cosine") >= threshold)
       .distinct()
   }

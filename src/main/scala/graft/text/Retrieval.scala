@@ -140,6 +140,15 @@ object Retrieval {
         col("n_occurrences"), col("rank"))
   }
 
+  /** Tokens with the U+0001 gram-joiner excluded: a token CONTAINING the
+    * joiner would alias gram boundaries in the count table and break the
+    * context extraction (`substring_index` on the joiner) — such "words"
+    * are control-char noise, so the n-gram operators drop them up front
+    * (the oracle SQL applies the same filter).
+    */
+  private def cleanTokens(t: Column): Column =
+    filter(t, x => !x.contains("\u0001"))
+
   /** Bigram-LM document scoring — the stronger perplexity proxy
     * (word-order aware, unlike [[unigramLogProb]]): with the corpus as its
     * own LM, avg over transitions of ln p(w_i | w_{i−1}),
@@ -153,15 +162,6 @@ object Retrieval {
     * micro-units and integer-sum (order-free, exact). Documents with < 2
     * tokens score null.
     */
-  /** Tokens with the U+0001 gram-joiner excluded: a token CONTAINING the
-    * joiner would alias gram boundaries in the count table and break the
-    * context extraction (`substring_index` on the joiner) — such "words"
-    * are control-char noise, so the n-gram operators drop them up front
-    * (the oracle SQL applies the same filter).
-    */
-  private def cleanTokens(t: Column): Column =
-    filter(t, x => !x.contains("\u0001"))
-
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val prepped = df.select(col(idCol).as("__id"),
       cleanTokens(TextHash.lowerTokens(col(textCol))).as("__tk"))

@@ -156,14 +156,6 @@ object Sampling {
       ratesForTokenBudget(df, strataCol, tokensCol, weights, budget),
       defaultRate = 0.0, salt = salt)
 
-  /** Deterministic train/val/test (or any named-fraction) split assignment:
-    * the identity hash band (1/1000ths, same quantization as [[keepAtRate]])
-    * walks the cumulative fraction thresholds in the given order. Pure
-    * per-row expression — no shuffle, stable under re-runs/resharding, and
-    * a row can never land in two splits (the failure mode of per-split
-    * independent sampling). Rounding drift in the last band falls into the
-    * final split.
-    */
   /** DSIR-style importance weights ("Data Selection for Language Models
     * via Importance Resampling", Xie et al. 2023) with hashed-unigram
     * features: score every document by how much more likely its tokens are
@@ -245,6 +237,14 @@ object Sampling {
     weight + -log(-log(u))
   }
 
+  /** Deterministic train/val/test (or any named-fraction) split assignment:
+    * the identity hash band (1/1000ths, same quantization as [[keepAtRate]])
+    * walks the cumulative fraction thresholds in the given order. Pure
+    * per-row expression — no shuffle, stable under re-runs/resharding, and
+    * a row can never land in two splits (the failure mode of per-split
+    * independent sampling). Rounding drift in the last band falls into the
+    * final split.
+    */
   def assignSplit(
       identity: Column,
       fractions: Seq[(String, Double)],

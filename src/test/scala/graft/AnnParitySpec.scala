@@ -325,4 +325,37 @@ class AnnParitySpec extends GraftSuite {
       }
     }
   }
+
+  test("zero and null vectors: no cosine, so no pair and no top-k row in any cosine pass") {
+    val dim = 8
+    val (zero, nul) = (100L, 101L)
+    // 32 complete vectors, one zero vector and one null vector; threshold
+    // -1 and one plane make every scored pair qualify, so a zero vector
+    // that got a cosine would show up in every pass
+    val corpus = (draws(Gen.listOfN(dim, Gen.choose(-1.0, 1.0)), 32)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) } ++
+      Seq((zero, Seq.fill(dim)(0.0)), (nul, null: Seq[Double]))).toDF("cid", "vec")
+    val queries = corpus.where(col("cid") < 4 || col("cid") >= zero)
+      .select(col("cid").as("qid"), col("vec"))
+    val model = Ann.ivfTrain(corpus, 4, iterations = 1)
+    def pairs(df: DataFrame): Array[(Long, Long)] =
+      df.select(df.columns.take(2).map(col): _*).as[(Long, Long)].collect()
+    for ((name, out) <- Seq(
+        "bruteTopK" -> Ann.bruteTopK(queries, corpus, k = 3),
+        "lshTopK" -> Ann.lshTopK(queries, corpus, k = 3, planes = 1),
+        "ivfTopK" -> Ann.ivfTopK(queries, corpus, model, k = 3, nProbe = 4),
+        "embeddingPairs" -> graft.text.Dedup.embeddingPairs(
+          corpus, "cid", "vec", planes = 1, threshold = -1.0))) {
+      val got = pairs(out)
+      assert(got.nonEmpty && got.forall { case (a, b) => a < zero && b < zero },
+        s"$name: ${got.filter { case (a, b) => a >= zero || b >= zero }.toSeq}")
+    }
+    // the zero vector shares a list with others yet pairs with none, so it
+    // stays its own cluster's keeper
+    val kept = graft.text.Dedup.semanticDedup(
+      corpus.select(col("cid").as("id"), col("vec").as("emb")), "id", "emb", 2,
+      threshold = -1.0).as[Long].collect().toSet
+    assert(kept.contains(zero) && kept.contains(nul), s"kept=$kept")
+    assert(kept.size < corpus.count(), "complete vectors in one list must merge")
+  }
 }

@@ -77,6 +77,41 @@ class PlanAuditSpec extends GraftSuite {
     assert(p.contains("bkey"), "probe join must key on the bucket")
   }
 
+  test("pair builders (q27/q29/q34/q50): equi hash joins on the block key, one cap window") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.flatMap(_.references.map(_.name))
+    for ((q, key, capped) <- Seq(("q27_ngram_jaccard", Seq("shingle", "blk"), false),
+        ("q29_minhash_pairs", Seq("bkey"), true), ("q34_embed_neardup", Seq("bkey"), true),
+        ("q50_simhash_pairs", Seq("bkey"), true))) graft.text.Dedup.withCache {
+      val df = SparkEntry.queries(q)(spark, sfSmall)
+      val p = plan(df)
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$q must pair inside blocks only:\n$p")
+      val all = nodes(df.queryExecution.executedPlan)
+      val joinKeys = all.collect {
+        case j: HashJoin => names(j.leftKeys)
+        case j: SortMergeJoinExec => names(j.leftKeys)
+      }
+      assert(joinKeys.contains(key), s"$q: no equi hash join on $key, got $joinKeys:\n$p")
+      // both join sides read the one cap window (count over the block key);
+      // the physical plan instantiates it once per side
+      val windows = all.collect { case w: WindowExec =>
+        (names(w.partitionSpec), w.windowExpression.map(_.toString
+          .replaceAll("#\\d+L?", "")).mkString) }.distinct
+      if (capped) assert(windows.size == 1 && windows.head._1 == key,
+        s"$q: want one cap window over $key, got $windows")
+      else assert(windows.forall(_._1 != key), s"$q is uncapped, got $windows")
+    }
+  }
+
   test("egoSearch acquisitions: global mean-max joins as a broadcast, no extra shuffle") {
     // the KG acquisition needs max(pred_mean) over the whole search space —
     // it must arrive as a broadcast 1-row aggregate, never a sort-merge

@@ -1,0 +1,77 @@
+#!/usr/bin/env python3
+"""Diff two graft.run.Probe plan-dump directories.
+
+Usage: python3 tools/plan_diff.py <parentDir> <changeDir>
+
+Each directory holds one `<query>.txt` per query, as written by
+`graft.run.Probe <out.json> <planDir> ...` (`explain("formatted")`).
+Before comparing, every plan is normalized: expression ids (`#123`,
+`#123L`), `plan_id=N` tags, temp/checkpoint paths and JVM object
+identities (lambda class names, `@hashcode`) are replaced by fixed
+tokens, so two runs of the same code compare equal.
+
+Prints one line per query: its Exchange and Sort counts on both sides
+and SAME / DIFF (or the side it is missing from). For a DIFF it then
+prints a unified diff of the normalized plans. Exits 1 on any
+difference or missing query, 0 when every plan matches.
+Dev-only tool — the engine itself has no Python dependency.
+"""
+import difflib
+import os
+import re
+import sys
+
+NORMALIZE = [
+    (re.compile(r"#\d+L?\b"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(file:)?/(tmp|private/var|var/folders)/[^\s,\]\)]*"), "<tmp>"),
+    (re.compile(r"spark-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
+     "spark-<uuid>"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"@[0-9a-f]{4,8}\b"), "@<obj>"),
+]
+EXCHANGE = re.compile(r"^\(\d+\) \w*Exchange\b", re.M)
+SORT = re.compile(r"^\(\d+\) Sort\b", re.M)
+
+
+def normalize(text):
+    for pattern, token in NORMALIZE:
+        text = pattern.sub(token, text)
+    return text
+
+
+def counts(text):
+    return len(EXCHANGE.findall(text)), len(SORT.findall(text))
+
+
+def load(d):
+    return {f[:-4]: open(os.path.join(d, f), encoding="utf-8").read()
+            for f in sorted(os.listdir(d)) if f.endswith(".txt")}
+
+
+def main(parent_dir, change_dir):
+    parent, change = load(parent_dir), load(change_dir)
+    bad = 0
+    for q in sorted(set(parent) | set(change)):
+        if q not in change or q not in parent:
+            print(f"{q:32s} MISSING in {'change' if q not in change else 'parent'}")
+            bad += 1
+            continue
+        p, c = normalize(parent[q]), normalize(change[q])
+        (pe, ps), (ce, cs) = counts(p), counts(c)
+        same = p == c
+        print(f"{q:32s} exchanges {pe:>2} -> {ce:>2}  sorts {ps:>2} -> {cs:>2}  "
+              f"{'SAME' if same else 'DIFF'}")
+        if not same:
+            bad += 1
+            sys.stdout.writelines(difflib.unified_diff(
+                p.splitlines(keepends=True), c.splitlines(keepends=True),
+                f"parent/{q}.txt", f"change/{q}.txt", n=1))
+    print(f"== {len(set(parent) | set(change)) - bad} same / {bad} different ==")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    sys.exit(main(sys.argv[1], sys.argv[2]))
