@@ -267,10 +267,7 @@ object SparkEntry {
       val grams = graft.search.GramCV.fitWithFold(
         li(s, dir), Seq("l_quantity"), "l_extendedprice",
         3, pmod(col("l_orderkey"), lit(3)))
-      val total = grams.folds.reduce(_ merge _)
-      val rows = grams.folds.zipWithIndex.map { case (test, f) =>
-        val beta = graft.search.GramCV.solve(total diff test, Seq(0))
-        val r2 = graft.search.GramCV.r2(test, Seq(0), beta)
+      val rows = grams.foldR2(Seq(0)).zipWithIndex.map { case (r2, f) =>
         (f.toLong, BigDecimal(r2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
       s.createDataFrame(rows.toSeq).toDF("fold", "r2")

@@ -23,16 +23,10 @@ object CoefFit {
     * aggregation pass (Gram of [terms | 1 | y]).
     */
   def linearTerms(df: DataFrame, y: Column, terms: Seq[Column]): (DenseVector[Double], Double) = {
-    val z = terms.map(_.cast("double")) :+ lit(1.0) :+ y.cast("double")
-    val p = z.size
-    val aggs = for { i <- 0 until p; j <- i until p }
-      yield sum(z(i) * z(j)).as(s"g_${i}_$j")
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def g(i: Int, j: Int) =
-      if (i <= j) row.getAs[Double](s"g_${i}_$j") else row.getAs[Double](s"g_${j}_$i")
+    val g = Gram.of(df, terms.map(_.cast("double")) :+ lit(1.0) :+ y.cast("double"))
     val k = terms.size + 1 // + intercept
-    val xtx = DenseMatrix.tabulate(k, k)((i, j) => g(i, j))
-    val xty = DenseVector.tabulate(k)(i => g(i, p - 1))
+    val xtx = g.m(0 until k, 0 until k)
+    val xty = g.m(0 until k, k)
     val beta = pinv(xtx) * xty
     (beta(0 until terms.size), beta(terms.size))
   }

@@ -14,28 +14,35 @@ import org.apache.spark.sql.functions._
   * (symbol/functions/npfunc.py:6-58) lower to higher-order array functions.
   */
 sealed trait FeatureExpr {
-  def height: Int = this match {
-    case Terminal(_) | ConstE(_) => 0
-    case Unary(_, c)             => 1 + c.height
-    case Binary(_, l, r)         => 1 + math.max(l.height, r.height)
-    case GroupReduce(_, c)       => 1 + c.height
-    case GroupMap(_, c)          => 1 + c.height
+  def children: Seq[FeatureExpr] = this match {
+    case Terminal(_) | ConstE(_) => Nil
+    case Unary(_, c)             => Seq(c)
+    case Binary(_, l, r)         => Seq(l, r)
+    case GroupReduce(_, c)       => Seq(c)
+    case GroupMap(_, c)          => Seq(c)
   }
-  def size: Int = this match {
-    case Terminal(_) | ConstE(_) => 1
-    case Unary(_, c)             => 1 + c.size
-    case Binary(_, l, r)         => 1 + l.size + r.size
-    case GroupReduce(_, c)       => 1 + c.size
-    case GroupMap(_, c)          => 1 + c.size
+  /** This node with `cs` as its children (same op; a leaf is unchanged). */
+  def withChildren(cs: Seq[FeatureExpr]): FeatureExpr = this match {
+    case Terminal(_) | ConstE(_) => this
+    case Unary(op, _)            => Unary(op, cs(0))
+    case Binary(op, _, _)        => Binary(op, cs(0), cs(1))
+    case GroupReduce(op, _)      => GroupReduce(op, cs(0))
+    case GroupMap(op, _)         => GroupMap(op, cs(0))
   }
-  def terminals: Seq[String] = this match {
-    case Terminal(n)       => Seq(n)
-    case ConstE(_)         => Nil
-    case Unary(_, c)       => c.terminals
-    case Binary(_, l, r)   => l.terminals ++ r.terminals
-    case GroupReduce(_, c) => c.terminals
-    case GroupMap(_, c)    => c.terminals
+  /** The one walk over the tree: `f` folds every node with its depth in
+    * preorder (a node, then each child's subtree left to right). Node i of
+    * this order is node i of GP tree surgery.
+    */
+  def foldPreorder[A](z: A)(f: (A, FeatureExpr, Int) => A): A = {
+    def go(acc: A, n: FeatureExpr, depth: Int): A =
+      n.children.foldLeft(f(acc, n, depth))(go(_, _, depth + 1))
+    go(z, this, 0)
   }
+  /** Every node in preorder. */
+  def nodes: Vector[FeatureExpr] = foldPreorder(Vector.empty[FeatureExpr])((acc, n, _) => acc :+ n)
+  def height: Int = foldPreorder(0)((h, _, depth) => math.max(h, depth))
+  def size: Int = foldPreorder(0)((n, _, _) => n + 1)
+  def terminals: Seq[String] = nodes.collect { case Terminal(n) => n }
   /** Human-readable rendering (the reference's dual str/repr). */
   def render: String = this match {
     case Terminal(n)       => n

@@ -109,14 +109,4 @@ object Scoring {
 
   /** Worst-score substitution (uniform_score, scores.py:72-81). */
   val worst: Double = -1.0
-
-  /** Plain (unfitted) r2 / mse of a single prediction column vs y. */
-  def r2(df: DataFrame, y: Column, yhat: Column): Double = {
-    val r = df.agg(
-      sum((y - yhat) * (y - yhat)).as("sse"),
-      sum(y * y).as("syy"), sum(y).as("sy"), count(lit(1)).as("n")).head()
-    val sst = r.getAs[Double]("syy") -
-      math.pow(r.getAs[Double]("sy"), 2) / r.getAs[Long]("n")
-    1.0 - r.getAs[Double]("sse") / sst
-  }
 }

@@ -1,8 +1,10 @@
 package graft.search
 
-import breeze.linalg.{DenseMatrix, DenseVector, inv}
+import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.expr.Gram
 
 /** EGO (efficient global optimization) ranking — the reference's
   * `featurebox/ego/multiplyego.py` rebuilt for Spark scale.
@@ -45,9 +47,20 @@ object Ego {
     when(u < 0.368, lit(0.0)).when(u < 0.736, lit(1.0)).otherwise(lit(2.0))
   }
 
-  final case class Model(betas: Array[DenseVector[Double]], features: Seq[String])
+  final case class Model(betas: Array[DenseVector[Double]], features: Seq[String]) {
 
-  /** Fit B bootstrap linear models in one aggregation pass. */
+    /** Bootstrap model `bi`'s prediction Σ col(f_i)·β_i + β_d as a Column:
+      * the one predictor every acquisition evaluates.
+      */
+    def prediction(bi: Int): Column =
+      (features.zipWithIndex.map { case (f, i) => col(f) * lit(betas(bi)(i)) } :+
+        lit(betas(bi)(features.size))).reduce(_ + _)
+  }
+
+  /** Fit B bootstrap linear models: all B weighted Grams in one
+    * aggregation pass, each solved by [[GramCV.solve]] with a `ridge` on
+    * the feature slots (not on the intercept).
+    */
   def fitBootstrap(
       train: DataFrame,
       features: Seq[String],
@@ -58,24 +71,8 @@ object Ego {
   ): Model = {
     val z = features.map(f => col(f).cast("double")) :+ lit(1.0) :+
       col(y).cast("double")
-    val p = z.size
-    val aggs = for {
-      bi <- 0 until b
-      i <- 0 until p
-      j <- i until p
-    } yield sum(bootWeight(rowKey, bi) * z(i) * z(j)).as(s"g_${bi}_${i}_$j")
-    val row = train.agg(aggs.head, aggs.tail: _*).head()
-    val betas = (0 until b).map { bi =>
-      val m = DenseMatrix.tabulate(p - 1, p - 1) { (i, j) =>
-        val (a, c) = if (i <= j) (i, j) else (j, i)
-        row.getAs[Double](s"g_${bi}_${a}_$c") +
-          (if (i == j) ridge else 0.0)
-      }
-      val v = DenseVector.tabulate(p - 1)(i =>
-        row.getAs[Double](s"g_${bi}_${math.min(i, p - 1)}_${p - 1}"))
-      inv(m) * v
-    }.toArray
-    Model(betas, features)
+    val grams = Gram.build(train, z, (0 until b).map(bootWeight(rowKey, _))).head._2
+    Model(grams.map(GramCV.solve(_, features.indices, ridge)).toArray, features)
   }
 
   /** Single-feature bootstrap fit with EXACT integer sufficient statistics —
@@ -131,12 +128,7 @@ object Ego {
     *   L = max(0, mean − y*),  EI = L·Pi  (multiplyego.py:166-216).
     */
   def rank(space: DataFrame, model: Model, yStar: Double): DataFrame = {
-    val preds = model.betas.zipWithIndex.map { case (beta, bi) =>
-      val terms = model.features.zipWithIndex.map { case (f, i) =>
-        col(f) * lit(beta(i))
-      } :+ lit(beta(model.features.size))
-      terms.reduce(_ + _).as(s"p_$bi")
-    }
+    val preds = model.betas.indices.map(bi => model.prediction(bi).as(s"p_$bi"))
     val withPreds = space.select(space.columns.map(col) ++ preds: _*)
     val pcols = model.betas.indices.map(bi => col(s"p_$bi"))
     val arr = array(pcols: _*)
@@ -180,12 +172,7 @@ object Ego {
   ): DataFrame = {
     require(Seq("ego", "kg", "maxp", "no").contains(rankway),
       s"rankway must be ego|kg|maxp|no, got $rankway")
-    val preds = model.betas.zipWithIndex.map { case (beta, bi) =>
-      val terms = model.features.zipWithIndex.map { case (f, i) =>
-        col(f) * lit(beta(i))
-      } :+ lit(beta(model.features.size))
-      terms.reduce(_ + _).as(s"p_$bi")
-    }
+    val preds = model.betas.indices.map(bi => model.prediction(bi).as(s"p_$bi"))
     val withPreds = space.select(space.columns.map(col) ++ preds: _*)
     val arr = array(model.betas.indices.map(bi => col(s"p_$bi")): _*)
     val b = model.betas.length.toDouble
@@ -255,17 +242,10 @@ object Ego {
       "front points must have one coordinate per target model")
     val b = models.head.betas.length
     require(models.forall(_.betas.length == b), "models must share B")
-    def pred(t: Int, bi: Int): Column = {
-      val m = models(t)
-      val terms = m.features.zipWithIndex.map { case (f, i) =>
-        col(f) * lit(m.betas(bi)(i))
-      } :+ lit(m.betas(bi)(m.features.size))
-      terms.reduce(_ + _)
-    }
     // Pi: fraction of bootstrap draws not strictly dominated by any front pt
     val nonDominated = (0 until b).map { bi =>
       val dominatedByAny = front.map { fp =>
-        (0 until models.size).map(t => pred(t, bi) < lit(fp(t)))
+        (0 until models.size).map(t => models(t).prediction(bi) < lit(fp(t)))
           .reduce(_ && _)
       }.reduceOption(_ || _).getOrElse(lit(false))
       when(dominatedByAny, lit(0.0)).otherwise(lit(1.0))
@@ -273,7 +253,7 @@ object Ego {
     val pi = nonDominated.reduce(_ + _) / lit(b.toDouble)
     // L: nearest-front distance of the bootstrap-mean prediction vector
     val meanPred = (0 until models.size).map(t =>
-      (0 until b).map(bi => pred(t, bi)).reduce(_ + _) / lit(b.toDouble))
+      (0 until b).map(bi => models(t).prediction(bi)).reduce(_ + _) / lit(b.toDouble))
     val l = front.map { fp =>
       (0 until models.size).map(t => abs(meanPred(t) - lit(fp(t))))
         .reduce(least(_, _))

@@ -4,7 +4,7 @@ import breeze.linalg.{DenseMatrix, DenseVector, MatrixSingularException, inv}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expr.Scoring
+import graft.expr.{Gram, Scoring}
 
 /** One-pass cross-validated linear scoring for feature-subset search.
   *
@@ -19,30 +19,30 @@ import graft.expr.Scoring
   */
 final case class FoldGrams(
     features: Seq[String],
-    folds: Array[GramCV.Gram]
+    folds: Array[Gram]
 ) {
   val d: Int = features.size
-  private val total: GramCV.Gram = folds.reduce(_ merge _)
+  private val total: Gram = folds.reduce(_ merge _)
 
-  private def subIdx(subset: Seq[Int]): Array[Int] =
-    (subset :+ d).toArray // + intercept slot is implicit via augmented design
+  /** Per-fold R² of OLS on the given feature-index subset: fold f's score
+    * is the fit on every other fold (train = all−f) tested on fold f.
+    * `ridge` > 0 turns the fit into ridge regression on the same Grams —
+    * the "different base estimator" axis that multi-model UGS/SUM compose
+    * over. A singular train Gram (collinear subset) scores
+    * `Scoring.worst`; any other error propagates.
+    */
+  def foldR2(subset: Seq[Int], ridge: Double = 0.0): Array[Double] =
+    folds.map { test =>
+      try GramCV.r2(test, subset, GramCV.solve(total diff test, subset, ridge))
+      catch { case _: MatrixSingularException => Scoring.worst }
+    }
 
-  /** CV R² of OLS on the given feature-index subset (train = all−fold,
-    * test = fold), mean over folds. Mirrors calculate_cv_score
-    * (scores.py:157-277) with shuffle=False determinism. `ridge` > 0 turns
-    * the fit into ridge regression on the same Grams — the "different base
-    * estimator" axis that multi-model UGS/SUM compose over. A singular
-    * train Gram (collinear subset) scores `Scoring.worst`; any other error
-    * propagates.
+  /** CV R²: the mean of [[foldR2]]. Mirrors calculate_cv_score
+    * (scores.py:157-277) with shuffle=False determinism; a NaN mean scores
+    * `Scoring.worst`.
     */
   def cvR2(subset: Seq[Int], ridge: Double = 0.0): Double = {
-    val scores = folds.map { test =>
-      val train = total diff test
-      try {
-        val beta = GramCV.solve(train, subset, ridge)
-        GramCV.r2(test, subset, beta)
-      } catch { case _: MatrixSingularException => Scoring.worst }
-    }
+    val scores = foldR2(subset, ridge)
     val s = scores.sum / scores.length
     if (s.isNaN) Scoring.worst else s
   }
@@ -58,12 +58,6 @@ final case class FoldGrams(
 
 object GramCV {
 
-  /** Sufficient statistics of one fold: G = Z'Z for Z = [X | 1 | y]. */
-  final case class Gram(m: DenseMatrix[Double], n: Long) {
-    def merge(o: Gram): Gram = Gram(m + o.m, n + o.n)
-    def diff(o: Gram): Gram = Gram(m - o.m, n - o.n)
-  }
-
   /** One aggregation pass building every fold's Gram matrix.
     * Output row count = k (tiny); all heavy lifting is map-side partial
     * aggregation of (d+2)² running sums.
@@ -77,7 +71,10 @@ object GramCV {
   ): FoldGrams =
     fitWithFold(df, features, y, k, Scoring.foldCol(foldKeys, k))
 
-  /** Variant taking an explicit fold column (values 0..k-1). */
+  /** Variant taking an explicit fold column (values 0..k-1). A fold with
+    * no rows has an empty Gram; a null fold value or one outside 0..k-1 is
+    * a caller bug and throws IllegalArgumentException naming the values.
+    */
   def fitWithFold(
       df: DataFrame,
       features: Seq[String],
@@ -85,33 +82,14 @@ object GramCV {
       k: Int,
       fold: Column
   ): FoldGrams = {
-    val d = features.size
     val z = features.map(f => col(f).cast("double")) :+ lit(1.0) :+
       col(y).cast("double")
-    val p = z.size
-    val aggs = for {
-      i <- 0 until p
-      j <- i until p
-    } yield sum(z(i) * z(j)).as(s"g_${i}_$j")
-    val grouped = df
-      .withColumn("__fold", fold.cast("int"))
-      .groupBy(col("__fold"))
-      .agg(count(lit(1)).as("__n"), aggs: _*)
-      .collect()
-    val folds = (0 until k).map { f =>
-      val rowOpt = grouped.find(_.getAs[Int]("__fold") == f)
-      val m = DenseMatrix.zeros[Double](p, p)
-      var n = 0L
-      rowOpt.foreach { row =>
-        n = row.getAs[Long]("__n")
-        for (i <- 0 until p; j <- i until p) {
-          val v = row.getAs[Double](s"g_${i}_$j")
-          m(i, j) = v; m(j, i) = v
-        }
-      }
-      Gram(m, n)
-    }.toArray
-    FoldGrams(features, folds)
+    val byFold = Gram.build(df, z, key = Some(fold.cast("int")))
+      .map { case (f, g) => (f, g.head) }.toMap
+    val bad = byFold.keys.filterNot(f => (0 until k).contains(f))
+    require(bad.isEmpty, s"fold values outside 0 until $k: ${bad.mkString(", ")}")
+    val empty = Gram(DenseMatrix.zeros[Double](z.size, z.size), 0L)
+    FoldGrams(features, Array.tabulate(k)(f => byFold.getOrElse(f, empty)))
   }
 
   /** OLS / ridge solve on the subset (+ intercept): beta = (X'X + λI)⁻¹ X'y

@@ -5,6 +5,8 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.Gram
+
 /** Feature-subset selection suite: the reference's `featurebox/selection/`
   * re-architected per SURVEY §2.10 — Spark computes the data-heavy
   * sufficient statistics (correlation matrix, fold Grams) in single passes;
@@ -18,17 +20,10 @@ object Corr {
     */
   def matrix(df: DataFrame, cols: Seq[String]): Array[Array[Double]] = {
     val d = cols.size
-    val c = cols.map(n => col(n).cast("double"))
-    val aggs =
-      c.zipWithIndex.map { case (x, i) => sum(x).as(s"s_$i") } ++
-        (for { i <- 0 until d; j <- i until d }
-          yield sum(c(i) * c(j)).as(s"p_${i}_$j")) ++
-        Seq(count(lit(1)).as("n"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getAs[Long]("n").toDouble
-    val s = (0 until d).map(i => row.getAs[Double](s"s_$i"))
-    def p(i: Int, j: Int) =
-      if (i <= j) row.getAs[Double](s"p_${i}_$j") else row.getAs[Double](s"p_${j}_$i")
+    // the constant column's row of the Gram holds the column sums
+    val g = Gram.of(df, cols.map(n => col(n).cast("double")) :+ lit(1.0))
+    val (p, n) = (g.m, g.n.toDouble)
+    def s(i: Int) = p(i, d)
     Array.tabulate(d, d) { (i, j) =>
       val cov = p(i, j) / n - s(i) / n * s(j) / n
       val vi = p(i, i) / n - s(i) / n * s(i) / n

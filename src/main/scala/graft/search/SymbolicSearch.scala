@@ -128,8 +128,7 @@ object SymbolicSearch {
     * rendering.
     */
   def depart(e: FeatureExpr): Seq[FeatureExpr] = {
-    val subs = (1 until e.size).map(i => subtreeAt(e, i))
-      .filter(s => s.size >= 3 && s.terminals.size >= 2)
+    val subs = e.nodes.tail.filter(s => s.size >= 3 && s.terminals.size >= 2)
     subs.foldLeft(Vector.empty[FeatureExpr])((acc, s) =>
       if (acc.exists(_.render == s.render)) acc else acc :+ s)
   }
@@ -149,45 +148,21 @@ object SymbolicSearch {
 
   // --- subtree surgery (cxOnePoint gp.py:212-235, mutUniform :269-443) ----
 
-  private def nodes(e: FeatureExpr): Int = e.size
-
-  private def subtreeAt(e: FeatureExpr, idx: Int): FeatureExpr = {
-    var i = -1
-    var found: FeatureExpr = e
-    def go(n: FeatureExpr): Unit = {
-      i += 1
-      if (i == idx) found = n
-      else n match {
-        case Unary(_, c)       => go(c)
-        case Binary(_, l, r)   => go(l); go(r)
-        case GroupReduce(_, c) => go(c)
-        case GroupMap(_, c)    => go(c)
-        case _                 =>
-      }
+  /** `e` with its preorder node `idx` (the indexing of [[FeatureExpr.nodes]])
+    * replaced by `rep`.
+    */
+  private def replaceAt(e: FeatureExpr, idx: Int, rep: FeatureExpr): FeatureExpr =
+    if (idx == 0) rep
+    else {
+      val starts = e.children.scanLeft(1)(_ + _.size) // each child's first index
+      e.withChildren(e.children.zip(starts).map { case (c, at) =>
+        if (idx >= at && idx < at + c.size) replaceAt(c, idx - at, rep) else c
+      })
     }
-    go(e)
-    found
-  }
-
-  private def replaceAt(e: FeatureExpr, idx: Int, rep: FeatureExpr): FeatureExpr = {
-    var i = -1
-    def go(n: FeatureExpr): FeatureExpr = {
-      i += 1
-      if (i == idx) rep
-      else n match {
-        case Unary(op, c)       => Unary(op, go(c))
-        case Binary(op, l, r)   => val nl = go(l); Binary(op, nl, go(r))
-        case GroupReduce(op, c) => GroupReduce(op, go(c))
-        case GroupMap(op, c)    => GroupMap(op, go(c))
-        case leafNode           => leafNode
-      }
-    }
-    go(e)
-  }
 
   def crossover(rnd: Random, a: FeatureExpr, b: FeatureExpr): (FeatureExpr, FeatureExpr) = {
-    val ia = rnd.nextInt(nodes(a)); val ib = rnd.nextInt(nodes(b))
-    val sa = subtreeAt(a, ia); val sb = subtreeAt(b, ib)
+    val ia = rnd.nextInt(a.size); val ib = rnd.nextInt(b.size)
+    val sa = a.nodes(ia); val sb = b.nodes(ib)
     (replaceAt(a, ia, sb), replaceAt(b, ib, sa))
   }
 
@@ -195,7 +170,7 @@ object SymbolicSearch {
   def mutate(rnd: Random, reg: Registry, e: FeatureExpr, maxH: Int,
       premap: Option[PreMap] = None,
       namesOverride: Option[Seq[String]] = None): FeatureExpr = {
-    val i = rnd.nextInt(nodes(e))
+    val i = rnd.nextInt(e.size)
     replaceAt(e, i, grow(rnd, reg, math.max(1, maxH - 2), premap, namesOverride))
   }
 
@@ -203,9 +178,8 @@ object SymbolicSearch {
     * own terminals — shortens expressions without losing their inputs.
     */
   def mutShrink(rnd: Random, e: FeatureExpr): FeatureExpr = {
-    val i = rnd.nextInt(nodes(e))
-    val sub = subtreeAt(e, i)
-    val leaves = sub.terminals
+    val i = rnd.nextInt(e.size)
+    val leaves = e.nodes(i).terminals
     if (leaves.isEmpty) e
     else replaceAt(e, i, Terminal(leaves(rnd.nextInt(leaves.size))))
   }
@@ -214,33 +188,12 @@ object SymbolicSearch {
     * (children preserved) — the reference's same-arity node swap.
     */
   def mutNode(rnd: Random, e: FeatureExpr): FeatureExpr = {
-    val i = rnd.nextInt(nodes(e))
-    subtreeAt(e, i) match {
+    val i = rnd.nextInt(e.size)
+    e.nodes(i) match {
       case Unary(_, c)      => replaceAt(e, i, Unary(unaryOps(rnd.nextInt(unaryOps.size)), c))
       case Binary(_, l, r)  => replaceAt(e, i, Binary(binaryOps(rnd.nextInt(binaryOps.size)), l, r))
       case _                => e
     }
-  }
-
-  /** Preorder node indices (the same indexing as subtreeAt/replaceAt) of
-    * every terminal, with its name.
-    */
-  private def terminalSites(e: FeatureExpr): Vector[(Int, String)] = {
-    val out = Vector.newBuilder[(Int, String)]
-    var i = -1
-    def go(n: FeatureExpr): Unit = {
-      i += 1
-      n match {
-        case Terminal(nm)      => out += ((i, nm))
-        case Unary(_, c)       => go(c)
-        case Binary(_, l, r)   => go(l); go(r)
-        case GroupReduce(_, c) => go(c)
-        case GroupMap(_, c)    => go(c)
-        case _                 =>
-      }
-    }
-    go(e)
-    out.result()
   }
 
   /** mutDifferentReplacementVerbose (gp.py:368-443): diversify duplicated
@@ -260,9 +213,9 @@ object SymbolicSearch {
       if (dup.size <= fresh.size) rnd.shuffle(fresh.toList).take(dup.size)
       else List.fill(dup.size)(fresh(rnd.nextInt(fresh.size)))
     dup.zip(replacements).foldLeft(e) { case (cur, (name, repl)) =>
-      val sites = terminalSites(cur).filter(_._2 == name)
+      val sites = cur.nodes.zipWithIndex.collect { case (Terminal(`name`), i) => i }
       if (sites.isEmpty) cur
-      else replaceAt(cur, sites(rnd.nextInt(sites.size))._1, Terminal(repl))
+      else replaceAt(cur, sites(rnd.nextInt(sites.size)), Terminal(repl))
     }
   }
 

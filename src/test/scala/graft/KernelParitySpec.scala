@@ -92,6 +92,61 @@ class KernelParitySpec extends GraftSuite {
     }
   }
 
+  test("Erf == commons-math3 erf within the A&S 7.1.26 bound over generated doubles") {
+    import org.apache.commons.math3.special.{Erf => Exact}
+    val x = Gen.frequency(
+      6 -> Gen.choose(-3.0, 3.0),
+      2 -> Gen.choose(-40.0, 40.0),
+      1 -> Gen.oneOf(0.0, -0.0, 1e-300, -1e-300, 1e300, -1e300,
+        Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN))
+    val rows = draws(Gen.option(x), 400) ++
+      Seq(None, Some(0.0), Some(-0.0), Some(Double.PositiveInfinity),
+        Some(Double.NegativeInfinity), Some(Double.NaN))
+    val df = rows.map(Tuple1(_)).toDF("x")
+    inBothModes {
+      val got = df.select(graft.functions.Erf(col("x"))).collect()
+      for ((r, i) <- got.zipWithIndex) rows(i) match {
+        case None => assert(r.isNullAt(0), "null in, null out")
+        case Some(v) if v.isNaN => assert(r.getDouble(0).isNaN, "NaN in, NaN out")
+        case Some(v) =>
+          assert(math.abs(r.getDouble(0) - Exact.erf(v)) <= 1.5e-7, s"x=$v")
+      }
+      val inf = Seq(Double.PositiveInfinity, Double.NegativeInfinity).toDF("x")
+        .select(graft.functions.Erf(col("x"))).as[Double].collect()
+      assert(inf.toSeq == Seq(1.0, -1.0))
+    }
+  }
+
+  test("DotProductD == zip_with/aggregate fold over generated vector pairs") {
+    import graft.ann.Ann
+    val x = Gen.frequency(
+      8 -> Gen.choose(-1e3, 1e3),
+      1 -> Gen.oneOf(0.0, -0.0, 1e-300, 1e300, Double.NaN, Double.PositiveInfinity))
+    // equal lengths half the time, independent (mostly mismatched) otherwise
+    val pair = Gen.oneOf(
+      Gen.choose(0, 12).flatMap(n => Gen.zip(
+        Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None), 8 -> x.map(Option(_)))),
+        Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None), 8 -> x.map(Option(_)))))),
+      Gen.zip(arrays(x, 12), arrays(x, 12)))
+    val rows = draws(pair, 400) ++ Seq(
+      (Nil, Nil), (Seq(Some(1.0)), Nil), (Seq(None), Seq(None)),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), Some(4.0))))
+    val df = rows.toDF("a", "b")
+    inBothModes {
+      val got = df.select(Ann.dot(col("a"), col("b")), Ann.dotDeclarative(col("a"), col("b")),
+        Ann.dot(col("a"), lit(null).cast("array<double>"))).collect()
+      for ((r, i) <- got.zipWithIndex) {
+        assert(r.isNullAt(0) === r.isNullAt(1), s"(a, b) = ${rows(i)}")
+        if (!r.isNullAt(0)) assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(1)), s"(a, b) = ${rows(i)}")
+        assert(r.isNullAt(2), "a null vector has no dot")
+      }
+      assert(got.count(_.isNullAt(0)) > 50 && got.count(!_.isNullAt(0)) > 50,
+        "draws did not mix null and non-null results")
+      assert(got(rows.size - 4).getDouble(0) == 0.0 && got(rows.size - 1).getDouble(0) == 11.0)
+    }
+  }
+
   test("a kernel over a column Spark cannot cast to its input type fails at analysis") {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(Seq(1L, 2L)).toDF("a").select(graft.functions.PolyHash(col("a")))

@@ -1,0 +1,125 @@
+package graft
+
+import scala.util.Random
+
+import org.apache.spark.sql.functions._
+
+import graft.expr._
+import graft.search.{Corr, GramCV, SymbolicSearch}
+
+/** The search layer's shared machinery off the bench path: the Gram
+  * core's null rule, fold-key validation, and GP tree surgery over group
+  * (array) nodes.
+  */
+class SearchSpec extends GraftSuite {
+  import spark.implicits._
+
+  private def rows(seed: Int) = {
+    val rnd = new Random(seed)
+    (1 to 90).map { i =>
+      val x0 = rnd.nextDouble() * 10; val x1 = rnd.nextDouble() * 5
+      (i.toLong, Option(x0), Option(x1), Option(3.0 * x0 - 2.0 * x1 + 1.0 + rnd.nextGaussian()))
+    }
+  }
+
+  test("a row with a null in any Gram column is left out of every sum and of n") {
+    val clean = rows(5)
+    val cleanDf = clean.toDF("id", "x0", "x1", "y")
+    val feats = Seq("x0", "x1")
+    def close(a: Double, b: Double, what: String) =
+      assert(approx(a, b, 1e-12), s"$what: $a vs $b")
+    for ((extra, what) <- Seq(
+        (91L, Some(4.0), Some(2.0), None) -> "null y",
+        (92L, Some(4.0), None, Some(9.0)) -> "null feature")) {
+      val df = (clean :+ extra).toDF("id", "x0", "x1", "y")
+      val (m, m0) = (Corr.matrix(df, feats :+ "y"), Corr.matrix(cleanDf, feats :+ "y"))
+      for (i <- m.indices; j <- m.indices) close(m(i)(j), m0(i)(j), s"$what corr($i, $j)")
+      val (g, g0) = (GramCV.fit(df, feats, "y", 3, Seq(col("id"))),
+        GramCV.fit(cleanDf, feats, "y", 3, Seq(col("id"))))
+      for (s <- Seq(Seq(0), Seq(1), Seq(0, 1))) {
+        close(g.cvR2(s), g0.cvR2(s), s"$what cvR2 $s")
+        close(g.fitR2(s), g0.fitR2(s), s"$what fitR2 $s")
+        g.coefficients(s).toArray.zip(g0.coefficients(s).toArray)
+          .foreach { case (a, b) => close(a, b, s"$what beta $s") }
+      }
+      val terms = feats.map(col)
+      val ((w, b), (w0, b0)) = (CoefFit.linearTerms(df, col("y"), terms),
+        CoefFit.linearTerms(cleanDf, col("y"), terms))
+      w.toArray.zip(w0.toArray).foreach { case (a, c) => close(a, c, s"$what W") }
+      close(b, b0, s"$what B")
+    }
+  }
+
+  test("a null or out-of-range fold key fails loudly, naming the keys") {
+    val base = rows(6).map { case (id, x0, _, y) => (id, x0, y, Option((id % 3).toInt)) }
+    val df = (base ++ Seq((91L, Some(1.0), Some(2.0), None), (92L, Some(3.0), Some(4.0), Some(5))))
+      .toDF("id", "x0", "y", "fold")
+    val e = intercept[IllegalArgumentException](
+      GramCV.fitWithFold(df, Seq("x0"), "y", 3, col("fold")))
+    assert(e.getMessage.contains("null") && e.getMessage.contains("5"), e.getMessage)
+    val nullOnly = (base :+ ((91L, Some(1.0), Some(2.0), None))).toDF("id", "x0", "y", "fold")
+    intercept[IllegalArgumentException](
+      GramCV.fitWithFold(nullOnly, Seq("x0"), "y", 3, col("fold")))
+    // the keys Scoring.foldCol makes are always in range
+    assert(GramCV.fitWithFold(df, Seq("x0"), "y", 3, Scoring.foldCol(Seq(col("id")), 3))
+      .folds.map(_.n).sum == df.count())
+  }
+
+  test("GP tree surgery over group nodes: fixed-seed renders") {
+    val tree: FeatureExpr = Binary("-",
+      GroupReduce("MAdd", GroupMap("sqrt", Terminal("g"))),
+      Binary("*", Unary("neg", Terminal("x0")),
+        GroupReduce("MSub", GroupReduce("Conv", Terminal("h")))))
+    val other: FeatureExpr = Binary("/", GroupReduce("MMul", Terminal("h")),
+      Binary("+", Terminal("x0"), Unary("abs", Terminal("x0"))))
+    val both = Binary("+", tree, other)
+    assert((tree.height, tree.size, tree.terminals) == ((4, 10, Seq("g", "x0", "h"))))
+    assert((both.height, both.size, both.terminals) ==
+      ((5, 18, Seq("g", "x0", "h", "h", "x0", "x0"))))
+    val rnd = new Random(11)
+    val out = (1 to 5).flatMap { _ =>
+      val (c1, c2) = SymbolicSearch.crossover(rnd, tree, other)
+      Seq(c1, c2, SymbolicSearch.mutShrink(rnd, tree), SymbolicSearch.mutNode(rnd, tree),
+        SymbolicSearch.mutNode(rnd, both),
+        SymbolicSearch.mutDifferentReplacement(rnd, Seq("g", "h", "x0", "x1"), both))
+    }
+    assert(out.map(_.render) == Seq(
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(abs(x0))))",
+      "(MMul(h) / (x0 + Conv(h)))",
+      "(g - (neg(x0) * MSub(Conv(h))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(h) / (x0 + abs(x0))))",
+      "((MAdd(map_sqrt(g)) - (neg(g) * MSub(Conv(h)))) + (MMul(x1) / (x0 + abs(x0))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * h))",
+      "(MMul(MSub(Conv(h))) / (x0 + abs(x0)))",
+      "(MAdd(map_sqrt(g)) - x0)",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(h) / (x0 + abs(x0))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(g)))) + (MMul(h) / (x1 + abs(x0))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(h)))",
+      "(MMul(Conv(h)) / (x0 + abs(x0)))",
+      "(MAdd(map_sqrt(g)) - (x0 * MSub(Conv(h))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(h) / (x0 + abs(x0))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(x1)))) + (MMul(h) / (g + abs(x0))))",
+      "(MAdd(map_sqrt(g)) - x0)",
+      "(MMul(h) / ((neg(x0) * MSub(Conv(h))) + abs(x0)))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(h) / (x0 / abs(x0))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(x1) / (g + abs(x0))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv((MMul(h) / (x0 + abs(x0)))))))",
+      "h",
+      "(MAdd(g) - (neg(x0) * MSub(Conv(h))))",
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h)))) + (MMul(h) / (x0 + sqrt(x0))))",
+      "((MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(g)))) + (MMul(h) / (x0 + abs(x1))))"))
+    // the surgery consumed a fixed number of draws
+    assert(rnd.nextInt(1000000) == 127794)
+    assert(SymbolicSearch.depart(both).map(_.render) == Seq(
+      "(MAdd(map_sqrt(g)) - (neg(x0) * MSub(Conv(h))))",
+      "(neg(x0) * MSub(Conv(h)))",
+      "(MMul(h) / (x0 + abs(x0)))",
+      "(x0 + abs(x0))"))
+  }
+}
