@@ -20,15 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Composition {
 
-  /** Build a composition map column per entity from long-format rows:
-    * groupBy(entity) → map(part → weight). The transcripts analog of the
-    * reference's `Composition.as_dict()` input.
-    */
-  def compositionOf(df: DataFrame, entity: String, part: String): DataFrame =
-    df.groupBy(col(entity))
-      .agg(map_from_entries(collect_list(struct(col(part), lit(1.0))))
-        .as("composition")) // placeholder; callers usually pre-count
-
   /** Long-format composition: (entity, part, n). Cheaper than materializing
     * the map when the very next step explodes it again.
     */

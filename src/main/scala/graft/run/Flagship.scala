@@ -118,14 +118,12 @@ object Flagship {
             element_at(toolsArr, col("__tool_filled").cast("int"))))
           .drop("__role", "__tool", "__tool_filled")
       else packed
-    val extra = // pipelineCompute's CPU-evidence column, when present
-      if (decoded.columns.contains("text_sig")) Seq(col("text_sig")) else Nil
     decoded
       .drop(ord: _*)
-      .select(Seq(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("ts"), col("text_len"), col("f_vec"), col("session_idx"),
         col("tool_filled"), col("lag_1"), col("lag_2"),
-        col("rolling_cnt_10"), col("rolling_sum_10")) ++ extra: _*)
+        col("rolling_cnt_10"), col("rolling_sum_10"))
   }
 
   /** The same composition WITHOUT any encoding (string keys ride the
@@ -134,31 +132,13 @@ object Flagship {
   def pipelineUnencoded(t: DataFrame, snaps: DataFrame): DataFrame =
     pipelineImpl(t, snaps, encodeDict = false)
 
-  /** COMPUTE-HEAVY variant for the 8→32 scaling adjudication (round-5
-    * verdict task #6b): identical pipeline shape and shuffle bytes plus
-    * one genuinely CPU-bound per-row kernel at the scan — a wide (8×32
-    * bit) SimHash of the corpus text folded to one long that the output
-    * carries (kept in the final select so column pruning cannot elide
-    * the work). When per-row compute, not memory bandwidth, dominates,
-    * the box should scale near-linearly 8→32 — pinning the shared-bus
-    * adjudication with the ENGINE rather than a numpy probe. Run via
-    * `SPARK_GRAFT_SCALE_PIPE=compute sbt "runMain graft.run.ScalingBench"`.
-    */
-  def pipelineCompute(t: DataFrame, snaps: DataFrame): DataFrame = {
-    val sig = graft.text.TextHash.simhashParts(col("text"), 8)
-    val heavy = t.withColumn("text_sig",
-      aggregate(sig, lit(0L), (a, x) => pmod(a * 131L + x, lit(1L << 32))))
-    pipelineImpl(heavy, snaps, encodeDict = true)
-  }
-
   /** Run the full job including the Iceberg-lite write; returns (rows,
     * elapsedMs, turns/sec).
     */
   def run(spark: SparkSession, tPath: String, sPath: String, outRoot: String,
-      nBuckets: Int = 32,
-      pipe: (DataFrame, DataFrame) => DataFrame = pipeline): (Long, Long, Double) = {
+      nBuckets: Int = 32): (Long, Long, Double) = {
     val t0 = System.currentTimeMillis()
-    val out = pipe(spark.read.parquet(tPath), spark.read.parquet(sPath))
+    val out = pipeline(spark.read.parquet(tPath), spark.read.parquet(sPath))
     // bucket via Spark's own murmur3 hash: when shuffle.partitions ==
     // nBuckets the rows arrive at the writer ALREADY grouped by bucket
     // (HashPartitioning uses the same pmod(hash, n)), so the dynamic

@@ -42,17 +42,10 @@ object ScalingBench {
     // best (steady-state) run per level is reported.
     val results = scala.collection.mutable.Map[Int, Vector[(Long, Double)]]()
       .withDefaultValue(Vector.empty)
-    // SPARK_GRAFT_SCALE_PIPE=compute swaps in the compute-heavy pipeline
-    // (per-row SimHash at the scan) — the CPU-bound control for the
-    // shared-memory-bus adjudication of the 8→32 level pair
-    val pipe: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
-      if (sys.env.get("SPARK_GRAFT_SCALE_PIPE").contains("compute"))
-        Flagship.pipelineCompute
-      else Flagship.pipeline
     for (r <- 1 to repeats; cpus <- Seq(lo, hi)) {
       spark = session(cpus)
       val out = s"$benchBase/scale_out_c${cpus}_$r"
-      val (rows, _, tps) = Flagship.run(spark, tPath, sPath, out, pipe = pipe)
+      val (rows, _, tps) = Flagship.run(spark, tPath, sPath, out)
       scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
       spark.stop()
       results(cpus) = results(cpus) :+ (rows, tps)

@@ -38,13 +38,15 @@ object Ego {
       lit(40503L * b + 12345L), lit(1L << 31))
       .cast("double") / lit((1L << 31).toDouble)
 
-  /** Deterministic Poisson(1)-ish bootstrap weight for (rowKey, b):
-    * P(0)=1/e≈.368, P(1)=.368, P(2+)≈.264 approximated by a thirds-ish split
-    * on the LCG uniform — deterministic at any parallelism.
+  /** Deterministic Poisson(1)-ish bootstrap weight for (rowKey, b), as a
+    * long: P(0)=1/e≈.368, P(1)=.368, P(2+)≈.264 approximated by a
+    * thirds-ish split on the LCG uniform — deterministic at any
+    * parallelism. A null key has no uniform and gets a null weight, so its
+    * row is in no draw (every weighted sum skips it).
     */
   private def bootWeight(rowKey: Column, b: Int): Column = {
     val u = bootUniform(rowKey, b)
-    when(u < 0.368, lit(0.0)).when(u < 0.736, lit(1.0)).otherwise(lit(2.0))
+    when(u < 0.368, lit(0L)).when(u < 0.736, lit(1L)).when(u.isNotNull, lit(2L))
   }
 
   final case class Model(betas: Array[DenseVector[Double]], features: Seq[String]) {
@@ -71,7 +73,8 @@ object Ego {
   ): Model = {
     val z = features.map(f => col(f).cast("double")) :+ lit(1.0) :+
       col(y).cast("double")
-    val grams = Gram.build(train, z, (0 until b).map(bootWeight(rowKey, _))).head._2
+    val grams = Gram.build(train, z,
+      (0 until b).map(bootWeight(rowKey, _).cast("double"))).head._2
     Model(grams.map(GramCV.solve(_, features.indices, ridge)).toArray, features)
   }
 
@@ -96,8 +99,7 @@ object Ego {
       x.cast("long").as("__x"), yInt.cast("long").as("__y"),
       rowKey.cast("long").as("__rk"))
     val aggs = (0 until b).flatMap { bi =>
-      val u = bootUniform(col("__rk"), bi)
-      val w = when(u < 0.368, lit(0L)).when(u < 0.736, lit(1L)).otherwise(lit(2L))
+      val w = bootWeight(col("__rk"), bi)
       val (xx, yy) = (col("__x"), col("__y"))
       Seq(
         sum(w).as(s"sw_$bi"),

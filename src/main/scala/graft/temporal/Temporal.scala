@@ -61,6 +61,33 @@ object AsOf {
       leftTie: Option[String] = None,
       keepOrder: Boolean = false
   ): DataFrame = {
+    val w = Window
+      .partitionBy(col(key))
+      .orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    val filled = tagged(left, right, key, leftTs, rightTs, tiebreak, payload, leftTie)
+      .withColumn("__snap", last(col("__payload"), ignoreNulls = true).over(w))
+      .where(col("__side") === 1)
+
+    restore(filled, left, leftTs, payload, col("__snap"),
+      if (keepOrder) orderCols.map(col) else Nil)
+  }
+
+  /** The union both as-of joins merge over: (key, left columns but the
+    * timestamp, `__ts`, `__side`, `__tie`, `__payload`), left rows with
+    * `__side` 1 and a null payload, right rows with `__side` 0.
+    */
+  private def tagged(
+      left: DataFrame,
+      right: DataFrame,
+      key: String,
+      leftTs: String,
+      rightTs: String,
+      tiebreak: String,
+      payload: Seq[String],
+      leftTie: Option[String]
+  ): DataFrame = {
     val leftCols = left.columns
     require(payload.forall(!leftCols.contains(_)),
       s"as-of payload columns ${payload.filter(leftCols.contains)} collide with left columns")
@@ -89,29 +116,26 @@ object AsOf {
       )) ++ carried.map(c => lit(null).cast(
         left.schema(c).dataType).as(c)): _*)
 
-    val unioned = l.select((key +: carried).map(col) ++
-      Seq(col("__ts"), col("__side"), col("__tie"), col("__payload")): _*)
-      .unionByName(r.select((key +: carried).map(col) ++
-        Seq(col("__ts"), col("__side"), col("__tie"), col("__payload")): _*))
+    val cols = (key +: carried).map(col) ++
+      Seq(col("__ts"), col("__side"), col("__tie"), col("__payload"))
+    l.select(cols: _*).unionByName(r.select(cols: _*))
+  }
 
-    val w = Window
-      .partitionBy(col(key))
-      .orderBy(col("__ts"), col("__side"), col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val filled = unioned
-      .withColumn("__snap", last(col("__payload"), ignoreNulls = true).over(w))
-      .where(col("__side") === 1)
-
-    val out = payload.foldLeft(filled) { (df, p) =>
-      df.withColumn(p, col("__snap").getField(p))
-    }
-    val keep =
-      if (keepOrder) Seq("__ts", "__side", "__tie").map(col) else Nil
-    val restored = leftCols.map(c =>
+  /** `left`'s columns (the timestamp back from `__ts`), each payload field
+    * of the resolved snapshot struct `snap`, then `keep`.
+    */
+  private def restore(
+      merged: DataFrame,
+      left: DataFrame,
+      leftTs: String,
+      payload: Seq[String],
+      snap: Column,
+      keep: Seq[Column]
+  ): DataFrame = {
+    val restored = left.columns.map(c =>
       if (c == leftTs) col("__ts").cast(left.schema(leftTs).dataType).as(leftTs)
       else col(c))
-    out.select(restored ++ payload.map(col) ++ keep: _*)
+    merged.select(restored ++ payload.map(p => snap.getField(p).as(p)) ++ keep: _*)
   }
 
   /** The ordering columns emitted under `keepOrder = true`; window operators
@@ -147,37 +171,13 @@ object AsOf {
       payload: Seq[String],
       bucketSeconds: Long
   ): DataFrame = {
-    val leftCols = left.columns
-    require(payload.forall(!leftCols.contains(_)),
-      s"as-of payload columns ${payload.filter(leftCols.contains)} collide with left columns")
-    val payloadStruct = struct(payload.map(col): _*)
-    val payloadType = right.select(payloadStruct).schema.head.dataType
-    def bucketOf(ts: Column): Column =
-      floor(unix_micros(ts.cast("timestamp")) / lit(bucketSeconds * 1000000L))
-
-    val l = left
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__side", lit(1))
-      .withColumn("__tie", lit(Long.MaxValue))
-      .withColumn("__payload", lit(null).cast(payloadType))
-    val r = right.select((col(key) +: Seq(
-      col(rightTs).as("__ts"),
-      lit(0).as("__side"),
-      col(tiebreak).cast("long").as("__tie"),
-      payloadStruct.as("__payload")
-    )) ++ leftCols.filterNot(_ == key).map(c =>
-      lit(null).cast(left.schema(c).dataType).as(c)): _*)
-
-    // as in asofJoin: don't shuffle the left timestamp twice
-    val carried = leftCols.filterNot(c => c == key || c == leftTs)
-    val cols = (key +: carried).map(col) ++
-      Seq(col("__ts"), col("__side"), col("__tie"), col("__payload"))
-    val unioned = l.select(cols: _*).unionByName(r.select(cols: _*))
-      .withColumn("__bucket", bucketOf(col("__ts")))
+    val unioned = tagged(left, right, key, leftTs, rightTs, tiebreak, payload, None)
+      .withColumn("__bucket", floor(unix_micros(col("__ts").cast("timestamp")) /
+        lit(bucketSeconds * 1000000L)))
 
     // 1. within-bucket running last (bounded task size)
     val wInner = Window.partitionBy(col(key), col("__bucket"))
-      .orderBy(col("__ts"), col("__side"), col("__tie"))
+      .orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val inner = unioned.withColumn("__snap",
       last(col("__payload"), ignoreNulls = true).over(wInner))
@@ -203,14 +203,8 @@ object AsOf {
     val resolved = inner
       .join(carryAll, Seq(key, "__bucket"), "left")
       .where(col("__side") === 1)
-      .withColumn("__final", coalesce(col("__snap"), col("__carry")))
-    val out = payload.foldLeft(resolved) { (df, p) =>
-      df.withColumn(p, col("__final").getField(p))
-    }
-    val restored = leftCols.map(c =>
-      if (c == leftTs) col("__ts").cast(left.schema(leftTs).dataType).as(leftTs)
-      else col(c))
-    out.select(restored ++ payload.map(col): _*)
+    restore(resolved, left, leftTs, payload,
+      coalesce(col("__snap"), col("__carry")), Nil)
   }
 }
 

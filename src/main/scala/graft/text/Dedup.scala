@@ -68,14 +68,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Observability for the last [[resolveClusters]] run (BSP rounds used;
-    * whether the driver finish closed the tail) — read by the CC scale
-    * bench and the convergence-bound specs. Best-effort under concurrency
-    * (one CC run at a time is the engine's own usage).
-    */
-  @volatile private[graft] var lastCcRounds: Int = 0
-  @volatile private[graft] var lastCcDriverFinished: Boolean = false
-
   /** The id ordering BOTH driver union-find finishes use: for strings,
     * UTF-8 binary order (`UTF8String.compareTo`) — what Spark's `min`
     * aggregation applies on the BSP path — NOT Java's UTF-16 code-unit
@@ -188,17 +180,12 @@ object Dedup {
           nodes += a; nodes += b
           uf.union(a, b)
         }
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(
-            s"[cc] small-graph shortcut: edges=${sample.length} nodes=${nodes.size}")
         val spark = pairs.sparkSession
         val dt = raw.schema("a").dataType
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id", dt),
           org.apache.spark.sql.types.StructField("cluster_id", dt)))
         val rows = nodes.toSeq.map(n => org.apache.spark.sql.Row(n, uf.find(n)))
-        lastCcRounds = 0
-        lastCcDriverFinished = true
         return spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), schema)
       }
@@ -241,9 +228,6 @@ object Dedup {
       val uf = new MinRootUnionFind
       active.foreach(e => uf.union(e.get(0), e.get(1)))
       val corr = uf.nonRoots.map(l => org.apache.spark.sql.Row(l, uf.find(l)))
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(
-          s"[cc] driver finish: active=${active.length} corrections=${corr.size}")
       if (corr.isEmpty) return true // chains already closed — nothing to fix
       val dt = labels.schema("label").dataType
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -257,7 +241,6 @@ object Dedup {
             coalesce(col("__root"), col("label")).as("label")), reliable = true)
       true
     }
-    lastCcDriverFinished = false
     while (!converged && round < maxRounds) {
       round += 1
       try {
@@ -295,18 +278,14 @@ object Dedup {
         val m = obs.get
         val changed = Option(m("changed")).fold(0L)(_.asInstanceOf[Long])
         converged = changed == 0L
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(s"[cc] round=$round changed=$changed")
         labels = jumped
         retries = 0 // a good round clears the consecutive-failure budget:
         // 3 transient faults spread over a long job must not kill the 4th
         if (reliableRound) { lastReliable = jumped; lastReliableRound = round }
         // the relabel count is the cheap proxy for a small active frontier
         if (!converged && driverFinishEdges > 0 && finishAttempts > 0 &&
-            changed <= driverFinishEdges) {
+            changed <= driverFinishEdges)
           converged = tryDriverFinish()
-          if (converged) lastCcDriverFinished = true
-        }
       } catch {
         case e: org.apache.spark.SparkException =>
           retries += 1
@@ -324,7 +303,6 @@ object Dedup {
       }
     }
     edges.unpersist()
-    lastCcRounds = round
     // Returning partially-propagated labels would silently treat members of
     // one dup cluster as distinct docs downstream (dedupDocs keep-list) —
     // fail loudly instead. maxRounds bounds ROUNDS, not correctness:

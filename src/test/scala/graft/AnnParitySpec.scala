@@ -176,7 +176,7 @@ class AnnParitySpec extends GraftSuite {
     assert(p.length < 20000, s"plan is ${p.length} chars — centroids leaked into the plan")
   }
 
-  test("PQ parity: kernel codes/LUT == literal expressions above the codeword ceiling") {
+  test("PQ parity: kernel codes/LUT == literal expressions at 128 codewords") {
     inBothModes {
       // m=4 × nCodes=32 = 128 codewords on the bench vectors: the literal
       // twin on the same model must be bit-identical
@@ -260,7 +260,7 @@ class AnnParitySpec extends GraftSuite {
     assert(e1 <= e0 * (1.0 + 1e-9), s"Lloyd step worsened PQ error: $e0 -> $e1")
   }
 
-  test("end-to-end IVF above the literal ceiling trains and probes") {
+  test("end-to-end IVF at nList=24 trains and probes") {
     val corpus = vecs
     val queries = vecs.where(col("cid") < 10)
       .select(col("cid").as("qid"), col("cv").as("vec"))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 /** Property-based parity of native kernels against their declarative
-  * twins over generated arrays the bench never makes: empty arrays, null
-  * elements, and kernel parameters outside the bench's. Draws come from a
+  * twins over generated arrays and text the bench never makes: empty
+  * arrays, null elements, null, empty and whitespace-only text, surrogate
+  * pairs, and kernel parameters outside the bench's. Draws come from a
   * fixed seed, so a failure reproduces; each kernel is checked in one
   * Spark job over all draws.
   */
@@ -15,6 +16,21 @@ class KernelParitySpec extends GraftSuite {
   private def arrays[T](elem: Gen[T], maxLen: Int): Gen[Seq[Option[T]]] =
     Gen.choose(0, maxLen).flatMap(n => Gen.listOfN(n,
       Gen.frequency(1 -> Gen.const(None), 6 -> elem.map(Option(_)))))
+
+  /** Null, empty and whitespace-only text, and text from a small alphabet
+    * (so windows and k-grams repeat) with mixed case, whitespace runs and
+    * surrogate-pair code points.
+    */
+  private val texts: Gen[Option[String]] = {
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "ab", "ba", "Ab", "the", "THE", "x"),
+      3 -> Gen.oneOf(" ", "  ", "\t", "\n "),
+      2 -> Gen.oneOf("\uD83D\uDE00", "\uD834\uDD1E", "é", "ß", "日"))
+    Gen.frequency(1 -> Gen.const(None),
+      10 -> Gen.choose(0, 24).flatMap(Gen.listOfN(_, piece)).map(p => Some(p.mkString)))
+  }
+  private val textEdges = Seq(None, Some(""), Some(" "), Some("\uD83D\uDE00"),
+    Some("\uD83D\uDE00 \uD83D\uDE00 \uD834\uDD1E"), Some("ab ab ab"))
 
   test("MinhashBandKeys == bandKeys(minhashSig(sh)) over generated arrays") {
     import graft.functions.MinhashBandKeys
@@ -144,6 +160,56 @@ class KernelParitySpec extends GraftSuite {
       assert(got.count(_.isNullAt(0)) > 50 && got.count(!_.isNullAt(0)) > 50,
         "draws did not mix null and non-null results")
       assert(got(rows.size - 4).getDouble(0) == 0.0 && got(rows.size - 1).getDouble(0) == 11.0)
+    }
+  }
+
+  test("WindowHashes == declarative window-hash frame over generated text") {
+    import graft.text.Spans
+    val rows = draws(texts, 300) ++ textEdges
+    val docs = rows.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    // the bench runs only k = 8 and 13
+    inBothModes {
+      for (k <- Seq(2, 3, 5, 21)) {
+        val nat = Spans.winHashFrame(docs, "doc_id", "text", k).collect().map(_.toSeq)
+        val dec = Spans.winHashFrameDeclarative(docs, "doc_id", "text", k)
+          .collect().map(_.toSeq)
+        assert(nat.sortBy(_.mkString(",")) === dec.sortBy(_.mkString(",")), s"k=$k")
+        if (k <= 5) assert(nat.nonEmpty, s"no draw had $k tokens")
+      }
+    }
+  }
+
+  test("WinnowHashes == declarative winnow over generated text") {
+    import graft.text.TextHash
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    // (k, w): the bench runs only (8, 4); w = 1 selects every gram, and
+    // w past the gram count selects the one global minimum
+    val params = Seq((2, 1), (2, 3), (3, 2), (5, 7), (4, 40))
+    inBothModes {
+      val got = df.select(params.flatMap { case (k, w) => Seq(
+        TextHash.winnow(col("text"), k, w), TextHash.winnowDeclarative(col("text"), k, w))
+      }: _*).collect()
+      for ((r, i) <- got.zipWithIndex; ((k, w), p) <- params.zipWithIndex)
+        assert(r.getSeq[Long](2 * p) === r.getSeq[Long](2 * p + 1),
+          s"k=$k w=$w text=${rows(i)}")
+      assert(got.exists(_.getSeq[Long](0).size >= 5), "no draw had five 2-grams")
+    }
+  }
+
+  test("CharEntropy == declarative entropy fold over generated text") {
+    import graft.text.TextQuality
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    inBothModes {
+      val got = df.select(TextQuality.charEntropy(col("text")),
+        TextQuality.charEntropyDeclarative(col("text"))).collect()
+      for ((r, i) <- got.zipWithIndex) {
+        assert(r.isNullAt(0) === rows(i).isEmpty && r.isNullAt(1) === rows(i).isEmpty,
+          s"text=${rows(i)}")
+        if (!r.isNullAt(0)) assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(1)), s"text=${rows(i)}")
+      }
     }
   }
 

@@ -5,11 +5,11 @@ import scala.util.Random
 import org.apache.spark.sql.functions._
 
 import graft.expr._
-import graft.search.{Corr, GramCV, SymbolicSearch}
+import graft.search.{Corr, Ego, GramCV, SymbolicSearch}
 
 /** The search layer's shared machinery off the bench path: the Gram
-  * core's null rule, fold-key validation, and GP tree surgery over group
-  * (array) nodes.
+  * core's null rule, fold-key validation, the bootstrap weight of a null
+  * row key, and GP tree surgery over group (array) nodes.
   */
 class SearchSpec extends GraftSuite {
   import spark.implicits._
@@ -63,6 +63,24 @@ class SearchSpec extends GraftSuite {
     // the keys Scoring.foldCol makes are always in range
     assert(GramCV.fitWithFold(df, Seq("x0"), "y", 3, Scoring.foldCol(Seq(col("id")), 3))
       .folds.map(_.n).sum == df.count())
+  }
+
+  test("a row with a null row key is in no bootstrap draw") {
+    val clean = rows(7).map { case (id, x0, x1, y) => (Option(id), x0, x1, y) }
+    val cleanDf = clean.toDF("id", "x0", "x1", "y")
+    // far off the plane, so any weight it got would move every beta
+    val df = (clean :+ ((None, Some(4.0), Some(2.0), Some(500.0))))
+      .toDF("id", "x0", "x1", "y")
+    def betas(m: Ego.Model) = m.betas.toSeq.map(_.toArray.toSeq)
+    def same(a: Seq[Seq[Double]], b: Seq[Seq[Double]], what: String) =
+      for ((ra, rb) <- a.zip(b); (x, y) <- ra.zip(rb))
+        assert(approx(x, y, 1e-12), s"$what: $a vs $b")
+    same(betas(Ego.fitBootstrap(df, Seq("x0", "x1"), "y", col("id"), b = 8)),
+      betas(Ego.fitBootstrap(cleanDf, Seq("x0", "x1"), "y", col("id"), b = 8)),
+      "fitBootstrap")
+    def exact(d: org.apache.spark.sql.DataFrame) = betas(Ego.fitBootstrapExact(
+      d, "x", floor(col("x0") * 10.0), floor(col("y") * 100.0), col("id"), b = 8))
+    same(exact(df), exact(cleanDf), "fitBootstrapExact")
   }
 
   test("GP tree surgery over group nodes: fixed-seed renders") {
