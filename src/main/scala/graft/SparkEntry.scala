@@ -107,23 +107,23 @@ object SparkEntry {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       // windowed sums of DOUBLE are summation-order-dependent (DuckDB's
       // segment tree vs Spark's sequential frame scan), so round-then-sum an
-      // EXACT integer quantity: floor(v*1e4 + 0.5) is the identical IEEE op
-      // on both engines and long sums are order-free
-      val vq = floor(col("value") * 10000.0 + 0.5).cast("long")
+      // EXACT integer quantity: TextHash.quantize at 10⁴ is the identical
+      // IEEE op on both engines and long sums are order-free
+      val vq = graft.text.TextHash.quantize(col("value"), 1e4)
       ev(s, dir).select(
         col("event_id"), col("user_id"),
         sum(when(col("event_type") === "click", 1).otherwise(0))
           .over(w.rowsBetween(-9, 0)).as("clicks_10"),
-        (sum(vq).over(w.rowsBetween(-4, 0)) / 10000.0).as("val_5"))
+        graft.text.TextHash.dequantize(sum(vq).over(w.rowsBetween(-4, 0)), 1e4).as("val_5"))
     }),
 
     "q06_sessionize" -> ((s, dir) => {
       // same exact-integer-sum discipline as q05 (cross-engine FP parity)
-      val vq = floor(col("value") * 10000.0 + 0.5).cast("long")
+      val vq = graft.text.TextHash.quantize(col("value"), 1e4)
       Sessionize.byGap(ev(s, dir), "user_id", "ts", Seq("ts", "event_id"), 1800L)
         .groupBy(col("user_id"), col("session_idx"))
         .agg(count(lit(1)).as("n_events"),
-          (sum(vq) / 10000.0).as("session_value"))
+          graft.text.TextHash.dequantize(sum(vq), 1e4).as("session_value"))
     }),
 
     "q07_backfill" -> ((s, dir) => {
@@ -583,7 +583,7 @@ object SparkEntry {
       val model = graft.search.Ego.fitBootstrapExact(
         li(s, dir), "x",
         x = col("l_quantity"),
-        yInt = floor(col("l_extendedprice") * 100.0 + 0.5),
+        yInt = graft.text.TextHash.quantize(col("l_extendedprice"), 100.0),
         rowKey = col("l_orderkey") * 8 + col("l_linenumber"), b = 8)
       val space = graft.search.Ego.searchSpace(s,
         Seq("x" -> (1 to 60).map(_.toDouble)))
@@ -630,7 +630,7 @@ object SparkEntry {
       val model = graft.search.Ego.fitBootstrapExact(
         li(s, dir), "x",
         x = col("l_quantity"),
-        yInt = floor(col("l_extendedprice") * 100.0 + 0.5),
+        yInt = graft.text.TextHash.quantize(col("l_extendedprice"), 100.0),
         rowKey = col("l_orderkey") * 8 + col("l_linenumber"), b = 8)
       val space = graft.search.Ego.searchSpace(s,
         Seq("x" -> (1 to 60).map(_.toDouble)))

@@ -39,16 +39,3 @@ trait Featurizer {
     fs.foldLeft(df) { case (d, (label, c)) => d.withColumn(label, c) }
   }
 }
-
-/** Composition-pooling featurizer as a [[Featurizer]] (the WeightedAverage
-  * family over an exploded+joined composition — see [[Composition]] for the
-  * aggregation-level API these labels mirror: `'ave:' + attr` labelling per
-  * compositionfeaturizer.py:83-85).
-  */
-final case class PoolFeaturizer(attrs: Seq[String]) extends Featurizer {
-  val name = "composition_pool"
-  def features(df: DataFrame): Seq[(String, Column)] =
-    attrs.flatMap { a =>
-      Composition.pools(col(a), col("n")).map { case (p, c) => s"$p:$a" -> c }
-    }
-}

@@ -14,14 +14,21 @@ import graft.expr.Gram
   */
 object Corr {
 
-  /** Pearson correlation matrix of the given columns in ONE aggregation
-    * pass (sums x, x², xy for every pair) — the reference's np.corrcoef
-    * (selection/corr.py:58-73). NaN → 0 normalization preserved.
+  /** Pearson correlation matrix of the given columns — the reference's
+    * np.corrcoef (selection/corr.py:58-73), NaN → 0 normalization kept.
+    * The Gram sums every column shifted by its value in the first row the
+    * Gram keeps (the shifted-data algorithm: one row, no second pass), so
+    * a large mean cannot cancel the spread, and a constant column is
+    * exactly 0 and correlates 0 with everything.
     */
   def matrix(df: DataFrame, cols: Seq[String]): Array[Array[Double]] = {
     val d = cols.size
-    // the constant column's row of the Gram holds the column sums
-    val g = Gram.of(df, cols.map(n => col(n).cast("double")) :+ lit(1.0))
+    val x = cols.map(n => col(n).cast("double"))
+    // the rows Gram.build keeps: no null in any column
+    val first = df.where(x.map(_.isNotNull).reduce(_ && _)).select(x: _*).head(1)
+    val shift = first.headOption.fold(Seq.fill[Any](d)(0.0))(_.toSeq)
+    // the constant column's row of the Gram holds the (shifted) column sums
+    val g = Gram.of(df, x.zip(shift).map { case (c, k) => c - lit(k) } :+ lit(1.0))
     val (p, n) = (g.m, g.n.toDouble)
     def s(i: Int) = p(i, d)
     Array.tabulate(d, d) { (i, j) =>

@@ -17,7 +17,7 @@ import graft.text.TextHash
   * task regardless of row count or key cardinality.
   *
   * Estimates are deterministic and cross-engine reproducible: row `d`'s
-  * counter index is `polyHash(key || ":cms" || d) mod width` — the same
+  * counter index is `saltedHash(key, "cms" || d) mod width` — the same
   * mod-2^32 polynomial fold the dedup suite verifies in DuckDB — so the
   * sketch, the point estimates, and the heavy-hitter verdicts are all
   * oracle-checkable cell-exactly. Classic CMS guarantee: estimates never
@@ -29,7 +29,7 @@ object Sketch {
 
   /** Counter index of `key` in sketch row `d` (0-based), `width` columns. */
   def cell(key: Column, d: Int, width: Int): Column =
-    pmod(TextHash.polyHash(concat(key, lit(s":cms$d"))), lit(width.toLong))
+    pmod(TextHash.saltedHash(key, s"cms$d"), lit(width.toLong))
 
   /** Build the sketch: one row per non-empty counter, `(d, cell, cnt)`.
     *
@@ -119,8 +119,7 @@ object Sketch {
     // estimate lands 2-4x off (measured: 1700 distinct -> 437). The xorshift
     // steps are what make the high bits rank-worthy; with them the estimate
     // sits inside the 1.04/sqrt(m) band across 17..60k cardinalities.
-    val h = TextHash.mix32(
-      TextHash.polyHash(concat(key.cast("string"), lit(":hll"))))
+    val h = TextHash.mix32(TextHash.saltedHash(key, "hll"))
     val v = floor(h / m).cast("long") // upper w bits
     // rank = leading-zero count of the w-bit pattern + 1; bin() strips
     // leading zeros in BOTH engines, so rank = (w+1) - bitlen(v)

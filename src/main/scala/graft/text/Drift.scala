@@ -17,14 +17,11 @@ import org.apache.spark.sql.functions._
   * O(strata·vocab) count table, never a second scan. Per-stratum totals
   * join back broadcast-sized; the grand total rides as a literal.
   *
-  * Determinism (the q60 doctrine): each per-token term is computed through
-  * a FIXED double op sequence from exact integer counts, quantized to
-  * integer units (floor(x·scale + 0.5) as long), and integer-summed —
-  * associative and exact, so results are identical on any engine at any
-  * parallelism with no per-group buffering. KL terms quantize at 10⁻⁹
-  * (they are ≤ p·|ln p| ≤ 1), chi-square terms at 10⁻⁶ (they can reach
-  * O(N_s)). The only cross-engine divergence source is a last-ulp `ln`
-  * landing exactly on a .5 boundary — probability ~10⁻⁹ per term.
+  * Determinism: each per-token term is computed through a FIXED double op
+  * sequence from exact integer counts, then [[TextHash.quantize]]d and
+  * integer-summed. KL terms are bounded (≤ p·|ln p| ≤ 1), so they take
+  * the finer scale 10⁹; chi-square terms can reach O(N_s), so they stay
+  * at micro-units and their long sums stay in range.
   *
   * No smoothing is needed: a slice's support is a subset of the pool's
   * support (c_global ≥ c_slice > 0), so KL(slice ‖ pool) is always finite.
@@ -35,21 +32,18 @@ object Drift {
     * (stratum, n_tokens, n_terms, kl, chi2) where
     *   kl   = Σ_t p_s(t) · ln(p_s(t)/p_g(t))          (nats, ≥ 0)
     *   chi2 = Σ_t (c_st − e_st)²/e_st,  e_st = N_s·c_gt/N_g
-    * both rounded to 6.
+    * both rounded to 6. Documents with a null stratum form the null
+    * stratum's row, as in [[Retrieval.zipfFit]].
     */
   def tokenDrift(df: DataFrame, textCol: String, stratumCol: String): DataFrame = {
-    val toks = df.select(col(stratumCol).as("stratum"),
-      explode(TextHash.lowerTokens(col(textCol))).as("__tok"))
     // the count table feeds FOUR consumers (per-token join, global counts,
     // stratum totals, the grand total) — persist it once via the dedup
     // suite's tracked cache so the corpus is scanned and exploded exactly
     // once; callers release with Dedup.releaseCache()/withCache like every
     // other prep frame (Verify/Bench already do)
-    val counts = Dedup.materialize(
-      toks.groupBy(col("stratum"), col("__tok"))
-        .agg(count(lit(1)).as("__c")))
+    val counts = Dedup.materialize(Retrieval.stratumTokenCounts(df, textCol, stratumCol))
     val globals = counts.groupBy(col("__tok")).agg(sum(col("__c")).as("__cg"))
-    val strata = counts.groupBy(col("stratum")).agg(sum(col("__c")).as("__ns"))
+    val strata = counts.groupBy(col("stratum").as("__st")).agg(sum(col("__c")).as("__ns"))
     val ng = counts.agg(sum(col("__c"))).head().getLong(0)
     require(ng > 0, "corpus has zero tokens — drift undefined")
     val ngD = ng.toDouble
@@ -61,14 +55,14 @@ object Drift {
     val chiTerm = (c - e) * (c - e) / e
     counts
       .join(globals, Seq("__tok"))
-      .join(broadcast(strata), Seq("stratum"))
+      .join(broadcast(strata), col("stratum") <=> col("__st"))
       .select(col("stratum"), col("__ns"),
-        floor(klTerm * lit(1e9) + lit(0.5)).as("__klq"),
-        floor(chiTerm * lit(1e6) + lit(0.5)).as("__chiq"))
+        TextHash.quantize(klTerm, 1e9).as("__klq"),
+        TextHash.quantize(chiTerm).as("__chiq"))
       .groupBy(col("stratum"))
       .agg(max(col("__ns")).as("n_tokens"),
         count(lit(1)).as("n_terms"),
-        round(sum(col("__klq")).cast("double") / lit(1e9), 6).as("kl"),
-        round(sum(col("__chiq")).cast("double") / lit(1e6), 6).as("chi2"))
+        round(TextHash.dequantize(sum(col("__klq")), 1e9), 6).as("kl"),
+        round(TextHash.dequantize(sum(col("__chiq"))), 6).as("chi2"))
   }
 }

@@ -35,9 +35,8 @@ object Fim {
     val id = col(idCol)
     val toks = TextHash.tokens(textCol)
     val n = size(toks)
-    def pivot(sub: String): Column = pmod(
-      TextHash.polyHash(concat(id.cast("string"), lit(":" + salt + sub))),
-      (n + 1).cast("long"))
+    def pivot(sub: String): Column =
+      pmod(TextHash.saltedHash(id, salt + sub), (n + 1).cast("long"))
     val u = pivot("1")
     val v = pivot("2")
     val lo = least(u, v).cast("int")

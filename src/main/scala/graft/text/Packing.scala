@@ -32,7 +32,11 @@ object Packing {
     * order is unambiguous.
     */
   def shuffleOrder(identity: Column, seed: Long): Column =
-    TextHash.polyHash(concat(identity.cast("string"), lit(":shuf:" + seed)))
+    TextHash.saltedHash(identity, "shuf:" + seed)
+
+  /** Packing domain of a document: the unsalted id hash mod `buckets`. */
+  private def idBucket(id: Column, buckets: Int): Column =
+    pmod(TextHash.polyHash(id.cast("string")), lit(buckets.toLong))
 
   /** Concat-then-chunk packing (the GPT-style pretraining layout): within
     * each bucket, documents are concatenated in shuffle order and the token
@@ -57,12 +61,10 @@ object Packing {
       seed: Long = 42L
   ): DataFrame = {
     val id = col(idCol)
-    val bucket = pmod(TextHash.polyHash(id.cast("string")), lit(buckets.toLong))
-    val ord = shuffleOrder(id, seed)
     val w = Window.partitionBy(col("bucket")).orderBy(col("__ord"), id)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("bucket", bucket)
-      .withColumn("__ord", ord)
+    df.withColumn("bucket", idBucket(id, buckets))
+      .withColumn("__ord", shuffleOrder(id, seed))
       .withColumn("__cum", sum(col(tokensCol)).over(w))
       .withColumn("__before", col("__cum") - col(tokensCol))
       .withColumn("seq_id", floor(col("__before") / budget))
@@ -104,7 +106,7 @@ object Packing {
     // packChunked's) type exactly — no string cast leaks out.
     val ranked = df.select(
       id.as("id"),
-      pmod(TextHash.polyHash(id.cast("string")), lit(buckets.toLong)).as("bucket"),
+      idBucket(id, buckets).as("bucket"),
       shuffleOrder(id, seed).as("ord"),
       col(tokensCol).cast("long").as("toks"))
       .withColumn("rank", org.apache.spark.sql.functions.row_number().over(
@@ -178,8 +180,7 @@ object Packing {
     val rk = col("__rk")
     val pass = floor(rk / shards)
     val pos = pmod(rk, lit(shards.toLong))
-    df.withColumn("bucket",
-        pmod(TextHash.polyHash(id.cast("string")), lit(buckets.toLong)))
+    df.withColumn("bucket", idBucket(id, buckets))
       .withColumn("__rk", (row_number().over(w) - 1).cast("long"))
       .withColumn("shard",
         when(pmod(pass, lit(2L)) === 0, pos).otherwise(lit(shards.toLong) - 1 - pos))

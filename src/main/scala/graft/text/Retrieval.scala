@@ -124,30 +124,61 @@ object Retrieval {
       k: Int
   ): DataFrame = {
     val grams = df
-      .select(col(stratumCol).as("stratum"),
-        cleanTokens(TextHash.lowerTokens(col(textCol))).as("__tk"))
+      .select(col(stratumCol).as("stratum"), cleanTokens(col(textCol)).as("__tk"))
       .select(col("stratum"),
         explode(graft.text.TextQuality.wordNgrams(col("__tk"), n)).as("__g"))
     val counts = grams.groupBy(col("stratum"), col("__g"))
       .agg(count(lit(1)).as("n_occurrences"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("stratum"))
-      .orderBy(col("n_occurrences").desc, col("__g").asc)
-    counts.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    topPerStratum(counts, "n_occurrences", "__g", k, "rank", _.cast("long"))
       .select(col("stratum"),
         regexp_replace(col("__g"), "\u0001", " ").as("gram"),
         col("n_occurrences"), col("rank"))
   }
 
-  /** Tokens with the U+0001 gram-joiner excluded: a token CONTAINING the
-    * joiner would alias gram boundaries in the count table and break the
-    * context extraction (`substring_index` on the joiner) — such "words"
-    * are control-char noise, so the n-gram operators drop them up front
-    * (the oracle SQL applies the same filter).
+  /** The top `k` rows per stratum by count desc, key asc; the `row_number`,
+    * passed through `as`, is column `rankCol`. */
+  private def topPerStratum(
+      counts: DataFrame, countCol: String, keyCol: String, k: Int,
+      rankCol: String, as: Column => Column = identity): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("stratum"))
+      .orderBy(col(countCol).desc, col(keyCol).asc)
+    counts.withColumn(rankCol, as(row_number().over(w))).where(col(rankCol) <= k)
+  }
+
+  /** Lowercased tokens ([[TextHash.lowerTokens]]) with the U+0001
+    * gram-joiner excluded: a token CONTAINING the joiner would alias gram
+    * boundaries in the count table and break the context extraction
+    * (`substring_index` on the joiner) — such "words" are control-char
+    * noise, so the n-gram operators drop them up front (the oracle SQL
+    * applies the same filter).
     */
-  private def cleanTokens(t: Column): Column =
-    filter(t, x => !x.contains("\u0001"))
+  private def cleanTokens(text: Column): Column =
+    filter(TextHash.lowerTokens(text), x => !x.contains("\u0001"))
+
+  /** `(stratum, __tok, __c)` token counts for [[zipfFit]] and [[Drift]]. */
+  private[text] def stratumTokenCounts(
+      df: DataFrame, textCol: String, stratumCol: String): DataFrame =
+    df.select(col(stratumCol).as("stratum"),
+        explode(TextHash.lowerTokens(col(textCol))).as("__tok"))
+      .groupBy(col("stratum"), col("__tok"))
+      .agg(count(lit(1)).as("__c"))
+
+  /** Per `__id` of `rows`: count `nName` and `avgName` = round(Σ q(logp) /
+    * 10⁶ / n, 6); left-joined back to `df`'s ids (no rows: null). */
+  private def avgLogProb(
+      df: DataFrame, idCol: String, rows: DataFrame, logp: Column,
+      nName: String, avgName: String): DataFrame = {
+    val scored = rows
+      .withColumn("__lpq", TextHash.quantize(logp))
+      .groupBy(col("__id"))
+      .agg(count(lit(1)).as(nName), sum(col("__lpq")).as("__sumq"))
+      .withColumn(avgName, round(
+        TextHash.dequantize(col("__sumq")) / col(nName).cast("double"), 6))
+      .drop("__sumq")
+    df.select(col(idCol)).join(scored.withColumnRenamed("__id", idCol),
+      Seq(idCol), "left")
+  }
 
   /** Bigram-LM document scoring — the stronger perplexity proxy
     * (word-order aware, unlike [[unigramLogProb]]): with the corpus as its
@@ -158,13 +189,11 @@ object Retrieval {
     *
     * Same scale/determinism shape as [[unigramLogProb]]: one bigram
     * groupBy + one unigram groupBy build the model; transitions join back
-    * on the bigram key; per-token log-probs quantize to integer
-    * micro-units and integer-sum (order-free, exact). Documents with < 2
-    * tokens score null.
+    * on the bigram key; the per-document sum is over [[TextHash.quantize]]d
+    * log-probs. Documents with < 2 tokens score null.
     */
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val prepped = df.select(col(idCol).as("__id"),
-      cleanTokens(TextHash.lowerTokens(col(textCol))).as("__tk"))
+    val prepped = df.select(col(idCol).as("__id"), cleanTokens(col(textCol)).as("__tk"))
     val bi = prepped.select(col("__id"),
       explode(graft.text.TextQuality.wordNgrams(col("__tk"), 2)).as("__bg"))
     val biCounts = bi.groupBy(col("__bg")).agg(count(lit(1)).as("__cb"))
@@ -178,21 +207,14 @@ object Retrieval {
     val vocab = uniCounts.count().toDouble
     // context count = unigram count of the LEFT word; last-position tokens
     // also count as context occurrences in c(v) — standard corpus counts
-    val scored = bi
+    val transitions = bi
       .withColumn("__ctx", substring_index(col("__bg"), "\u0001", 1))
       .join(biCounts, Seq("__bg"))
       .join(uniCounts.withColumnRenamed("__tok", "__ctx"), Seq("__ctx"))
-      .withColumn("__lpq", floor(
-        log((col("__cb") + lit(1L)).cast("double") /
-          (col("__cu").cast("double") + lit(vocab))) * lit(1e6) + lit(0.5)))
-      .groupBy(col("__id"))
-      .agg(count(lit(1)).as("n_transitions"), sum(col("__lpq")).as("__sumq"))
-      .withColumn("avg_logp2", round(
-        col("__sumq").cast("double") / lit(1e6) /
-          col("n_transitions").cast("double"), 6))
-      .drop("__sumq")
-    df.select(col(idCol)).join(scored.withColumnRenamed("__id", idCol),
-      Seq(idCol), "left")
+    avgLogProb(df, idCol, transitions,
+      log((col("__cb") + lit(1L)).cast("double") /
+        (col("__cu").cast("double") + lit(vocab))),
+      "n_transitions", "avg_logp2")
   }
 
   /** Unigram-LM document scoring — the CCNet-style perplexity-proxy
@@ -203,19 +225,11 @@ object Retrieval {
     *
     * Scale shape: ONE groupBy over exploded tokens builds the count table
     * (O(vocab) rows); tokens then join back on the token key (AQE handles
-    * stopword skew) and per-document sums are plain integer sums — each
-    * log-prob is quantized to MICRO-UNITS (floor(ln·10⁶ + 0.5) as long),
-    * and integer addition is associative and exact, so the sum is
-    * order-free: identical on any engine at any parallelism with NO
-    * per-document buffering. (The round-3 form collected and sorted every
-    * document's (pos, logp) structs to pin a double-fold order — O(doc)
-    * memory per group and an O(n log n) per-doc sort, the one new-op shape
-    * that degraded on long documents.) Quantization is also the output
-    * contract: avg_logp = round(Σ lpq / 10⁶ / n, 6), exact to ~10⁻⁶ —
-    * well inside the filter's discrimination band. Cross-engine, the only
-    * divergence source left is a last-ulp `ln` difference landing exactly
-    * on a .5 quantization boundary (probability ~10⁻⁹ per token).
-    * Documents with no tokens score null.
+    * stopword skew), and each per-document sum is over
+    * [[TextHash.quantize]]d log-probs, with NO per-document buffering.
+    * avg_logp = round(Σ q(ln p) / 10⁶ / n, 6) is exact to ~10⁻⁶, well
+    * inside the filter's discrimination band. Documents with no tokens
+    * score null.
     */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toksDf = df.select(col(idCol).as("__id"),
@@ -226,16 +240,8 @@ object Retrieval {
       toksDf.groupBy(col("__tok")).agg(count(lit(1)).as("__c")))
     val tv = counts.agg(sum(col("__c")).as("__t"), count(lit(1)).as("__v")).head()
     val denom = (tv.getAs[Long]("__t") + tv.getAs[Long]("__v")).toDouble
-    val scored = toksDf.join(counts, Seq("__tok"))
-      .withColumn("__lpq",
-        floor(log((col("__c") + lit(1L)).cast("double") / denom) * lit(1e6) + lit(0.5)))
-      .groupBy(col("__id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("__lpq")).as("__sumq"))
-      .withColumn("avg_logp",
-        round(col("__sumq").cast("double") / lit(1e6) / col("n_tokens").cast("double"), 6))
-      .drop("__sumq")
-    df.select(col(idCol)).join(scored.withColumnRenamed("__id", idCol),
-      Seq(idCol), "left")
+    avgLogProb(df, idCol, toksDf.join(counts, Seq("__tok")),
+      log((col("__c") + lit(1L)).cast("double") / denom), "n_tokens", "avg_logp")
   }
 
   /** Vocabulary coverage / OOV rate — the tokenizer-fit diagnostic: with
@@ -281,9 +287,9 @@ object Retrieval {
     * PMI explosion (a pair seen twice can have a sky-high ratio).
     *
     * Determinism: pmi decomposes as `q(c_ab) − q(N_b) − q(c_a) − q(c_b) +
-    * 2·q(N_u)` with every `q(x) = round(ln(x)·1e6)` an integer — pure
-    * integer arithmetic after the counts, ranked on the integer, rounded
-    * for display only.
+    * 2·q(N_u)` with every `q(x)` = [[TextHash.quantize]]`(ln x)` an integer
+    * — pure integer arithmetic after the counts, ranked on the integer,
+    * rounded for display only.
     *
     * Shape (the 100 TB story): unigram + bigram counts are partial-agg
     * groupBys; the pair table joins its two word counts as ordinary equi
@@ -297,10 +303,8 @@ object Retrieval {
       minCount: Long,
       topK: Int): DataFrame = {
     require(minCount >= 1 && topK >= 1, "minCount and topK must be positive")
-    def q(x: Column): Column =
-      floor(log(x.cast("double")) * 1e6 + 0.5).cast("long")
-    val prepped = df.select(
-      cleanTokens(TextHash.lowerTokens(col(textCol))).as("__tk"))
+    def q(x: Column): Column = TextHash.quantize(log(x.cast("double")))
+    val prepped = df.select(cleanTokens(col(textCol)).as("__tk"))
     val uni = prepped.select(explode(col("__tk")).as("__tok"))
       .groupBy(col("__tok")).agg(count(lit(1)).as("__cu"))
     val bi = prepped
@@ -324,7 +328,7 @@ object Retrieval {
       .select(
         regexp_replace(col("__g"), "\u0001", " ").as("gram"),
         col("__cb").as("n_pair"),
-        round(col("__pmi_u").cast("double") / 1e6, 6).as("pmi"))
+        round(TextHash.dequantize(col("__pmi_u")), 6).as("pmi"))
   }
 
   /** Zipf power-law fit per stratum — the corpus-health diagnostic: least-
@@ -334,11 +338,10 @@ object Retrieval {
     * r2), so drift in either is an early warning on an ingest slice before
     * any per-document gate fires.
     *
-    * Determinism doctrine (the q60/q70 idiom): each `ln` is quantized to
-    * integer micro-units at the row level; every SUM is exact integer
-    * arithmetic; the final slope/r2 are computed in binary64 FROM the exact
-    * integer sums with the same operation order in the oracle SQL, then
-    * rounded — no float aggregation order anywhere.
+    * Determinism: each `ln` is [[TextHash.quantize]]d at the row level, so
+    * every SUM is exact integer arithmetic; the final slope/r2 are computed
+    * in binary64 FROM the exact integer sums with the same operation order
+    * in the oracle SQL, then rounded — no float aggregation order anywhere.
     *
     * Shape (the 100 TB story): one explode + one partial-agg groupBy build
     * the counts; the rank window runs over the AGGREGATED per-stratum vocab
@@ -353,50 +356,30 @@ object Retrieval {
       stratumCol: String,
       topK: Int = 100): DataFrame = {
     require(topK >= 3 && topK <= 1000, s"topK must be in [3,1000], got $topK")
-    val counts = df
-      .select(col(stratumCol).as("stratum"),
-        explode(TextHash.lowerTokens(col(textCol))).as("__tok"))
-      .groupBy(col("stratum"), col("__tok"))
-      .agg(count(lit(1)).as("__c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("stratum"))
-      .orderBy(col("__c").desc, col("__tok").asc)
-    val top = counts.withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= topK)
+    val top = topPerStratum(
+        stratumTokenCounts(df, textCol, stratumCol), "__c", "__tok", topK, "__rank")
       .select(col("stratum"),
-        floor(log(col("__rank").cast("double")) * 1e6 + 0.5)
-          .cast("long").as("__x"),
-        floor(log(col("__c").cast("double")) * 1e6 + 0.5)
-          .cast("long").as("__y"))
+        TextHash.quantize(log(col("__rank").cast("double"))).as("__x"),
+        TextHash.quantize(log(col("__c").cast("double"))).as("__y"))
+    // binary64 arithmetic over EXACT integer sums, identical op order in
+    // the oracle; 1e-12 of slope scale vs 5e-7 round boundary
+    val Seq(n, sx, sy, sxx, sxy, syy) =
+      Seq("n_top", "__sx", "__sy", "__sxx", "__sxy", "__syy").map(col(_).cast("double"))
+    val cov = n * sxy - sx * sy
+    val varx = n * sxx - sx * sx
+    val vary = n * syy - sy * sy
     top.groupBy(col("stratum"))
       .agg(count(lit(1)).as("n_top"),
         sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
         sum(col("__x") * col("__x")).as("__sxx"),
         sum(col("__x") * col("__y")).as("__sxy"),
         sum(col("__y") * col("__y")).as("__syy"))
-      .select(col("stratum"), col("n_top"), {
-        // binary64 arithmetic over EXACT integer sums, identical op order
-        // in the oracle; 1e-12 of slope scale vs 5e-7 round boundary
-        val n = col("n_top").cast("double")
-        val sx = col("__sx").cast("double"); val sy = col("__sy").cast("double")
-        val sxx = col("__sxx").cast("double"); val sxy = col("__sxy").cast("double")
-        val syy = col("__syy").cast("double")
-        val cov = n * sxy - sx * sy
-        val varx = n * sxx - sx * sx
+      .select(col("stratum"), col("n_top"),
         // degenerate strata (constant rank impossible, but guard anyway)
-        when(varx =!= 0.0, round(-cov / varx, 6)).as("zipf_alpha")
-      }, {
-        val n = col("n_top").cast("double")
-        val sx = col("__sx").cast("double"); val sy = col("__sy").cast("double")
-        val sxx = col("__sxx").cast("double"); val sxy = col("__sxy").cast("double")
-        val syy = col("__syy").cast("double")
-        val cov = n * sxy - sx * sy
-        val varx = n * sxx - sx * sx
-        val vary = n * syy - sy * sy
+        when(varx =!= 0.0, round(-cov / varx, 6)).as("zipf_alpha"),
         // a constant-frequency stratum (vary = 0, exact integer zero) has
         // no meaningful fit quality: r2 is null, not 0/0
         when(varx =!= 0.0 && vary =!= 0.0,
-          round(cov * cov / (varx * vary), 6)).as("r2")
-      })
+          round(cov * cov / (varx * vary), 6)).as("r2"))
   }
 }

@@ -6,20 +6,25 @@ import org.apache.spark.sql.functions._
 /** Deterministic sampling / data-mixing operators for training-set assembly.
   *
   * Everything keys off the cross-engine polynomial hash of the row's OWN
-  * identity ([[TextHash.polyHash]]) — never an RNG and never a partition
+  * identity ([[TextHash.saltedHash]]) — never an RNG and never a partition
   * index — so a sample is (a) bit-identical at any parallelism / cluster
   * size, (b) stable under re-runs and resumes, and (c) verifiable in any
   * ANSI SQL engine (the DuckDB oracle reproduces the exact row set).
   */
 object Sampling {
 
+  /** The identity's 1/1000th band, `saltedHash(identity, salt) mod 1000`:
+    * the one draw behind [[keepAtRate]], [[gumbelKey]] and [[assignSplit]].
+    */
+  private def band(identity: Column, salt: String): Column =
+    pmod(TextHash.saltedHash(identity, salt), lit(1000L))
+
   /** THE keep-decision — the single quantization code path every sampling
     * operator routes through (rate quantized to 1/1000ths, HALF_UP):
-    * hash(identity:salt) mod 1000 < round(rate·1000).
+    * band(identity, salt) < round(rate·1000).
     */
   private def keepCol(identity: Column, rate: Column, salt: String): Column =
-    pmod(TextHash.polyHash(concat(identity.cast("string"), lit(":" + salt))),
-      lit(1000L)) < round(rate * 1000.0)
+    band(identity, salt) < round(rate * 1000.0)
 
   /** Uniform deterministic keep-decision at `rate` for the given identity
     * expression; `salt` decorrelates independent samples of the same table.
@@ -87,12 +92,9 @@ object Sampling {
     * token totals, α<1 upsampling the tail (α=1 natural proportions,
     * α=0 uniform; α≈0.3 is the published multilingual default).
     *
-    * Determinism: t^α is quantized to integer micro-units
-    * (floor(t^α·10⁶+0.5)) BEFORE normalizing, so the normalizer is an
-    * order-free integer sum and w_d = pwq_d/Z is bit-reproducible in any
-    * engine running the same op sequence. The only cross-engine risk left
-    * is a last-ulp `pow` difference landing exactly on a .5 micro-unit
-    * boundary (probability ~10⁻⁹ per stratum — the q60 ln caveat's twin).
+    * Determinism: t^α is [[TextHash.quantize]]d BEFORE normalizing, so
+    * the normalizer is an order-free integer sum and w_d = pwq_d/Z is
+    * bit-reproducible in any engine running the same op sequence.
     */
   def temperatureWeights(
       df: DataFrame,
@@ -100,18 +102,23 @@ object Sampling {
       tokensCol: String,
       alpha: Double
   ): Map[String, Double] = {
-    require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1], got $alpha")
-    val pwq = quantizedTemperatureMass(
-      stratumTokenTotals(df, strataCol, tokensCol), alpha)
-    val z = pwq.values.sum // exact integer — summation order cannot matter
+    val (_, pwq, z) = temperatureMass(df, strataCol, tokensCol, alpha)
     pwq.map { case (k, q) => k -> q.toDouble / z.toDouble }
   }
 
-  private def quantizedTemperatureMass(
-      totals: Map[String, Long], alpha: Double): Map[String, Long] =
-    totals.collect { case (k, t) if t > 0L =>
-      k -> math.floor(math.pow(t.toDouble, alpha) * 1e6 + 0.5).toLong
+  /** Per-stratum token totals, their quantized masses t^α (strata with
+    * tokens only) and the exact integer normalizer Z = Σ masses.
+    */
+  private def temperatureMass(
+      df: DataFrame, strataCol: String, tokensCol: String, alpha: Double
+  ): (Map[String, Long], Map[String, Long], Long) = {
+    require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1], got $alpha")
+    val totals = stratumTokenTotals(df, strataCol, tokensCol)
+    val pwq = totals.collect { case (k, t) if t > 0L =>
+      k -> TextHash.quantize(math.pow(t.toDouble, alpha))
     }
+    (totals, pwq, pwq.values.sum)
+  }
 
   /** Temperature-based data mixing in one call: keep rates realize the
     * t^α mixture under `budget` total tokens. Rate op sequence (mirrored
@@ -127,10 +134,7 @@ object Sampling {
       budget: Long,
       salt: String = "temp1"
   ): DataFrame = {
-    require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1], got $alpha")
-    val totals = stratumTokenTotals(df, strataCol, tokensCol)
-    val pwq = quantizedTemperatureMass(totals, alpha)
-    val z = pwq.values.sum
+    val (totals, pwq, z) = temperatureMass(df, strataCol, tokensCol, alpha)
     val rates = pwq.map { case (k, q) =>
       k -> math.min(1.0,
         budget.toDouble * q.toDouble / z.toDouble / totals(k).toDouble)
@@ -170,8 +174,7 @@ object Sampling {
     * from the same aggregation (count + count-where-target per bucket —
     * one shuffle of O(buckets) partial buffers); the λ table is
     * buckets-sized → broadcast-joined back; per-doc sums are integer sums
-    * of micro-unit-quantized λ (floor(λ·10⁶+0.5), associative and exact —
-    * the q60 determinism pattern), so results are bit-identical at any
+    * of [[TextHash.quantize]]d λ, so results are bit-identical at any
     * parallelism and verifiable in ANSI SQL.
     *
     * Returns df's columns plus (n_tokens, logratio, logratio_avg); docs
@@ -205,18 +208,16 @@ object Sampling {
     val spark = df.sparkSession
     import spark.implicits._
     val lam = dist.toSeq.map { case (b, cr, ct) =>
-      (b, math.floor((math.log((ct + 1L).toDouble / denomT) -
-        math.log((cr + 1L).toDouble / denomR)) * 1e6 + 0.5).toLong)
+      (b, TextHash.quantize(math.log((ct + 1L).toDouble / denomT) -
+        math.log((cr + 1L).toDouble / denomR)))
     }.toDF("__b", "__lq")
     val scored = toks
       .join(broadcast(lam), Seq("__b"))
       .groupBy(col("__id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__lq")).as("__sq"))
-      .withColumn("logratio",
-        round(col("__sq").cast("double") / 1e6, 6))
-      .withColumn("logratio_avg",
-        round(col("__sq").cast("double") / 1e6 /
-          col("n_tokens").cast("double"), 6))
+      .withColumn("logratio", round(TextHash.dequantize(col("__sq")), 6))
+      .withColumn("logratio_avg", round(
+        TextHash.dequantize(col("__sq")) / col("n_tokens").cast("double"), 6))
       .drop("__sq")
     df.join(scored.withColumnRenamed("__id", idCol), Seq(idCol), "left")
       .withColumn("n_tokens", coalesce(col("n_tokens"), lit(0L)))
@@ -231,9 +232,7 @@ object Sampling {
     * (−ln(−ln u)) is plain SQL.
     */
   def gumbelKey(weight: Column, identity: Column, salt: String = "g1"): Column = {
-    val u = (pmod(
-      TextHash.polyHash(concat(identity.cast("string"), lit(":" + salt))),
-      lit(1000L)).cast("double") + 1.0) / 1001.0
+    val u = (band(identity, salt).cast("double") + 1.0) / 1001.0
     weight + -log(-log(u))
   }
 
@@ -253,15 +252,13 @@ object Sampling {
     require(fractions.nonEmpty &&
       math.abs(fractions.map(_._2).sum - 1.0) < 1e-9,
       s"split fractions must sum to 1, got $fractions")
-    val band = pmod(
-      TextHash.polyHash(concat(identity.cast("string"), lit(":" + salt))),
-      lit(1000L))
+    val b = band(identity, salt)
     val cums = fractions.scanLeft(0L) {
       case (acc, (_, f)) => acc + math.round(f * 1000.0)
     }.tail
     fractions.init.map(_._1).zip(cums.init)
       .foldLeft(None: Option[Column]) { case (acc, (name, cum)) =>
-        Some(acc.fold(when(band < cum, name))(_.when(band < cum, name)))
+        Some(acc.fold(when(b < cum, name))(_.when(b < cum, name)))
       }
       .fold(lit(fractions.head._1))(_.otherwise(fractions.last._1))
   }

@@ -23,6 +23,30 @@ object TextHash {
   def polyHash(s: Column): Column =
     coalesce(graft.functions.PolyHash(s), lit(0L))
 
+  /** [[polyHash]] of `identity:salt` — the one hash every deterministic
+    * sample, split, shuffle order and sketch cell draws from.
+    */
+  def saltedHash(identity: Column, salt: String): Column =
+    polyHash(concat(identity.cast("string"), lit(":" + salt)))
+
+  private val Micro = 1e6
+
+  /** The quantizer behind every real-valued sum the oracle checks: `x`
+    * becomes the long `floor(x·scale + 0.5)` (micro-units by default), so
+    * sums are exact, order-free integer sums on any engine at any
+    * parallelism. The one divergence left is a last-ulp `ln`/`pow`
+    * difference landing exactly on a .5 boundary (~1/scale per term).
+    */
+  def quantize(x: Column, scale: Double = Micro): Column =
+    floor(x * lit(scale) + lit(0.5))
+
+  /** Plain-Scala twin of [[quantize]] at micro-units, for values computed outside a plan. */
+  def quantize(x: Double): Long = math.floor(x * Micro + 0.5).toLong
+
+  /** Inverse of [[quantize]] for a (summed) integer: `q / scale`. */
+  def dequantize(q: Column, scale: Double = Micro): Column =
+    q.cast("double") / lit(scale)
+
   /** Character n-gram (shingle) array, distinct. */
   def shingles(text: Column, n: Int): Column =
     when(length(text) < n, array().cast("array<string>")).otherwise(

@@ -213,6 +213,26 @@ class KernelParitySpec extends GraftSuite {
     }
   }
 
+  test("PolyHash == code-point fold (h·31 + cp) mod 2^32 over generated text") {
+    import graft.text.TextHash
+    def fold(t: String): Long =
+      t.codePoints().toArray.foldLeft(0L)((h, cp) => (h * 31 + cp) % (1L << 32))
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    inBothModes {
+      val got = df.select(graft.functions.PolyHash(col("text")),
+        TextHash.polyHash(col("text"))).collect()
+      for ((r, i) <- got.zipWithIndex) rows(i) match {
+        case None =>
+          assert(r.isNullAt(0) && r.getLong(1) == 0L, "null text: null kernel, polyHash 0")
+        case Some(t) =>
+          assert(r.getLong(0) == fold(t) && r.getLong(1) == fold(t), s"text=$t")
+      }
+      assert(rows.flatten.exists(t => t.codePointCount(0, t.length) < t.length),
+        "no draw had a surrogate pair")
+    }
+  }
+
   test("a kernel over a column Spark cannot cast to its input type fails at analysis") {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(Seq(1L, 2L)).toDF("a").select(graft.functions.PolyHash(col("a")))

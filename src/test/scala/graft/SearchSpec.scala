@@ -8,8 +8,9 @@ import graft.expr._
 import graft.search.{Corr, Ego, GramCV, SymbolicSearch}
 
 /** The search layer's shared machinery off the bench path: the Gram
-  * core's null rule, fold-key validation, the bootstrap weight of a null
-  * row key, and GP tree surgery over group (array) nodes.
+  * core's null rule, the correlation matrix's shift, fold-key validation,
+  * the bootstrap weight of a null row key, and GP tree surgery over group
+  * (array) nodes.
   */
 class SearchSpec extends GraftSuite {
   import spark.implicits._
@@ -48,6 +49,26 @@ class SearchSpec extends GraftSuite {
       w.toArray.zip(w0.toArray).foreach { case (a, c) => close(a, c, s"$what W") }
       close(b, b0, s"$what B")
     }
+  }
+
+  test("Corr.matrix: a shifted frame keeps its r and a constant column reads 0") {
+    val rnd = new Random(8)
+    val base = (1 to 1000).map { _ =>
+      val a = rnd.nextDouble(); (a, 2.0 * a + 0.05 * rnd.nextGaussian())
+    }
+    val m0 = Corr.matrix(base.toDF("a", "b"), Seq("a", "b"))
+    assert(m0(0)(1) > 0.99 && m0(0)(1) < 1.0, s"r = ${m0(0)(1)}")
+    // raw sums cancel here: x'x/n and (Σx/n)² agree to ~16 digits at 1e8
+    val shifted = base.map { case (a, b) => (a + 1e8, b + 1e8) }.toDF("a", "b")
+    val m1 = Corr.matrix(shifted, Seq("a", "b"))
+    for (i <- 0 to 1; j <- 0 to 1)
+      assert(math.abs(m1(i)(j) - m0(i)(j)) <= 1e-9, s"r($i, $j): ${m1(i)(j)} vs ${m0(i)(j)}")
+    // 3.0 sums exactly; a thousand 0.1s do not, so their mean is inexact
+    val withConst = base.map { case (a, b) => (a, b, 3.0, 0.1) }.toDF("a", "b", "c3", "c01")
+    val mc = Corr.matrix(withConst, Seq("a", "b", "c3", "c01"))
+    for (i <- 0 to 3; j <- 2 to 3)
+      assert(mc(i)(j) == 0.0 && mc(j)(i) == 0.0, s"r($i, $j) = ${mc(i)(j)}, r($j, $i) = ${mc(j)(i)}")
+    assert(mc(0)(1) == m0(0)(1))
   }
 
   test("a null or out-of-range fold key fails loudly, naming the keys") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
-import graft.text.{Dedup, TextHash, TextQuality}
+import graft.text.{Dedup, Drift, TextHash, TextQuality}
 import graft.multimodal.Multimodal
 
 class TextSpec extends GraftSuite {
@@ -34,6 +34,19 @@ class TextSpec extends GraftSuite {
         .as[Long].collect().toSeq
       assert(nat == strs.map(graft.functions.PolyHash.hash))
     }
+  }
+
+  test("tokenDrift keeps the null stratum: its row equals a fresh name's row") {
+    val rows = Seq((1L, Option("a"), "x y y z"), (2L, Option("b"), "y z z"),
+      (3L, None, "x x q y"))
+    def drift(rs: Seq[(Long, Option[String], String)]) =
+      Dedup.withCache(Drift.tokenDrift(rs.toDF("id", "src", "text"), "text", "src")
+        .collect().map(r => Option(r.getString(0)) -> r.toSeq.tail).toMap)
+    val withNull = drift(rows)
+    val named = drift(rows.map { case (i, s, t) => (i, s.orElse(Some("fresh")), t) })
+    assert(withNull.keySet == Set(Some("a"), Some("b"), None))
+    assert(withNull(None) == named(Some("fresh")))
+    assert(withNull - None == named - Some("fresh"))
   }
 
   test("exact dedup keeps min id per identical text") {

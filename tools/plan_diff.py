@@ -6,9 +6,11 @@ Usage: python3 tools/plan_diff.py <parentDir> <changeDir>
 Each directory holds one `<query>.txt` per query, as written by
 `graft.run.Probe <out.json> <planDir> ...` (`explain("formatted")`).
 Before comparing, every plan is normalized: expression ids (`#123`,
-`#123L`), `plan_id=N` tags, temp/checkpoint paths and JVM object
-identities (lambda class names, `@hashcode`) are replaced by fixed
-tokens, so two runs of the same code compare equal.
+`#123L`), `plan_id=N` tags, temp/checkpoint paths, JVM object identities
+(lambda class names, `@hashcode`) and the RDD id and `at <File>.scala:<line>`
+call site that ExistingRDD arguments print are replaced by fixed tokens,
+so two runs of the same code compare equal, and so do two checkouts
+whose only difference is the line a local relation is created on.
 
 Prints one line per query: its Exchange and Sort counts on both sides
 and SAME / DIFF (or the side it is missing from). For a DIFF it then
@@ -29,6 +31,7 @@ NORMALIZE = [
      "spark-<uuid>"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"@[0-9a-f]{4,8}\b"), "@<obj>"),
+    (re.compile(r"\b(\w*RDD)\[\d+\] at \w+ at [\w$]+\.scala:\d+"), r"\1[N] at <call site>"),
 ]
 EXCHANGE = re.compile(r"^\(\d+\) \w*Exchange\b", re.M)
 SORT = re.compile(r"^\(\d+\) Sort\b", re.M)
