@@ -384,7 +384,7 @@ object SparkEntry {
     }),
 
     "q43_score_batch" -> ((s, dir) => {
-      // the GP scoring path (Scoring.scoreBatch: one select + one agg per
+      // the GP scoring path (Scoring.scoreBatch: one packed aggregation per
       // chunk, closed-form A·f+B OLS, error containment) on a FIXED
       // candidate set — fully oracle-checkable, unlike the driver-RNG search
       import graft.expr._

@@ -76,7 +76,6 @@ final case class Registry(
     probs: Map[String, Double] = Map.empty
 ) {
   def names: Seq[String] = terminals.keys.toSeq.sorted
-  def groupNames: Seq[String] = groups.keys.toSeq.sorted
   def withDerived(name: String, col: Column, dim: DimT): Registry =
     copy(terminals = terminals + (name -> (col, dim)))
 }

@@ -60,7 +60,8 @@ object GramCV {
 
   /** One aggregation pass building every fold's Gram matrix.
     * Output row count = k (tiny); all heavy lifting is map-side partial
-    * aggregation of (d+2)² running sums.
+    * aggregation of one packed buffer per fold: the (d+2)(d+3)/2 sums of
+    * each Gram's upper triangle.
     */
   def fit(
       df: DataFrame,

@@ -12,8 +12,6 @@ import scala.util.Random
 final class PreMap private (val m: Array[Array[Double]]) {
   val n: Int = m.length
 
-  def copyMap: PreMap = new PreMap(m.map(_.clone()))
-
   /** Conditional probabilities of partners given `i` (get_ind_value). */
   def conditional(i: Int): Array[Double] = {
     val row = m(i).clone()

@@ -168,17 +168,6 @@ object Corr {
       if (method == "max") vs.max else vs.sum / vs.size
     }
   }
-
-  /** Keep the member of each correlated cluster most correlated with y
-    * (corr.py:184-202).
-    */
-  def removeByY(m: Array[Array[Double]], yCorr: Array[Double], t: Double): Seq[Int] = {
-    val partners = countCof(m, t)
-    m.indices.filter { i =>
-      val cluster = partners(i) :+ i
-      cluster.maxBy(j => (math.abs(yCorr(j)), -j)) == i
-    }
-  }
 }
 
 /** Exhaustive subset search (selection/exhaustion.py:58-121): enumerate

@@ -3,6 +3,7 @@ package graft.search
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.storage.StorageLevel
 
 import graft.expr._
 
@@ -227,7 +228,9 @@ object SymbolicSearch {
 
   def fit(df: DataFrame, reg: Registry, y: Column, cfg: Config = Config()): Result = {
     val rnd = new Random(cfg.seed)
-    val cached = df.persist()
+    // a frame the caller cached stays cached: only our own cache is dropped
+    val owned = df.storageLevel == StorageLevel.NONE
+    val cached = if (owned) df.persist() else df
     // the registry and terminal list GROW when elite re-add is on: derived
     // terminals append at the end so premap/terminal indices stay stable
     var curReg = reg
@@ -381,7 +384,7 @@ object SymbolicSearch {
       // the (possibly grown) registry rides along so predictCol can compile
       // hall expressions that reference derived terminals
       Result(hall, gen, logbook.result(), curReg)
-    } finally { cached.unpersist() }
+    } finally { if (owned) cached.unpersist() }
   }
 
   /** Predict with a fitted individual: A·f + B as a Column. */

@@ -57,12 +57,6 @@ final class Store(root: String) {
     df.write.mode(SaveMode.ErrorIfExists).parquet(p)
     p
   }
-
-  def toCsv(df: DataFrame, name: String): String = {
-    val p = new File(root, freeName(name + ".csv")).getPath
-    df.write.mode(SaveMode.ErrorIfExists).option("header", "true").csv(p)
-    p
-  }
 }
 
 /** Bucketed-layout sink/reader — the CO-LOCATED JOIN lever at 100 TB: two

@@ -63,13 +63,6 @@ object WeightedStats {
     when(count(x) === 1, lit(0.0)).otherwise(sqrt(beta * m2))
   }
 
-  /** Unweighted population std (np.std, ddof=0). */
-  def stdDevPop(x: Column): Column = {
-    val n = count(x).cast("double")
-    val mu = sum(x) / n
-    sqrt(sum(x * x) / n - mu * mu)
-  }
-
   /** Weighted skewness u3 / u2^1.5 with central moments about the weighted
     * mean (extrastats.py:154-181); 0 when n == 1.
     */

@@ -282,25 +282,3 @@ object Descriptors {
       .withColumn(s"rolling_sum_$rollingRows", sum(valueCol).over(wr))
   }
 }
-
-/** Skew tooling for mega-conversations (north_star: salted repartitioning +
-  * AQE skew-join hints).
-  */
-object Skew {
-
-  /** Add a salt column splitting rows of hot keys into `buckets` sub-keys.
-    * Use for aggregations that are algebraically mergeable (partial agg per
-    * (key, salt), then final agg per key). Window/as-of operators must keep
-    * conversations whole, so they rely on AQE instead.
-    */
-  def salted(df: DataFrame, key: String, buckets: Int): DataFrame =
-    df.withColumn("__salt", pmod(hash(col(key), monotonically_increasing_id()), lit(buckets)))
-
-  /** Two-phase skew-proof count per key: partial per (key, salt), merge. */
-  def countByKeySkewProof(df: DataFrame, key: String, buckets: Int): DataFrame =
-    salted(df, key, buckets)
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("n"))
-}

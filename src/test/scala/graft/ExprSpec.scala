@@ -69,6 +69,14 @@ class ExprSpec extends GraftSuite {
     assert(scores("lnneg").r2 == Scoring.worst)
   }
 
+  test("scoreBatch: a null target takes its row out of every candidate's sums") {
+    // y = f on ten rows; the eleventh has f = 5 and no y
+    val df = ((1 to 10).map(i => (i.toDouble, Option(i.toDouble))) :+ ((5.0, None)))
+      .toDF("f", "y")
+    val fit = Scoring.scoreBatch(df, col("y"), Seq("f" -> col("f")))("f")
+    assert(fit.n == 10 && approx(fit.r2, 1.0), fit)
+  }
+
   test("GramCV: fold grams reproduce OLS CV r2 computed by hand") {
     val rnd = new Random(7)
     val rows = (1 to 200).map { i =>

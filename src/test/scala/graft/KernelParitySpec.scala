@@ -233,6 +233,100 @@ class KernelParitySpec extends GraftSuite {
     }
   }
 
+  /** Packed sums against [[ScalarSums]] on one partition (bit for bit)
+    * and on three (1e-12 relative, NaN and ±Inf equal), with every count
+    * equal.
+    */
+  private def sameSums(a: Seq[Double], b: Seq[Double], exact: Boolean, what: => String): Unit = {
+    assert(a.size === b.size, what)
+    for ((x, y) <- a.zip(b)) assert(
+      if (exact) java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+      else x == y || approx(x, y, 1e-12), s"$what: $x vs $y\n$a\n$b")
+  }
+  private def partitionings(df: org.apache.spark.sql.DataFrame) =
+    Seq(true -> df.coalesce(1), false -> df.repartition(3, col("id")))
+
+  /** A frame of `rows` rows: id, then the given columns; `cell(c)` draws
+    * column c's values.
+    */
+  private def frame(names: Seq[String], rows: Int, cell: Int => Gen[Option[Double]]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val gen = Gen.sequence[Seq[Option[Double]], Option[Double]](names.indices.map(cell))
+    val data = draws(gen, rows).zipWithIndex.map { case (v, i) =>
+      Row.fromSeq(i.toLong +: v.map(_.map(Double.box).orNull))
+    }
+    val schema = StructType(StructField("id", LongType) +:
+      names.map(StructField(_, DoubleType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 4), schema)
+  }
+  private def value(bad: Int): Gen[Option[Double]] = Gen.frequency(
+    bad -> Gen.oneOf(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity)),
+    40 -> Gen.choose(-10.0, 10.0).map(Some(_)))
+
+  test("packed Gram sums == scalar-sum twin: d 1..20, nulls, NaN, ±Inf, keys, 16 weights") {
+    import graft.expr.Gram
+    // per d: rows (0 = the empty frame), bad-value weight, key, weighted
+    // (few d: the twin plans one sum per slot, 16·(d+1)(d+2)/2 of them)
+    val cases = (1 to 20).map(d =>
+      (d, if (d % 7 == 3) 0 else 5 + 3 * d, d % 3, d % 4 == 1, Set(2, 5, 6).contains(d)))
+    for ((d, rows, bad, keyed, weighted) <- cases) {
+      val zs = (0 until d).map(i => s"z$i"); val ws = (0 until 16).map(b => s"w$b")
+      // bootstrap-like weights 0/1/2, sometimes null; w7 is null on every row
+      val w: Gen[Option[Double]] = Gen.frequency(1 -> Gen.const(None),
+        8 -> Gen.choose(0, 2).map(k => Some(k.toDouble)))
+      val df = frame(zs ++ ws :+ "k", rows, c =>
+        if (c < d) value(bad)
+        else if (c == d + 7) Gen.const(None)
+        else if (c < d + 16) w
+        // key: null, or fold 0, 1 or 3 (fold 2 is empty)
+        else Gen.oneOf(None, Some(0.0), Some(1.0), Some(3.0)))
+      val z = zs.map(col) :+ lit(1.0)
+      val weights = if (weighted) ws.map(col) else Nil
+      val key = if (keyed) Some(col("k").cast("int")) else None
+      for ((exact, part) <- partitionings(df)) {
+        val twin = ScalarSums.gram(part, z, weights, key)
+        val packed = Gram.sums(part, z, weights, key).collect().map { r =>
+          (if (keyed) r.get(0) else null) -> (r.getLong(key.size), r.getSeq[Double](key.size + 1))
+        }.toMap
+        val what = s"d=$d rows=$rows bad=$bad keyed=$keyed weighted=$weighted exact=$exact"
+        assert(packed.keySet === twin.keySet, what)
+        for ((k, (n, s)) <- twin) {
+          assert(packed(k)._1 === n, s"$what key=$k")
+          sameSums(packed(k)._2.toSeq, s, exact, s"$what key=$k")
+        }
+        if (keyed && rows > 0) assert(!packed.contains(2) && packed.contains(null), what)
+      }
+    }
+  }
+
+  test("packed candidate sums == scalar-sum twin: null y, all-bad and half-bad candidates") {
+    import graft.expr.Scoring
+    for ((nc, rows) <- Seq((1, 0), (1, 30), (4, 17), (9, 40), (20, 25))) {
+      val fs = (0 until nc).map(c => s"f$c")
+      // column c > 0 is candidate c − 1: clean, half bad or all bad by (c − 1) % 3;
+      // y is sometimes null or NaN
+      val df = frame("y" +: fs, rows, {
+        case 0 => Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN)),
+          20 -> Gen.choose(-10.0, 10.0).map(Some(_)))
+        case c => (c - 1) % 3 match {
+          case 0 => value(0)
+          case 1 => Gen.oneOf(value(0), value(1000))
+          case _ => value(1000).map(_.filter(v => v.isNaN || v.isInfinite))
+        }
+      })
+      for ((exact, part) <- partitionings(df)) {
+        val what = s"candidates=$nc rows=$rows exact=$exact"
+        val packed = Scoring.sums(part, col("y"), fs.map(col)).head().getSeq[Double](0)
+        val twin = ScalarSums.score(part, col("y"), fs.map(col))
+        sameSums(packed.toSeq, twin, exact, what)
+        // the counts: every n and the total are whole and equal
+        for (i <- (0 until nc).map(6 * _) :+ 6 * nc) assert(packed(i) == twin(i), s"$what slot $i")
+      }
+    }
+  }
+
   test("a kernel over a column Spark cannot cast to its input type fails at analysis") {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(Seq(1L, 2L)).toDF("a").select(graft.functions.PolyHash(col("a")))

@@ -435,4 +435,29 @@ class PlanAuditSpec extends GraftSuite {
     assert("Scan parquet".r.findAllIn(p).size == 1,
       s"audit must read events exactly once:\n$p")
   }
+
+  test("search-layer sums: one packed aggregate whatever d or the candidate chunk size") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import graft.expr.{Gram, Scoring}
+    def aggs(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case a: Aggregate =>
+        a.aggregateExpressions.map(_.collect { case e: AggregateExpression => e }.size).sum
+      }.sum
+    val df = spark.range(64).select((0 until 40).map(i =>
+      (col("id") * (i + 1) % 17).cast("double").as(s"x$i")): _*)
+    val z = (d: Int) => (0 until d).map(i => col(s"x$i")) :+ lit(1.0)
+    val fold = Some(pmod(col("x0"), lit(3.0)).cast("int"))
+    val weights = (0 until 16).map(b => col(s"x$b"))
+    val grams = Seq(Gram.sums(df, z(4)), Gram.sums(df, z(40)),
+      Gram.sums(df, z(4), key = fold), Gram.sums(df, z(40), key = fold),
+      Gram.sums(df, z(4), weights), Gram.sums(df, z(40), weights))
+    assert(grams.map(aggs) === Seq.fill(6)(2), "the row count and the packed sums")
+    val cands = (n: Int) => (0 until n).map(i => col(s"x${i % 40}") * lit(i.toDouble))
+    val scores = Seq(8, 128).map(n => Scoring.sums(df, col("x0"), cands(n)))
+    assert(scores.map(aggs) === Seq(1, 1), "the packed sums")
+    // both are partial aggregations, map-side combined before the shuffle
+    for (p <- (grams ++ scores).map(plan))
+      assert("ObjectHashAggregate".r.findAllIn(p).size == 2 && p.contains("partial_"), p)
+  }
 }

@@ -9,8 +9,8 @@ import graft.search.{Corr, Ego, GramCV, SymbolicSearch}
 
 /** The search layer's shared machinery off the bench path: the Gram
   * core's null rule, the correlation matrix's shift, fold-key validation,
-  * the bootstrap weight of a null row key, and GP tree surgery over group
-  * (array) nodes.
+  * the bootstrap weight of a null row key, the GP search's caching of its
+  * input, and GP tree surgery over group (array) nodes.
   */
 class SearchSpec extends GraftSuite {
   import spark.implicits._
@@ -102,6 +102,22 @@ class SearchSpec extends GraftSuite {
     def exact(d: org.apache.spark.sql.DataFrame) = betas(Ego.fitBootstrapExact(
       d, "x", floor(col("x0") * 10.0), floor(col("y") * 100.0), col("id"), b = 8))
     same(exact(df), exact(cleanDf), "fitBootstrapExact")
+  }
+
+  test("SymbolicSearch.fit leaves its caller's cache in place and caches nothing else") {
+    import org.apache.spark.storage.StorageLevel
+    val reg = Registry(terminals = Map(
+      "x0" -> (col("x0"), Dim.dless), "x1" -> (col("x1"), Dim.dless)))
+    val cfg = SymbolicSearch.Config(popSize = 6, nGen = 1, maxHeight = 2)
+    val cached = rows(3).toDF("id", "x0", "x1", "y").persist()
+    try {
+      cached.count()
+      SymbolicSearch.fit(cached, reg, col("y"), cfg)
+      assert(cached.storageLevel != StorageLevel.NONE, "fit uncached its caller's frame")
+    } finally cached.unpersist()
+    val plain = rows(3).toDF("id", "x0", "x1", "y")
+    SymbolicSearch.fit(plain, reg, col("y"), cfg)
+    assert(plain.storageLevel == StorageLevel.NONE, "fit left its own cache behind")
   }
 
   test("GP tree surgery over group nodes: fixed-seed renders") {
