@@ -28,12 +28,23 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // default 64m advisory under-parallelizes CPU-bound stages whenever
-      // total shuffle bytes < 64m × cores (true for any local run and for
-      // the tail stages of big jobs); 8m keeps every core busy while still
-      // coalescing pathological tiny-partition fan-outs at scale
+      // the default 64m advisory size under-splits CPU-bound stages whose
+      // shuffle output is below 64m × cores; 8m splits finer while still
+      // coalescing tiny-partition fan-outs at scale. It does not keep every
+      // core busy on a small stage: with parallelismFirst (the default) the
+      // target never drops below minPartitionSize (1m), so a stage writing
+      // 2m of shuffle data runs as 2 tasks however many cores there are
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // Unless this is on, Spark fills a cache with AQE partition
+      // coalescing off: every cached frame keeps all `shufflePartitions`
+      // partitions however small it is, and every pass over it pays a fixed
+      // per-task cost for each (feature_search's 2,048-row matrix: 16 tasks
+      // per aggregation instead of 1). The price: a cached frame's output
+      // partitioning may differ from its plan's, so a later join over it
+      // can need an exchange it would have skipped; none of the 109
+      // queries' plans gains an exchange or a sort.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // reliable checkpoints (resolveClusters every 4th round) are deleted
       // once their RDD is GC'd — without this Spark NEVER removes
       // checkpoint files, which on the tmpfs default dir means RAM-backed

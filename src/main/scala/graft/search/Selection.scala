@@ -73,8 +73,8 @@ object Corr {
     *
     * Exactly TWO Spark passes regardless of d:
     *  1. min/max of every column (one agg);
-    *  2. the full per-pair joint histogram — d(d−1)/2 · bins² conditional
-    *     counts in one agg (map-side combined; the grid is tiny).
+    *  2. every pair's joint histogram as one count per grid cell
+    *     ([[gridCounts]]; map-side combined, the grid is tiny).
     * MI assembly is exact-integer-count driver arithmetic.
     */
   def micMatrix(df: DataFrame, cols: Seq[String], bins: Int = 4): Array[Array[Double]] = {
@@ -90,6 +90,52 @@ object Corr {
     */
   def binnedMI(df: DataFrame, cols: Seq[String], bins: Int = 4): Array[Array[Double]] = {
     val d = cols.size
+    val counts = gridCounts(df, cols, bins).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    val n = counts(-1L).toDouble
+    val grids = pairs(d).zipWithIndex.map { case (ij, p) =>
+      ij -> Array.tabulate(bins, bins)((bi, bj) => counts((p.toLong * bins + bi) * bins + bj))
+    }.toMap
+    val out = Array.fill(d, d)(0.0)
+    for ((i, j) <- pairs(d)) {
+      val grid = grids((i, j))
+      val ri = (0 until bins).map(bi => grid(bi).sum.toDouble)
+      val cj = (0 until bins).map(bj => (0 until bins).map(bi => grid(bi)(bj)).sum.toDouble)
+      var mi = 0.0
+      for (bi <- 0 until bins; bj <- 0 until bins if grid(bi)(bj) > 0) {
+        val cc = grid(bi)(bj).toDouble
+        mi += (cc / n) * math.log(cc * n / (ri(bi) * cj(bj)))
+      }
+      out(i)(j) = mi; out(j)(i) = mi
+    }
+    // diag: marginal entropy from any pair's marginals (d >= 2 in practice)
+    for (i <- 0 until d) {
+      val j = if (i == 0) 1 else 0
+      val grid = grids((math.min(i, j), math.max(i, j)))
+      val marg =
+        if (i < j) (0 until bins).map(bi => grid(bi).sum.toDouble)
+        else (0 until bins).map(bj => (0 until bins).map(bi => grid(bi)(bj)).sum.toDouble)
+      out(i)(i) = -marg.filter(_ > 0).map(p => (p / n) * math.log(p / n)).sum
+    }
+    out
+  }
+
+  /** Column pairs i < j in row-major order; pair p owns grid cells
+    * [p·bins², (p+1)·bins²).
+    */
+  private def pairs(d: Int): IndexedSeq[(Int, Int)] =
+    for (i <- 0 until d; j <- (i + 1) until d) yield (i, j)
+
+  /** The grid pass of [[binnedMI]] (after its range pass): one `(cell,
+    * count)` row per non-empty cell. Cell (p·bins + bi)·bins + bj counts
+    * the rows whose column pair p falls in bins (bi, bj); cell −1 counts
+    * every row (`n`). Each row explodes to one cell id per pair, so the
+    * plan holds one count whatever d and bins are. Every bucket is in
+    * [0, bins); a null value lands in the last bin, as `least` skips it
+    * (bin 0 for a constant column).
+    */
+  private[graft] def gridCounts(df: DataFrame, cols: Seq[String], bins: Int): DataFrame = {
+    val d = cols.size
     require(d >= 2, "binnedMI needs at least two columns")
     val c = cols.map(n => col(n).cast("double"))
     // pass 1: ranges
@@ -103,40 +149,13 @@ object Corr {
       if (hi(i) <= lo(i)) lit(0)
       else least(floor((c(i) - lit(lo(i))) / lit(hi(i) - lo(i)) * bins),
         lit((bins - 1).toDouble)).cast("int")
-    val bucketed = df.select((0 until d).map(i => bucket(i).as(s"b_$i")): _*)
+    val cells = pairs(d).zipWithIndex.map { case ((i, j), p) =>
+      lit(p.toLong * bins * bins) + col(s"b_$i") * bins + col(s"b_$j")
+    }
     // pass 2: every pair's joint grid in one aggregation
-    val aggs = for {
-      i <- 0 until d; j <- (i + 1) until d
-      bi <- 0 until bins; bj <- 0 until bins
-    } yield sum(when(col(s"b_$i") === bi && col(s"b_$j") === bj, 1L)
-      .otherwise(0L)).as(s"c_${i}_${j}_${bi}_$bj")
-    val row = bucketed.agg(count(lit(1)).as("n"), aggs: _*).head()
-    val n = row.getAs[Long]("n").toDouble
-    val out = Array.fill(d, d)(0.0)
-    for (i <- 0 until d; j <- (i + 1) until d) {
-      val grid = Array.tabulate(bins, bins)((bi, bj) =>
-        row.getAs[Long](s"c_${i}_${j}_${bi}_$bj"))
-      val ri = (0 until bins).map(bi => grid(bi).sum.toDouble)
-      val cj = (0 until bins).map(bj => (0 until bins).map(bi => grid(bi)(bj)).sum.toDouble)
-      var mi = 0.0
-      for (bi <- 0 until bins; bj <- 0 until bins if grid(bi)(bj) > 0) {
-        val cc = grid(bi)(bj).toDouble
-        mi += (cc / n) * math.log(cc * n / (ri(bi) * cj(bj)))
-      }
-      out(i)(j) = mi; out(j)(i) = mi
-    }
-    // diag: marginal entropy from any pair's marginals (d >= 2 in practice)
-    for (i <- 0 until d) {
-      val j = if (i == 0) 1 else 0
-      val (a, b) = (math.min(i, j), math.max(i, j))
-      val grid = Array.tabulate(bins, bins)((bi, bj) =>
-        row.getAs[Long](s"c_${a}_${b}_${bi}_$bj"))
-      val marg =
-        if (i < j) (0 until bins).map(bi => grid(bi).sum.toDouble)
-        else (0 until bins).map(bj => (0 until bins).map(bi => grid(bi)(bj)).sum.toDouble)
-      out(i)(i) = -marg.filter(_ > 0).map(p => (p / n) * math.log(p / n)).sum
-    }
-    out
+    df.select((0 until d).map(i => bucket(i).as(s"b_$i")): _*)
+      .select(explode(array(lit(-1L) +: cells: _*)).as("cell"))
+      .groupBy("cell").count()
   }
 
   /** Group collapse of a correlation/MIC matrix over coupled (muti_grade)

@@ -233,6 +233,99 @@ class KernelParitySpec extends GraftSuite {
     }
   }
 
+  test("HashedBow == declarative per-token bucket fold over generated text") {
+    import graft.text.TextHash
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    // the bench runs only dim = 256; dim = 1 puts every token in one bucket
+    val dims = Seq(1, 3, 7, 100, 255)
+    inBothModes {
+      val got = df.select(dims.flatMap(dim => Seq(
+        TextHash.hashedBow(col("text"), dim), TextHash.hashedBowDeclarative(col("text"), dim))
+      ): _*).collect()
+      for ((r, i) <- got.zipWithIndex; (dim, p) <- dims.zipWithIndex) {
+        assert(r.isNullAt(2 * p) === rows(i).isEmpty && r.isNullAt(2 * p + 1) === rows(i).isEmpty,
+          s"dim=$dim text=${rows(i)}")
+        if (rows(i).nonEmpty) assert(r.getSeq[Double](2 * p) === r.getSeq[Double](2 * p + 1),
+          s"dim=$dim text=${rows(i)}")
+      }
+      assert(got.exists(r => !r.isNullAt(2) && r.getSeq[Double](2).exists(math.abs(_) >= 2.0)),
+        "no draw put two same-signed tokens in one of 3 buckets")
+    }
+  }
+
+  test("SimHashParts == declarative per-bit vote fold over generated text") {
+    import graft.text.TextHash
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    // the bench runs only words = 2; 8 is the cap. One select per width
+    // keeps the declarative twin's 32·words folds per plan small.
+    inBothModes {
+      for (words <- Seq(1, 5, 8)) {
+        val got = df.select(TextHash.simhashParts(col("text"), words),
+          TextHash.simhashPartsDeclarative(col("text"), words)).collect()
+        // null text: the kernel returns null; the twin's folds read it as
+        // no votes (all-zero parts), so only non-null text is compared
+        for ((r, i) <- got.zipWithIndex) rows(i) match {
+          case None => assert(r.isNullAt(0), s"words=$words: null text, null parts")
+          case Some(t) => assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"words=$words text=$t")
+        }
+        assert(got.exists(r => !r.isNullAt(0) && r.getSeq[Long](0).last != 0L),
+          s"words=$words: no draw set a bit of the last part")
+      }
+    }
+  }
+
+  test("NfcNormalize == java.text.Normalizer NFC over generated decomposed text") {
+    import java.text.Normalizer
+    // decomposed and composable sequences beside the plain pieces: e +
+    // combining acute, A + ring, Hangul jamo, the Ångström sign (a
+    // singleton that NFC maps to Å), marks out of canonical order
+    val decomposed = Gen.oneOf("e\u0301", "A\u030A", "\u1100\u1161\u11A8", "\u212B",
+      "a\u0307\u0323", "\u0301", "o\u0308\u0304")
+    val nfcTexts = Gen.frequency(1 -> Gen.const(None), 10 -> Gen.choose(0, 16).flatMap(
+      Gen.listOfN(_, Gen.frequency(3 -> texts.map(_.getOrElse("")), 2 -> decomposed)))
+      .map(p => Some(p.mkString)))
+    val rows = draws(nfcTexts, 300) ++ textEdges ++ Seq(Some("e\u0301"), Some("\u0301"))
+    val df = rows.map(Tuple1(_)).toDF("text")
+    inBothModes {
+      val got = df.select(graft.functions.NfcNormalize(col("text"))).collect()
+      for ((r, i) <- got.zipWithIndex) rows(i) match {
+        case None => assert(r.isNullAt(0), "null in, null out")
+        case Some(t) =>
+          assert(r.getString(0) === Normalizer.normalize(t, Normalizer.Form.NFC), s"text=$t")
+      }
+      assert(rows.flatten.count(t => !Normalizer.isNormalized(t, Normalizer.Form.NFC)) > 50,
+        "draws did not exercise the composing path")
+    }
+  }
+
+  test("MultiContainsCount == declarative contains-per-pattern count over generated patterns") {
+    // overlapping, nested and repeated patterns over the text alphabet,
+    // surrogate pairs included; a repeated pattern counts once per copy
+    val pattern = Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.oneOf(
+      "a", "b", "ab", "ba", "aa", "th", "the", "e", " ", "\uD83D\uDE00", "\u00E9", "\u65E5")))
+      .map(_.mkString)
+    // the bench runs only its own phrase lists; these range from one
+    // pattern to sixty
+    val sets = draws(Gen.choose(1, 60).flatMap(Gen.listOfN(_, pattern)), 6) :+ List("a", "a")
+    val rows = draws(texts, 300) ++ textEdges
+    val df = rows.map(Tuple1(_)).toDF("text")
+    inBothModes {
+      val got = df.select(sets.flatMap(ps => Seq(
+        graft.functions.MultiContainsCount(col("text"), ps),
+        size(filter(lit(ps.toArray), p => contains(col("text"), p))))): _*).collect()
+      for ((r, i) <- got.zipWithIndex; (ps, s) <- sets.zipWithIndex) rows(i) match {
+        case None => assert(r.isNullAt(2 * s), "null text: null count")
+        case Some(t) => assert(r.getInt(2 * s) === r.getInt(2 * s + 1),
+          s"patterns=$ps text=$t")
+      }
+      val last = 2 * (sets.size - 1)
+      assert(got.exists(r => !r.isNullAt(last) && r.getInt(last) == 2),
+        "the repeated pattern never matched")
+    }
+  }
+
   /** Packed sums against [[ScalarSums]] on one partition (bit for bit)
     * and on three (1e-12 relative, NaN and ±Inf equal), with every count
     * equal.

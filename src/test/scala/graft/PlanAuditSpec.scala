@@ -13,6 +13,15 @@ class PlanAuditSpec extends GraftSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Aggregate expressions in the optimized plan. */
+  private def aggs(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    df.queryExecution.optimizedPlan.collect { case a: Aggregate =>
+      a.aggregateExpressions.map(_.collect { case e: AggregateExpression => e }.size).sum
+    }.sum
+  }
+
   /** Bloom-indexed ingest of every 5th document against a persisted index
     * (with sketches) of the rest — the IngestLoop / curate_ingest shape.
     */
@@ -437,13 +446,7 @@ class PlanAuditSpec extends GraftSuite {
   }
 
   test("search-layer sums: one packed aggregate whatever d or the candidate chunk size") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import graft.expr.{Gram, Scoring}
-    def aggs(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect { case a: Aggregate =>
-        a.aggregateExpressions.map(_.collect { case e: AggregateExpression => e }.size).sum
-      }.sum
     val df = spark.range(64).select((0 until 40).map(i =>
       (col("id") * (i + 1) % 17).cast("double").as(s"x$i")): _*)
     val z = (d: Int) => (0 until d).map(i => col(s"x$i")) :+ lit(1.0)
@@ -459,5 +462,42 @@ class PlanAuditSpec extends GraftSuite {
     // both are partial aggregations, map-side combined before the shuffle
     for (p <- (grams ++ scores).map(plan))
       assert("ObjectHashAggregate".r.findAllIn(p).size == 2 && p.contains("partial_"), p)
+  }
+
+  test("binned MI grid pass: one count whatever d, partial before the shuffle") {
+    import graft.search.Corr
+    val df = spark.range(64).select((0 until 10).map(i =>
+      (col("id") * (i + 1) % 17).cast("double").as(s"x$i")): _*)
+    for (d <- Seq(4, 10)) {
+      val grid = Corr.gridCounts(df, (0 until d).map(i => s"x$i"), bins = 4)
+      assert(aggs(grid) === 1, s"d=$d")
+      val p = plan(grid)
+      assert("partial_count".r.findAllIn(p).size == 1 && "Exchange".r.findAllIn(p).size == 1, p)
+    }
+  }
+
+  test("a cached frame is sized to its data: 2,048 aggregated rows cache as one partition") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.expr.Gram
+    val m = spark.range(8192).groupBy((col("id") % 2048).as("k"))
+      .agg(sum(col("id")).cast("double").as("s"), count(lit(1)).cast("double").as("c"))
+      .cache()
+    try {
+      assert(m.count() === 2048)
+      // the cache fill is coalesced like any final stage, not kept at the
+      // session's 4 shuffle partitions
+      assert(m.rdd.getNumPartitions === 1)
+      // one partial-aggregate task per partition of its input
+      val g = Gram.sums(m, Seq(col("s"), col("c"), lit(1.0)))
+      g.collect()
+      val tasks = new AdaptiveSparkPlanHelper {}.collect(g.queryExecution.executedPlan) {
+        case a: BaseAggregateExec if a.aggregateExpressions.forall(_.mode == Partial) =>
+          a.child.execute().getNumPartitions
+      }
+      assert(tasks === Seq(1))
+      assert(Gram.build(m, Seq(col("s"), col("c"), lit(1.0))).head._2.head.n === 2048)
+    } finally m.unpersist()
   }
 }

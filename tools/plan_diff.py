@@ -14,13 +14,17 @@ whose only difference is the line a local relation is created on.
 
 Prints one line per query: its Exchange and Sort counts on both sides
 and SAME / DIFF (or the side it is missing from). For a DIFF it then
-prints a unified diff of the normalized plans. Exits 1 on any
-difference or missing query, 0 when every plan matches.
+prints a unified diff of the normalized plans. A last line totals the
+Exchange and Sort counts of each side and counts the SAME, DIFF and
+MISSING queries. Exits 1 on any difference or missing query, 0 when
+every plan matches; piped into a reader that closes early (`| head`),
+it stops without a traceback.
 Dev-only tool — the engine itself has no Python dependency.
 """
 import difflib
 import os
 import re
+import signal
 import sys
 
 NORMALIZE = [
@@ -47,6 +51,11 @@ def counts(text):
     return len(EXCHANGE.findall(text)), len(SORT.findall(text))
 
 
+def totals(plans):
+    """Exchange and Sort counts summed over every plan of one side."""
+    return tuple(map(sum, zip((0, 0), *(counts(t) for t in plans.values()))))
+
+
 def load(d):
     return {f[:-4]: open(os.path.join(d, f), encoding="utf-8").read()
             for f in sorted(os.listdir(d)) if f.endswith(".txt")}
@@ -54,27 +63,30 @@ def load(d):
 
 def main(parent_dir, change_dir):
     parent, change = load(parent_dir), load(change_dir)
-    bad = 0
+    tally = {"SAME": 0, "DIFF": 0, "MISSING": 0}
     for q in sorted(set(parent) | set(change)):
         if q not in change or q not in parent:
             print(f"{q:32s} MISSING in {'change' if q not in change else 'parent'}")
-            bad += 1
+            tally["MISSING"] += 1
             continue
         p, c = normalize(parent[q]), normalize(change[q])
         (pe, ps), (ce, cs) = counts(p), counts(c)
-        same = p == c
-        print(f"{q:32s} exchanges {pe:>2} -> {ce:>2}  sorts {ps:>2} -> {cs:>2}  "
-              f"{'SAME' if same else 'DIFF'}")
-        if not same:
-            bad += 1
+        verdict = "SAME" if p == c else "DIFF"
+        tally[verdict] += 1
+        print(f"{q:32s} exchanges {pe:>2} -> {ce:>2}  sorts {ps:>2} -> {cs:>2}  {verdict}")
+        if verdict == "DIFF":
             sys.stdout.writelines(difflib.unified_diff(
                 p.splitlines(keepends=True), c.splitlines(keepends=True),
                 f"parent/{q}.txt", f"change/{q}.txt", n=1))
-    print(f"== {len(set(parent) | set(change)) - bad} same / {bad} different ==")
-    return 1 if bad else 0
+    (pe, ps), (ce, cs) = totals(parent), totals(change)
+    print(f"== total exchanges {pe} -> {ce}  sorts {ps} -> {cs}  "
+          + " / ".join(f"{n} {k}" for k, n in tally.items()) + " ==")
+    return 1 if tally["DIFF"] or tally["MISSING"] else 0
 
 
 if __name__ == "__main__":
+    # a closed pipe ends the tool silently, as it ends any Unix filter
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     if len(sys.argv) != 3:
         sys.exit(__doc__)
     sys.exit(main(sys.argv[1], sys.argv[2]))
